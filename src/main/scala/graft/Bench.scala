@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every registered query at the SF directory
   * given by SPARK_GRAFT_SF_DIR and prints one JSON line. A warm-up action
   * first touches the fixture tables so JIT/classloading cost is not charged
@@ -59,34 +57,16 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.cpus
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
     val loadavgStart = loadavgNow()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus)
     Seq(Tables.lineitem _, Tables.orders _, Tables.events _,
       Tables.documents _, Tables.embeddings _)
       .foreach(load => load(spark, sfDir).count())
     // dev-only: SPARK_GRAFT_BENCH_QUERIES=q142_...,q149_... restricts the
-    // run to named queries (the sf10 top-5 sweep); unset = all (the
-    // driver never sets it). Fail fast on typos like Verify does.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_QUERIES names unknown queries: ${unknown.toSeq.sorted.mkString(",")}")
-    }
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
+    // run to named queries (the sf10 top-5 sweep)
+    val selected = SparkEntry.select("SPARK_GRAFT_BENCH_QUERIES")
     // contention defense (round-13 driver artifact lesson): min-of-2
     // cannot tell a slow plan from a loaded host when BOTH reps are
     // contended, and suite-start contention lands on the alphabetically
@@ -97,7 +77,7 @@ object Bench {
     val firstFamilyReps = 8
     val stealRunStart = stealTicksNow()
     val runStartNanos = System.nanoTime()
-    val results = selected.toSeq.sortBy(_._1).zipWithIndex.map {
+    val results = selected.zipWithIndex.map {
       case ((name, fn), idx) =>
         val qReps = if (idx < firstFamilyReps) reps.max(3) else reps
         // memo-build attribution: SharedAnn records which query paid each
@@ -180,8 +160,15 @@ object Bench {
     // attribution — makes per-query numbers mechanically adjudicable)
     val memoPaid = graft.queries.SharedAnn.memoPaidBy.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"$k\":\"$v\"" }.mkString("{", ",", "}")
+    // scratch placement (full artifact only; the printed line's budget
+    // stays with the per-query timings): Spark's block-manager dirs come
+    // from SPARK_LOCAL_DIRS, else spark.local.dir, else java.io.tmpdir
+    val tmpdir = System.getProperty("java.io.tmpdir")
+    val localDir = sys.env.get("SPARK_LOCAL_DIRS")
+      .orElse(spark.sparkContext.getConf.getOption("spark.local.dir"))
+      .getOrElse(tmpdir)
     val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,"queries_detail":$fullDetail,"memo_paid_by":$memoPaid,"failed":$failed,"sf":"$sfDir",$prov}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,"queries_detail":$fullDetail,"memo_paid_by":$memoPaid,"failed":$failed,"sf":"$sfDir",$prov,"java_io_tmpdir":"$tmpdir","spark_local_dir":"$localDir"}"""
     // anchor to the repo root (env override first, then the build's
     // user.dir if it holds build.sbt, else CWD) so running the bench from
     // another directory doesn't scatter the artifact

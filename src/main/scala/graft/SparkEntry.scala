@@ -59,4 +59,24 @@ object SparkEntry {
   def oracleFree: Map[String, String] =
     catalog.filter(_.oracle.isEmpty)
       .map(q => q.name -> q.note.getOrElse("UNANNOTATED")).toMap
+
+  /** The queries named in the comma-separated env var `envVar`, sorted
+    * by name; every query when it is unset. */
+  def select(envVar: String): Seq[(String, (SparkSession, String) => DataFrame)] =
+    select(envVar, sys.env.get(envVar))
+
+  /** [[select]] over an explicit value; `source` names it in the error.
+    * Blank entries are ignored. An unknown name fails fast: a
+    * silently-empty selection would read as a vacuous pass. */
+  def select(source: String, value: Option[String])
+      : Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val only = value.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    only.foreach { names =>
+      val unknown = names -- all.keySet
+      require(unknown.isEmpty,
+        s"$source names unknown queries: ${unknown.toSeq.sorted.mkString(",")}")
+    }
+    all.toSeq.filter(kv => only.forall(_(kv._1))).sortBy(_._1)
+  }
 }

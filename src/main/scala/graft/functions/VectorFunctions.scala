@@ -33,20 +33,15 @@ object VectorFunctions {
   /** Unit-normalized copy: v/‖v‖ — a native codegen'd Expression
     * (graft exprs NormalizeExpr). Pre-normalizing once per row turns every
     * pairwise cosine into a single dot product — at n² pairs this is the
-    * difference between one array fold and three per pair. The HOF twin
-    * below recomputed the norm (a full self-dot) for EVERY element inside
-    * the transform lambda; the native form computes it once per row and
-    * divides — bit-identical output (same fold, same divisor). */
+    * difference between one array fold and three per pair. The HOF form
+    * `transform(v, x => x / norm(v))` recomputes the norm (a full
+    * self-dot) for EVERY element inside the lambda; the native form
+    * computes it once per row and divides — bit-identical output (same
+    * fold, same divisor). */
   def normalized(v: Column): Column =
     org.apache.spark.sql.GraftExpressionBridge.column(
       org.apache.spark.sql.graftexpr.NormalizeExpr(
         org.apache.spark.sql.GraftExpressionBridge.expression(v)))
-
-  /** The builtin-HOF formulation, kept as the portability reference. */
-  def normalizedHof(v: Column): Column = {
-    val n = norm(v)
-    transform(v, x => x / n)
-  }
 
   /** Symmetric per-vector int8 scalar quantization — the storage path a
     * 100 TB embedding corpus actually ships (4× smaller than float32,

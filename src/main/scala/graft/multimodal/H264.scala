@@ -70,7 +70,6 @@ object H264 {
     }
     def align(): Unit = while (bit != 0) require(u(1) == 0,
       "nonzero pcm alignment bit")
-    def byteAligned: Boolean = bit == 0
     def u8aligned(): Int = { require(bit == 0); val v = b(pos) & 0xff; pos += 1; v }
     def bitsLeft: Long = (b.length - pos).toLong * 8 - bit
   }

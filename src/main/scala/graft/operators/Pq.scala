@@ -353,19 +353,6 @@ object Pq {
   def rotateCol(v: Column, rotation: Array[Array[Double]]): Column =
     array(rotation.map(row => dot(v, lit(row))): _*)
 
-  /** OPQ ANN top-k: rotate corpus and probes by the learned R (one
-    * projection each — rotation preserves distances, so ADC ranking and
-    * the exact re-rank are unchanged in meaning), then the standard
-    * PQ/ADC path under the rotated-space codebooks. */
-  def opqTopK(corpus: DataFrame, id: String, vec: String,
-      probes: DataFrame, probeId: String, probeVec: String, k: Int,
-      nSub: Int, nCodes: Int, iters: Int = 3, opqIters: Int = 6,
-      refine: Int = 0): DataFrame = {
-    val model = trainOpq(corpus, id, vec, nSub, nCodes, iters, opqIters)
-    searchWithOpqModel(corpus, id, vec, probes, probeId, probeVec, k,
-      model, refine)
-  }
-
   /** ADC search under an already-trained OPQ model (serving path; also
     * what the q145 certificate reuses for its recall half). */
   def searchWithOpqModel(corpus: DataFrame, id: String, vec: String,

@@ -6,9 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** SparkSessionExtensions entry point: registers the engine's custom
   * Catalyst work for SQL use, so `spark.sql("SELECT dot_product(a, b)")`
-  * reaches the codegen expression. Wire up with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`.
+  * reaches the codegen expression. Wire up by setting the static conf
+  * `spark.sql.extensions=graft.plans.GraftExtensions` (e.g. as a JVM
+  * `-D` property) before [[graft.Session]] builds the session.
   *
   * Per SURVEY.md §4 no custom Rule/Strategy is needed — Catalyst stock
   * rules + AQE already produce the plans we want (verified by PlanSpec) —

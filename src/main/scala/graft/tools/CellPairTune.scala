@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.Tables
+import graft.{Session, Tables}
 import graft.operators.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Recall/cost tuner for the cell-partitioned near-dup pair path (q88's
@@ -15,10 +14,7 @@ import org.apache.spark.sql.functions._
 object CellPairTune {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus)
     val emb = Tables.embeddings(spark, dir).localCheckpoint()
     val n = emb.count()
     val exact = Dedup.embeddingNearDup(emb, "vec_id", "embedding", 0.45)

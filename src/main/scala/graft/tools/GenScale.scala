@@ -1,7 +1,7 @@
 package graft.tools
 
-import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{Session, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Tile the driver fixture N× into a larger scale factor for growth-slope
@@ -51,13 +51,7 @@ object GenScale {
   def main(args: Array[String]): Unit = {
     val Array(src, out, copiesStr) = args.take(3)
     val copies = copiesStr.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
 
     def maxOf(df: DataFrame, k: String): Long =
       df.agg(max(col(k))).head().getLong(0)

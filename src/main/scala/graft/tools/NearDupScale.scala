@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.Tables
-import graft.operators.{Dedup, Similarity}
-import org.apache.spark.sql.SparkSession
+import graft.{Session, Tables}
+import graft.operators.Dedup
 
 /** Scale demonstration for embedding near-dup at a MODERATE cosine
   * threshold (0.45) — the round-12 second sweep decade (sf1 → sf10)
@@ -19,8 +18,7 @@ import org.apache.spark.sql.SparkSession
   * claim (slope 0.58 over the decade at nCells = n/1000, spill 2);
   * since round 13 the measurement became the shipped config — q88
   * registers Dedup.cellNearDupPairsAuto and q97/q133 certify it
-  * against the anchored exact arm. The `lsh` mode keeps the old
-  * banding runnable for comparison:
+  * against the anchored exact arm:
   *
   *   sbt "runMain graft.tools.NearDupScale target/sf1"
   *   sbt "runMain graft.tools.NearDupScale target/sf10"
@@ -33,30 +31,14 @@ import org.apache.spark.sql.SparkSession
 object NearDupScale {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus)
     val emb = Tables.embeddings(spark, dir).localCheckpoint()
     val n = emb.count()
-    def time(label: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val c = f
-      println(f"RESULT $label n=$n count=$c wall=${(System.nanoTime() - t0) / 1e9}%.1f s")
-    }
-    val mode = if (args.length > 1) args(1) else "cells"
-    if (mode == "all" || mode == "lsh")
-      time("lsh_4x16_registered") {
-        Similarity.lshNearDupPairs(emb, "vec_id", "embedding",
-          threshold = 0.45, dims = 64, nBits = 64, nBands = 16).count()
-      }
-    if (mode == "all" || mode == "cells")
-      time("cells_scaled_nOver1k") {
-        val nCells = math.max(16, (n / 1000).toInt)
-        Dedup.semanticDedup(emb, "vec_id", "embedding", nCells,
-          tau = 0.45).count()
-      }
+    val nCells = math.max(16, (n / 1000).toInt)
+    val t0 = System.nanoTime()
+    val c = Dedup.semanticDedup(emb, "vec_id", "embedding", nCells,
+      tau = 0.45).count()
+    println(f"RESULT cells_scaled_nOver1k n=$n count=$c wall=${(System.nanoTime() - t0) / 1e9}%.1f s")
     spark.stop()
   }
 }

@@ -1,18 +1,14 @@
 package graft.tools
 
-import graft.Tables
+import graft.{Session, Tables}
 import graft.operators.{Pq, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: macro recall@5 of PQ configurations vs brute force. */
 object PqTune {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus)
     val emb = Tables.embeddings(spark, dir).localCheckpoint()
     // tune on the SAME probe population the certificates gate on
     val probes = emb.filter(

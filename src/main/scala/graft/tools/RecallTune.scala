@@ -1,8 +1,8 @@
 package graft.tools
 
-import graft.Tables
+import graft.{Session, Tables}
 import graft.operators.{Dedup, Similarity}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Temporary tuning harness: sweeps approximate-operator configs and
@@ -10,11 +10,7 @@ import org.apache.spark.sql.functions._
 object RecallTune {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus)
     val emb = Tables.embeddings(spark, d).cache()
     emb.count()
     // tune on the SAME probe population the certificates gate on

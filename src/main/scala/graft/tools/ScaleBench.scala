@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Session
 import graft.pipeline.EpochPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -103,45 +104,14 @@ object ScaleBench {
     val heapGib = heapBytes / (1L << 30).toDouble
     val size = if (args.nonEmpty) args(0).toInt else 4096
     val nImages = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      threadsForHeap(heapBytes, Runtime.getRuntime.availableProcessors).toString)
+    val cpus = if (sys.env.contains("SPARK_GRAFT_CPUS")) Session.cpus
+      else threadsForHeap(heapBytes, Runtime.getRuntime.availableProcessors)
     println(f"SCALE-CONFIG heap=$heapGib%.1fg threads=$cpus " +
       f"jvm_init=${initMs / 1000.0}%.1f s (init ≈ AlwaysPreTouch at large -Xms)")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(cpus)
     val px = (0 until nImages)
       .map(i => renderFrame(spark, i.toLong, size, (i % 3 - 1, (i * 2) % 3 - 1)))
       .reduce(_.unionByName(_))
-    def time[T](label: String)(f: => T): T = {
-      val t = System.nanoTime(); val r = f
-      println(f"STAGE $label: ${(System.nanoTime() - t) / 1e9}%.1f s"); r
-    }
-    if (sys.env.contains("SPARK_GRAFT_STAGES")) {
-      import graft.pipeline.Photometry
-      val pxPinned = time("pin")(px.localCheckpoint())
-      val bgRaw = time("bg-stats raw 3-img")(
-        { val s = Photometry.backgroundStats(pxPinned); s.count(); s })
-      val detRaw = time("detect raw 3-img (shift stars)")(
-        Photometry.detectStars(pxPinned, 10.0, 3).count())
-      val combined = time("align+combine total")(
-        Photometry.alignAndCombine(pxPinned, size, size)
-          .select(lit(0L).as("img_id"), col("y"), col("x"), col("v"))
-          .localCheckpoint())
-      val sub = time("bg-subtract")(
-        Photometry.subtractBackground(combined).localCheckpoint())
-      val subStats = time("bg-stats sub")(
-        { val s = Photometry.backgroundStats(sub); s.count(); s })
-      val stars = time("detect sub")(
-        { val s = Photometry.detectStars(sub, 10.0, 4, Double.MaxValue, 0, 0, 0,
-            Some(subStats)).localCheckpoint(); s.count(); s })
-      time("epsf-photometry")(
-        Photometry.epsfPhotometry(spark, sub, 1.8 * graft.pipeline.GaussianFit.SigmaToFwhm,
-          2, 10.0, statsOpt = Some(subStats)).count())
-    }
     val nEpochs = if (args.length > 2) args(2).toInt else 1
     if (nEpochs <= 1) {
       val t0 = System.nanoTime()
