@@ -51,14 +51,17 @@ object Scale {
     else df.repartition(target, col(key))
   }
 
-  /** `localCheckpoint()` unless `df` already IS a materialized leaf (the
-    * handle a prior localCheckpoint returned), whose lineage is already
-    * cut — re-checkpointing it would only copy the same blocks through
-    * one more eager job. */
+  /** `localCheckpoint()` unless `df` already IS a materialized leaf: an
+    * RDD leaf whose RDD is checkpointed or persisted, like the handle a
+    * prior localCheckpoint returned. Re-checkpointing that would only copy
+    * the same blocks through one more eager job. A lazy
+    * `createDataFrame(rdd, schema)` is an RDD leaf too, but it recomputes
+    * on every read, so it is pinned. */
   def pinOnce(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.execution.LogicalRDD
     df.queryExecution.analyzed match {
-      case _: LogicalRDD => df
+      case r: LogicalRDD if r.rdd.isCheckpointed ||
+          r.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE => df
       case _ => df.localCheckpoint()
     }
   }

@@ -109,10 +109,7 @@ object EpochPipeline {
         graft.sources.Pdf.frameImages(pinned, width, height))
     }
 
-    // frames small enough that a whole image fits an aggregation buffer
-    // (≤ 1M px = 8 MB) take the one-shuffle clip; full frames take the
-    // fixpoint loop
-    val bufferable = width.toLong * height <= (1L << 20)
+    val bufferable = Photometry.bufferable(width, height)
 
     // 1. per-image stats (one grouped pass) double as the image census —
     // the stats row count IS the image count, so no separate distinct scan.
@@ -126,10 +123,14 @@ object EpochPipeline {
     val pixStats = spark.createDataFrame(
       java.util.Arrays.asList(pixStatsRows: _*), pixStatsDistributed.schema)
     val nImages = pixStatsRows.length.toLong
+    // the combine feeds the stats, the subtraction and the annulus gather:
+    // pin it so those three reads do not each redo alignment and median
     val combined =
       if (nImages > 1)
-        Photometry.alignAndCombine(pinned, width, height, nSigma)
+        Photometry.alignAndCombine(pinned, width, height, nSigma,
+            stats = Some(pixStats))
           .select(lit(0L).as("img_id"), col("y"), col("x"), col("v"))
+          .localCheckpoint()
       else pinned.select(lit(0L).as("img_id"), col("y"), col("x"), col("v"))
 
     // 2. global background subtraction. One stats pass serves both the

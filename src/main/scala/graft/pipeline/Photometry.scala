@@ -3,7 +3,6 @@ package graft.pipeline
 import graft.functions.SigmaClippedStats.sigmaClippedStats
 import graft.operators.SpatialJoins
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,7 +11,7 @@ import org.apache.spark.sql.types._
   * abstraction #1 in SURVEY.md §1. Long form makes every per-pixel
   * operation a plain projection/aggregate: background stats are a grouped
   * sigma-clipped aggregate, median combine is `groupBy(y,x)`, np.roll is a
-  * key rewrite, detection is a 3×3-neighborhood equi-join. A 4096² frame is
+  * key rewrite, detection is a per-image 3×3 peak kernel. A 4096² frame is
   * 16.7 M rows — at 100 TB the pixel table partitions by `img_id` and each
   * stage shuffles by its natural key, never collecting an image to one
   * node.
@@ -82,6 +81,12 @@ object Photometry {
       .select(col("img_id"), col("bkg_mean"), col("bkg_median"), col("bkg_std"))
   }
 
+  /** Whether a `width`×`height` frame fits an aggregation buffer (≤ 1 M px
+    * = 8 MB), so [[backgroundStats]] can take the one-shuffle clip; full
+    * frames take the fixpoint loop. */
+  def bufferable(width: Int, height: Int): Boolean =
+    width.toLong * height <= (1L << 20)
+
   /** Global background subtraction (psf_phot.py:69: image −= median). */
   def subtractBackground(pixels: DataFrame, bufferable: Boolean = false): DataFrame =
     pixels.join(broadcast(backgroundStats(pixels, bufferable = bufferable)),
@@ -93,15 +98,18 @@ object Photometry {
     * local maxima above `bkg + nSigma·std` (core.py:143's 10σ default),
     * then flux-weighted centroid over a (2R+1)² box.
     *
-    * Scale shape: the threshold predicate keeps only candidate pixels (a
-    * ~1e-5 fraction at 10σ); the 3×3 peak test is a candidates-only
-    * self-join (sub-threshold neighbors cannot outrank a candidate), and
-    * the one remaining pixel-table join gathers peak boxes with every
-    * shape statistic folded into a single aggregation. The pixel table is
-    * scanned exactly twice (threshold pass, box gather) and never
-    * shuffled or sorted. Requires boxRadius ≥ 1 (the 3×3 sharpness subset
-    * comes from the box). Emits one star row per image peak: the
-    * Generator shape (§2.11). */
+    * Plan: the threshold pass scans the pixel table once, joined to the
+    * broadcast per-image stats, and keeps the above-threshold pixels (a
+    * ~1e-5 fraction at 10σ). Those rows shuffle once by `img_id` into
+    * [[peaksOf]], which runs the 3×3 peak test and numbers each image's
+    * peaks in the same pass. The box gather joins the exploded (2R+1)²
+    * peak boxes to the pixel table and folds every shape statistic into
+    * one aggregation. AQE sizes that join at run time: a pixel table under
+    * the broadcast threshold (a 192² frame is) is broadcast whole; at full
+    * frame the pixel side is too large, so the small box side is
+    * broadcast or both sides shuffle by pixel key. Requires boxRadius ≥ 1
+    * (the 3×3 sharpness subset comes from the box). Emits one star row
+    * per image peak: the Generator shape (§2.11). */
   def detectStars(pixels: DataFrame, nSigma: Double, boxRadius: Int): DataFrame =
     detectStars(pixels, nSigma, boxRadius, Double.MaxValue, 0, 0L, 0L, None)
 
@@ -109,8 +117,8 @@ object Photometry {
     * `peakMax` rejects saturated peaks (find_stars `peak=100000`,
     * core.py:130-131), and `excludeBorder > 0` with the image extent drops
     * peaks within that many pixels of the edge (`exclude_border=True`,
-    * core.py:144) — both are predicates on the peak rows, pushed before
-    * the centroid box join. `precomputedStats` passes in a
+    * core.py:144) — both are rules of the peak kernel, applied before the
+    * centroid box join. `precomputedStats` passes in a
     * backgroundStats frame computed once by the caller — the reference
     * builds its finder with a FIXED threshold (core.py:439), so repeated
     * detections over the same image must not re-estimate the
@@ -118,44 +126,19 @@ object Photometry {
   def detectStars(pixels: DataFrame, nSigma: Double, boxRadius: Int,
       peakMax: Double, excludeBorder: Int, width: Long, height: Long,
       precomputedStats: Option[DataFrame] = None): DataFrame = {
+    val spark = pixels.sparkSession
+    import spark.implicits._
     val stats = broadcast(precomputedStats.getOrElse(backgroundStats(pixels)))
     // above-threshold pixels: the only pixels that can be peaks OR beat a
     // peak. Tiny at any real nSigma.
     val aboveThr = pixels.join(stats, Seq("img_id"))
       .filter(col("v") > col("bkg_median") + lit(nSigma) * col("bkg_std"))
       .select(col("img_id"), col("y"), col("x"), col("v"), col("bkg_median"))
-      .localCheckpoint()
-    // peak-ELIGIBLE candidates additionally clear saturation (find_stars
-    // peak=100000, core.py:130-131) and the border margin
-    // (exclude_border=True, core.py:144)
-    val cands = aboveThr
-      .filter(col("v") < lit(peakMax) &&
-        (if (excludeBorder > 0)
-          col("x") >= excludeBorder && col("x") < lit(width - excludeBorder) &&
-          col("y") >= excludeBorder && col("y") < lit(height - excludeBorder)
-         else lit(true)))
-    // 3×3 peak test — winner orders by (value desc, y asc, x asc), tie-
-    // broken for plateaus. A sub-threshold pixel is by construction
-    // smaller than every above-threshold center, so only above-threshold
-    // neighbors can win (including saturated/border pixels, which may
-    // VETO a peak but never be one): the test is a self-join of the tiny
-    // above-threshold set — the big pixel table is not touched.
-    val offs = array((-1 to 1).map(lit): _*)
-    val nbrKeys = cands
-      .withColumn("dy", explode(offs)).withColumn("dx", explode(offs))
-      .select(col("img_id"), (col("y") + col("dy")).as("y"),
-        (col("x") + col("dx")).as("x"), col("y").as("cy"), col("x").as("cx"))
-    val winners = aboveThr.select(col("img_id"), col("y"), col("x"), col("v"))
-      .join(nbrKeys, Seq("img_id", "y", "x"))
-      .groupBy(col("img_id"), col("cy"), col("cx"))
-      .agg(max(struct(col("v").as("bv"), (-col("y")).as("bny"),
-        (-col("x")).as("bnx"))).as("winner"))
-      .select(col("img_id"), col("cy").as("y"), col("cx").as("x"), col("winner"))
-    val peaks = cands.join(winners, Seq("img_id", "y", "x"))
-      .filter(struct(col("v").as("bv"), (-col("y")).as("bny"),
-        (-col("x")).as("bnx")) === col("winner"))
-      .select(col("img_id"), col("y").as("py"), col("x").as("px"),
-        col("v").as("peak"), col("bkg_median"))
+    val peaks = aboveThr.as[(Long, Long, Long, Double, Double)]
+      .groupByKey(_._1)
+      .flatMapGroups((_, rows) =>
+        peaksOf(rows.toArray, peakMax, excludeBorder, width, height))
+      .toDF("img_id", "py", "px", "peak", "bkg_median", "star_id")
     // ONE box gather per peak serves every remaining statistic: flux,
     // flux-weighted centroid and npix over the (2R+1)² box; DAOFIND-style
     // sharpness — (peak − mean of the 8 existing neighbors) / peak — from
@@ -165,7 +148,8 @@ object Photometry {
     val boxOffs = array((-boxRadius to boxRadius).map(lit): _*)
     val box = peaks
       .withColumn("dy", explode(boxOffs)).withColumn("dx", explode(boxOffs))
-      .select(col("img_id"), col("py"), col("px"), col("peak"), col("bkg_median"),
+      .select(col("img_id"), col("star_id"), col("py"), col("px"), col("peak"),
+        col("bkg_median"),
         (col("py") + col("dy")).as("y"), (col("px") + col("dx")).as("x"))
     val inner = abs(col("y") - col("py")) <= 1 && abs(col("x") - col("px")) <= 1
     val sw = sum(col("w")); val swx = sum(col("w") * col("x"))
@@ -174,7 +158,7 @@ object Photometry {
     val syy = sum(col("w") * col("y") * col("y")) / sw - (swy / sw) * (swy / sw)
     box.join(pixels, Seq("img_id", "y", "x"))
       .withColumn("w", greatest(col("v") - col("bkg_median"), lit(0.0)))
-      .groupBy(col("img_id"), col("py"), col("px"))
+      .groupBy(col("img_id"), col("star_id"), col("py"), col("px"))
       .agg(first(col("peak")).as("peak"), sum(col("w")).as("flux"),
         (swx / sw).as("xcentroid"), (swy / sw).as("ycentroid"),
         sum(when(inner, col("v"))).as("s2"),
@@ -187,12 +171,47 @@ object Photometry {
         when(col("c2") > 1 && col("peak") =!= 0.0,
           (col("peak") - (col("s2") - col("peak")) / (col("c2") - 1)) / col("peak"))
           .otherwise(lit(null)))
-      .withColumn("star_id", row_number().over(
-        Window.partitionBy(col("img_id")).orderBy(col("py"), col("px"))))
       .withColumn("mag", lit(-2.5) * log10(col("flux")))
       .select(col("img_id"), col("star_id"), col("xcentroid"), col("ycentroid"),
         col("sharpness"), col("roundness"), col("npix"), col("sky"),
         col("peak"), col("flux"), col("mag"))
+  }
+
+  /** The 3×3 peak test over ONE image's above-threshold pixels
+    * `(img_id, y, x, v, bkg_median)`, returning its peaks as
+    * `(img_id, y, x, v, bkg_median, star_id)` numbered 1..n in (y, x)
+    * order.
+    *
+    * A pixel is a peak when no above-threshold pixel in its 3×3
+    * neighbourhood orders before it by (v desc, y asc, x asc), so a
+    * plateau yields one peak at its smallest (y, x). Values compare as
+    * Spark SQL orders doubles (−0.0 equals 0.0, NaN is largest). A
+    * sub-threshold pixel is smaller than every above-threshold one, so
+    * the above-threshold set alone decides the test. Saturated pixels
+    * (v ≥ `peakMax`, find_stars peak=100000, core.py:130-131) and pixels
+    * within `excludeBorder` of the `width`×`height` edge
+    * (exclude_border=True, core.py:144) can veto a neighbour but are
+    * never peaks themselves. */
+  private def peaksOf(px: Array[(Long, Long, Long, Double, Double)],
+      peakMax: Double, excludeBorder: Int, width: Long,
+      height: Long): Array[(Long, Long, Long, Double, Double, Int)] = {
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    val at = px.iterator.map(p => (p._2, p._3) -> p._4).toMap
+    def eligible(y: Long, x: Long, v: Double): Boolean =
+      compareDoubles(v, peakMax) < 0 && (excludeBorder <= 0 ||
+        x >= excludeBorder && x < width - excludeBorder &&
+        y >= excludeBorder && y < height - excludeBorder)
+    def beats(ny: Long, nx: Long, nv: Double, y: Long, x: Long, v: Double) = {
+      val c = compareDoubles(nv, v)
+      c > 0 || c == 0 && (ny < y || ny == y && nx < x)
+    }
+    def unbeaten(y: Long, x: Long, v: Double): Boolean =
+      (-1 to 1).forall(dy => (-1 to 1).forall(dx =>
+        at.get((y + dy, x + dx)).forall(nv => !beats(y + dy, x + dx, nv, y, x, v))))
+    px.filter { case (_, y, x, v, _) => eligible(y, x, v) && unbeaten(y, x, v) }
+      .sortBy(p => (p._2, p._3))
+      .zipWithIndex
+      .map { case ((img, y, x, v, bkg), i) => (img, y, x, v, bkg, i + 1) }
   }
 
   /** image_combiner (core.py:245-279): detect stars per image, estimate each
@@ -200,10 +219,16 @@ object Photometry {
     * match → median offset, core.py:148-177 + 203-206), roll the pixel keys
     * (core.py:209 — a projection, no data movement beyond the final
     * combine), then per-pixel sigma-clipped median across the stack
-    * (core.py:215-243). `height`/`width` wrap the roll like np.roll. */
+    * (core.py:215-243). `height`/`width` wrap the roll like np.roll.
+    * `stats` passes in the per-image [[backgroundStats]] the caller already
+    * holds, so the detection threshold costs no second clip. */
   def alignAndCombine(pixels: DataFrame, width: Int, height: Int,
-      nSigma: Double = 10.0, matchRadius: Double = 20.0): DataFrame = {
-    val stars = detectStars(pixels, nSigma, 3).cache()
+      nSigma: Double = 10.0, matchRadius: Double = 20.0,
+      stats: Option[DataFrame] = None): DataFrame = {
+    val bkg = stats.getOrElse(
+      backgroundStats(pixels, bufferable = bufferable(width, height)))
+    val stars = detectStars(pixels, nSigma, 3, Double.MaxValue, 0, 0L, 0L,
+      Some(bkg)).localCheckpoint()
     // no stars anywhere (cloudy epoch): no shift estimation possible —
     // fall through to an unshifted clipped-median combine, don't crash
     val refImgOpt = Option(stars.agg(min(col("img_id"))).head().get(0))
@@ -588,7 +613,9 @@ object Photometry {
       .as[(Long, Int, Double, Double, Double, Double)]
       .groupByKey(_._1)
       .flatMapGroups { (img, it) =>
-        val ss = it.toArray
+        // star_id order, not shuffle arrival order: a group's id is its
+        // smallest star_id, and the rows it emits keep that order
+        val ss = it.toArray.sortBy(_._2)
         val parent = Array.tabulate(ss.length)(identity)
         def find(i: Int): Int = {
           var r = i; while (parent(r) != r) r = parent(r)

@@ -10,4 +10,33 @@ object TestSpark {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** Count jobs started by `body`. The listener bus is async, so a marker
+    * job runs after the body; the bus is FIFO, so once the marker's start
+    * event is observed every event from the body has been delivered. */
+  protected def jobsDuring[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val marker = "jobs-during-marker"
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.job.description") == marker))
+          markerSeen.countDown()
+        else jobs.incrementAndGet()
+        ()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = body
+      spark.sparkContext.setJobDescription(marker)
+      try spark.sparkContext.parallelize(1 to 1, 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "marker job event never arrived")
+      (r, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }

@@ -36,35 +36,6 @@ class SaltedAggSpec extends SparkSpec {
 class FanOutSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Count jobs started by `body`. The listener bus is async, so a marker
-    * job runs after the body; the bus is FIFO, so once the marker's start
-    * event is observed every event from the body has been delivered. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val marker = "fanout-lazy-marker"
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (Option(e.properties)
-            .exists(_.getProperty("spark.job.description") == marker))
-          markerSeen.countDown()
-        else jobs.incrementAndGet()
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val r = body
-      spark.sparkContext.setJobDescription(marker)
-      try spark.sparkContext.parallelize(1 to 1, 1).count()
-      finally spark.sparkContext.setJobDescription(null)
-      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS),
-        "marker job event never arrived")
-      (r, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   test("fanOut is plan-time lazy: zero jobs to construct, even " +
       "over a post-aggregation input") {
     val base = (1L to 5000L).map(i => (i, s"t$i")).toDF("doc_id", "text")
@@ -94,6 +65,25 @@ class FanOutSpec extends SparkSpec {
     assert(untouched.queryExecution.analyzed eq
       wide.queryExecution.analyzed,
       "already-wide input must be a plan-level no-op")
+  }
+}
+
+class PinOnceSpec extends SparkSpec {
+  import org.apache.spark.sql.Row
+  import org.apache.spark.sql.types._
+
+  test("pinOnce pins a lazy RDD-backed frame and passes a checkpoint through") {
+    // a nondeterministic source: every evaluation draws new values
+    val rdd = spark.sparkContext.parallelize(1L to 200L, 2)
+      .map(i => Row(i, scala.util.Random.nextDouble()))
+    val lazyDf = spark.createDataFrame(rdd,
+      StructType(Seq(StructField("id", LongType), StructField("v", DoubleType))))
+    val pinned = Scale.pinOnce(lazyDf)
+    assert(pinned.collect().toSeq === pinned.collect().toSeq,
+      "two reads of a pinned frame must see the same rows")
+    val (again, jobs) = jobsDuring(Scale.pinOnce(pinned))
+    assert((again eq pinned) && jobs === 0,
+      "a checkpoint handle is already materialized")
   }
 }
 

@@ -43,6 +43,29 @@ class EpochPipelineSpec extends SparkSpec {
     assert(rows.forall(r => math.abs(r._4 - -2.5 * math.log10(r._3)) < 1e-9))
   }
 
+  test("two epoch runs leave the CacheManager as they found it") {
+    import org.apache.spark.sql.CacheEntries
+    val before = CacheEntries.count(spark)
+    val px = field(0, (0, 0)).union(field(1, (1, -1))).union(field(2, (-1, 1)))
+    (1 to 2).foreach { _ =>
+      EpochPipeline.run(spark, px, 64, 64, minStars = 2).catalog.collect()
+    }
+    assert(CacheEntries.count(spark) === before)
+  }
+
+  test("job fence: one 3-frame epoch and its catalog collect") {
+    val px = field(0, (0, 0)).union(field(1, (1, -1))).union(field(2, (-1, 1)))
+    val (_, jobs) = jobsDuring {
+      EpochPipeline.run(spark, px, 64, 64, minStars = 2).catalog.collect()
+    }
+    // 79–81 jobs measured over 36 runs (AQE's broadcast timing moves the
+    // count by a job or two); 130 before the alignment reused the stats,
+    // the combine was pinned and the peak test became one pass. The
+    // fixpoint clip back in the alignment measured 107, an unpinned
+    // combine 97, so the bound keeps headroom for the jitter only.
+    assert(jobs <= 85, s"$jobs jobs")
+  }
+
   test("multi-epoch loop: concurrent epochs, statuses per branch, tagged union") {
     val rnd = new scala.util.Random(9)
     val flat = (for (y <- 0 until 64; x <- 0 until 64)

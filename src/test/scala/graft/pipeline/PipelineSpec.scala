@@ -104,6 +104,43 @@ class PhotometrySpec extends SparkSpec {
     assert(interior.forall(_ > 3.0))
   }
 
+  test("peak test: plateaus, saturated and border vetoes, per-image numbering") {
+    // hand-placed pixels over a flat floor, with fixed stats: image 1 has
+    // threshold 0 + 10·1 = 10, image 2 has −20 + 10·1 = −10
+    def frame(img: Long, floor: Double, px: Map[(Int, Int), Double]) =
+      for (y <- 0 until 16; x <- 0 until 16)
+        yield (img, y.toLong, x.toLong, px.getOrElse((y, x), floor))
+    val img1 = frame(1L, 0.0, Map(
+      (3, 4) -> 100.0, (3, 5) -> 100.0, (3, 6) -> 50.0, // plateau
+      (8, 8) -> 5000.0, (8, 9) -> 500.0, // saturated veto
+      (12, 1) -> 300.0, (12, 2) -> 200.0, // border veto
+      (1, 10) -> 80.0, // inside the border margin
+      (12, 12) -> 400.0))
+    val img2 = frame(2L, -100.0, Map(
+      (2, 9) -> -0.0, (2, 10) -> 0.0, (2, 11) -> -5.0, // −0.0 == 0.0 plateau
+      (6, 13) -> 300.0, (10, 3) -> 300.0))
+    val px = (img1 ++ img2).toDF("img_id", "y", "x", "v")
+    val stats = Seq((1L, 0.0, 0.0, 1.0), (2L, -20.0, -20.0, 1.0))
+      .toDF("img_id", "bkg_mean", "bkg_median", "bkg_std")
+    val stars = Photometry.detectStars(px, 10.0, 1, peakMax = 1000.0,
+        excludeBorder = 2, width = 16, height = 16, precomputedStats = Some(stats))
+      .select("img_id", "star_id", "xcentroid", "ycentroid")
+      .as[(Long, Int, Double, Double)].collect().sortBy(r => (r._1, r._2))
+    // a plateau peaks at its smallest (y, x): the 3×3 box around (3,4)
+    // holds the two 100s only (centroid x 4.5); around (3,5) it would
+    // also hold the 50 (x 4.8). Likewise (2,9) gives x 9.5, not 9.9.
+    // The saturated pixel and the border pixels veto their neighbours
+    // and are never emitted themselves.
+    val want = Seq((1L, 1, 4.5, 3.0), (1L, 2, 12.0, 12.0),
+      (2L, 1, 9.5, 2.0), (2L, 2, 13.0, 6.0), (2L, 3, 3.0, 10.0))
+    assert(stars.length === want.length, stars.mkString(", "))
+    stars.zip(want).foreach { case (got, w) =>
+      assert(got._1 === w._1 && got._2 === w._2 &&
+        math.abs(got._3 - w._3) < 1e-9 && math.abs(got._4 - w._4) < 1e-9,
+        s"$got vs $w")
+    }
+  }
+
   test("detection emits DAOFIND-style shape stats (find_stars catalog columns)") {
     val px = Photometry.subtractBackground(starField(1L, 64, 100.0, planted))
     val rows = Photometry.detectStars(px, 10.0, 4)
