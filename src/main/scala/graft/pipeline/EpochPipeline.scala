@@ -190,12 +190,15 @@ object EpochPipeline {
     // 5+6. EPSF build from the masked catalog (build_psf(stars_tbl),
     // psf_phot.py:76) + iterative PSF photometry. star_id restarts per
     // photometry iteration, so give every measured star a unique key
-    // before anything joins on it.
+    // before anything joins on it. The annulus and the catalog both read
+    // the measured stars, and every action on the catalog would rerun the
+    // whole-image kernel: pin them once.
     val results = Photometry.epsfPhotometry(spark, sub, fwhm, 2, nSigma,
         statsOpt = Some(subStats), starsOpt = Some(maskedPinned))
       .withColumn("uid", row_number().over(
         Window.partitionBy(col("img_id"))
           .orderBy(col("iter_detected"), col("star_id"))))
+      .localCheckpoint()
 
     // 7. annulus background at the MEASURED positions (not the earlier
     // detection pass — its star_ids are a different numbering)

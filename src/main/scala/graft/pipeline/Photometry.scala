@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.functions.SigmaClippedStats.sigmaClippedStats
 import graft.operators.SpatialJoins
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -13,8 +13,8 @@ import org.apache.spark.sql.types._
   * sigma-clipped aggregate, median combine is `groupBy(y,x)`, np.roll is a
   * key rewrite, detection is a per-image 3×3 peak kernel. A 4096² frame is
   * 16.7 M rows — at 100 TB the pixel table partitions by `img_id` and each
-  * stage shuffles by its natural key, never collecting an image to one
-  * node.
+  * stage shuffles by its natural key. Only the iterative photometry holds
+  * a whole image, one per task, as a dense frame (≈ 405 MB at 4096²).
   */
 object Photometry {
 
@@ -319,34 +319,17 @@ object Photometry {
       .agg(avg(col("nv")).as("epsf"), count(lit(1)).as("n_samples"))
   }
 
-  /** 3×3 quadratic-kernel smoothing of the oversampled EPSF grid
-    * (EPSFBuilder's smoothing step, core.py:411) — a contribution join on
-    * grid keys, same pattern as detection's neighborhood max. */
-  def smoothEpsf(epsf: DataFrame): DataFrame = {
-    val kernel = Seq((-1, 0.0625), (0, 0.125), (1, 0.0625)) // separable quad-ish
-    val taps = kernel.flatMap { case (dy, wy) =>
-      kernel.map { case (dx, wx) => (dy, dx, wy * wx / 0.0625) }
-    }
-    val tapDf = taps.map { case (dy, dx, wt) =>
-      struct(lit(dy).as("dy"), lit(dx).as("dx"), lit(wt).as("wt"))
-    }
-    epsf
-      .withColumn("tap", explode(array(tapDf: _*)))
-      .select((col("w") + col("tap.dy")).as("w"), (col("u") + col("tap.dx")).as("u"),
-        (col("epsf") * col("tap.wt")).as("contrib"), col("tap.wt").as("wt"))
-      .groupBy(col("w"), col("u"))
-      .agg((sum(col("contrib")) / sum(col("wt"))).as("epsf"))
-  }
-
   /** Iterative EPSF build (core.py:384-414: oversampling=2, maxiters≤10):
     * stack → smooth → recenter the star positions by the model's centroid
     * offset → re-map, until the centroid converges. Star cutouts are
-    * gathered from the pixel table ONCE with a margin (the reference's
-    * extract_stars also runs once; EPSFBuilder iterates on the cutouts) —
-    * every iteration then works on the small cached cutout table, so a
-    * 10-round build costs one full-frame scan, not ten. The grid is a tiny
-    * model object (abstraction #5) so the per-iteration centroid readback
-    * is a driver-side scalar, not a data collect. */
+    * gathered from the pixel table ONCE, with a margin for the recentering
+    * drift, by a box join (the reference's extract_stars also runs once;
+    * EPSFBuilder iterates on the cutouts). The gather is read once: its
+    * rows shuffle to ONE task (`groupByKey` on a constant) that runs the
+    * whole recentering loop in memory ([[recenterEpsf]]), and the final
+    * grid — ≤ (2·oversample·R+3)² cells, a model object (abstraction #5) —
+    * is collected and returned as a local relation. That task holds the
+    * cutout table, stars × (2(R+2)+1)² rows of 48 B. */
   def buildEpsfIterative(pixels: DataFrame, stars: DataFrame, cutoutRadius: Int,
       oversample: Int, maxIters: Int = 10, tol: Double = 1e-2): DataFrame = {
     val spark = pixels.sparkSession
@@ -354,43 +337,55 @@ object Photometry {
     val margin = 2 // covers recenter drift (tol-convergent shifts ≪ 1 px)
     val boxOffs = array((-(cutoutRadius + margin) to (cutoutRadius + margin))
       .map(lit): _*)
-    val cut = stars
-      .select(col("img_id"), col("star_id"), col("xcentroid"), col("ycentroid"),
-        col("flux"))
+    val grid = stars
+      .select(col("img_id"), col("xcentroid"), col("ycentroid"), col("flux"))
       .withColumn("dy", explode(boxOffs)).withColumn("dx", explode(boxOffs))
-      .select(col("img_id"), col("star_id"), col("xcentroid"), col("ycentroid"),
-        col("flux"),
+      .select(col("img_id"), col("xcentroid"), col("ycentroid"), col("flux"),
         (round(col("ycentroid")).cast(LongType) + col("dy")).as("y"),
         (round(col("xcentroid")).cast(LongType) + col("dx")).as("x"))
       .join(pixels, Seq("img_id", "y", "x"))
-      .localCheckpoint()
-    // Per iteration: ONE distributed stacking aggregate; the stacked grid
-    // (≤ (2·oversample·(R+margin)+1)² cells — a model object, abstraction
-    // #5) is collected and the smoothing + recentering run driver-side,
-    // instead of paying a checkpoint + two more shuffles per round.
+      .select(col("y"), col("x"), col("xcentroid"), col("ycentroid"),
+        col("flux"), col("v"))
+      .as[(Long, Long, Double, Double, Double, Double)]
+      .groupByKey(_ => 0)
+      .flatMapGroups((_, cut) => recenterEpsf(cut, cutoutRadius, oversample,
+        maxIters, tol).iterator.map { case ((w, u), e) => (w, u, e) })
+      .collect()
+    grid.toSeq.toDF("w", "u", "epsf")
+  }
+
+  /** The recentering loop of [[buildEpsfIterative]] over the cutout rows
+    * `(y, x, xcentroid, ycentroid, flux, v)`, with Spark SQL's arithmetic:
+    * per round, keep each star's pixels within `cutoutRadius` of its
+    * shifted, rounded centroid, average `v / flux` per oversampled cell
+    * (w, u), smooth ([[smoothCells]]), and shift every centroid by the
+    * model's centroid offset until it is under `tol` px or `maxIters`
+    * rounds ran. An empty stack or an all-zero model stops the loop. */
+  private def recenterEpsf(cut: Iterator[(Long, Long, Double, Double, Double, Double)],
+      cutoutRadius: Int, oversample: Int, maxIters: Int,
+      tol: Double): Map[(Long, Long), Double] = {
+    val rows = cut.toArray
     var sx = 0.0
     var sy = 0.0
     var grid: Map[(Long, Long), Double] = Map.empty
     var it = 0
     var converged = false
     while (it < maxIters && !converged) {
-      val xc = col("xcentroid") + lit(sx)
-      val yc = col("ycentroid") + lit(sy)
-      val stacked = cut
-        .filter(abs(col("y") - round(yc).cast(LongType)) <= cutoutRadius &&
-          abs(col("x") - round(xc).cast(LongType)) <= cutoutRadius)
-        .withColumn("u", round((col("x") - xc) * oversample).cast(LongType))
-        .withColumn("w", round((col("y") - yc) * oversample).cast(LongType))
-        .withColumn("nv", col("v") / col("flux"))
-        .groupBy(col("w"), col("u"))
-        .agg(avg(col("nv")).as("epsf"))
-        .select(col("w"), col("u"), col("epsf"))
-        .as[(Long, Long, Double)].collect()
-      grid = smoothCells(stacked.map(t => (t._1, t._2) -> t._3).toMap)
+      val acc = scala.collection.mutable.HashMap.empty[(Long, Long), (Double, Long)]
+      rows.foreach { case (y, x, xcen, ycen, flux, v) =>
+        val xc = xcen + sx
+        val yc = ycen + sy
+        if (math.abs(y - roundHalfUp(yc)) <= cutoutRadius &&
+            math.abs(x - roundHalfUp(xc)) <= cutoutRadius) {
+          val key = (roundHalfUp((y - yc) * oversample),
+            roundHalfUp((x - xc) * oversample))
+          val (s, n) = acc.getOrElse(key, (0.0, 0L))
+          acc(key) = (s + v / flux, n + 1)
+        }
+      }
+      grid = smoothCells(acc.iterator.map { case (k, (s, n)) => k -> s / n }.toMap)
       val se = grid.values.sum
-      // empty stack (no stars / no cutout pixels) or all-zero model:
-      // nothing to recenter — stop with whatever grid we have
-      if (grid.isEmpty || se == 0.0) return gridToDf(spark, grid)
+      if (grid.isEmpty || se == 0.0) return grid
       val cu = grid.iterator.map { case ((_, u), v) => u * v }.sum / se
       val cw = grid.iterator.map { case ((w, _), v) => w * v }.sum / se
       if (math.abs(cu) < tol * oversample && math.abs(cw) < tol * oversample) {
@@ -401,11 +396,13 @@ object Photometry {
       }
       it += 1
     }
-    gridToDf(spark, grid)
+    grid
   }
 
-  /** Driver-side analog of [[smoothEpsf]]: identical tap weights and the
-    * same sum(contrib)/sum(weight) normalization over the cells present. */
+  /** 3×3 quadratic-kernel smoothing of the oversampled EPSF grid
+    * (EPSFBuilder's smoothing step, core.py:411): separable taps
+    * (1, 2, 1)/4 per axis, normalized by sum(contrib)/sum(weight) over the
+    * cells present. */
   private def smoothCells(cells: Map[(Long, Long), Double]): Map[(Long, Long), Double] = {
     val kernel = Seq((-1L, 0.0625), (0L, 0.125), (1L, 0.0625))
     val acc = scala.collection.mutable.HashMap
@@ -419,12 +416,11 @@ object Photometry {
     acc.iterator.map { case (k, (c, s)) => k -> c / s }.toMap
   }
 
-  private def gridToDf(spark: SparkSession,
-      grid: Map[(Long, Long), Double]): DataFrame = {
-    import spark.implicits._
-    grid.iterator.map { case ((w, u), v) => (w, u, v) }.toSeq
-      .toDF("w", "u", "epsf")
-  }
+  /** Spark SQL's `round(d).cast("long")`: HALF_UP on the decimal value of
+    * `d` (so −0.5 → −1 and 0.49999999999999994 → 0), not `Math.round`. */
+  private[pipeline] def roundHalfUp(d: Double): Long =
+    java.math.BigDecimal.valueOf(d)
+      .setScale(0, java.math.RoundingMode.HALF_UP).longValue
 
   /** PSF basis used by the group fits and model subtraction: evaluated in
     * executor code, broadcast by closure (model object, abstraction #5). */
@@ -515,21 +511,12 @@ object Photometry {
     GridPsf(norm, radius, oversample)
   }
 
-  private val starSchema = StructType(Seq(
-    StructField("img_id", LongType), StructField("star_id", IntegerType),
-    StructField("group_id", IntegerType), StructField("x_fit", DoubleType),
-    StructField("y_fit", DoubleType), StructField("flux_fit", DoubleType),
-    StructField("iter_detected", IntegerType)))
-
-  /** Iteratively-subtracted PSF photometry (do_photometry, core.py:416-452):
-    * `nIters` rounds of detect → group (DAOGroup connected components
-    * within 2·fwhm, core.py:440) → per-group linear LSQ flux fit of a
-    * Gaussian PSF with fixed centroids → model subtraction. The fixpoint
-    * loop runs on the driver with localCheckpoint'ed residuals (SURVEY.md
-    * §7 hard-part 1); the group fits run distributed via flatMapGroups —
-    * per-image star counts are bounded, so groups stay small at any data
-    * scale. Positions-fixed linear fluxes replace the reference's full
-    * nonlinear LevMar fit; GaussianFit covers the nonlinear path. */
+  /** Iteratively-subtracted PSF photometry (do_photometry, core.py:416-452)
+    * with a Gaussian PSF of the given FWHM: `nIters` rounds of detect →
+    * group (DAOGroup connected components within max(⌈2·fwhm⌉, 2),
+    * core.py:440) → per-group flux and position fit ([[fitGroup]]) →
+    * model subtraction, each image in one task
+    * ([[iterativePhotometryWithPsf]]). */
   def iterativePhotometry(spark: SparkSession, pixels: DataFrame, fwhm: Double,
       nIters: Int, nSigma: Double, stats: Option[DataFrame] = None): DataFrame =
     iterativePhotometryWithPsf(spark, pixels,
@@ -561,53 +548,235 @@ object Photometry {
       Some(stats))
   }
 
-  /** The detect → group → fit → subtract loop over an arbitrary PSF model.
-    * The detection threshold is estimated ONCE from the input image and
-    * held fixed across iterations — the reference constructs its finder
-    * with a fixed threshold before the loop (core.py:439). */
+  /** The detect → group → fit → subtract loop over an arbitrary PSF model,
+    * run as one in-memory kernel per image ([[photometryKernel]]): the
+    * pixels shuffle once by `img_id` and each task iterates its image to
+    * completion, so a pass costs the same few jobs at any `nIters`.
+    *
+    * The detection threshold `bkg_median + nSigma·bkg_std` comes from the
+    * per-image stats (`statsOpt`, else [[backgroundStats]] of `pixels`),
+    * estimated ONCE and held fixed across rounds — the reference builds
+    * its finder with a fixed threshold before the loop (core.py:439). The
+    * stats are one row per image, collected to the driver and shipped in
+    * the task closure; an image without a stats row emits nothing.
+    *
+    * Memory: a task streams its image into primitive buffers (16 B per
+    * pixel), then fills a dense frame over the image's bounding box (8 B
+    * per cell plus a presence bit) and drops the buffers — at most
+    * 24.2 B per bounding-box cell of unique pixels at peak. The box is
+    * capped at [[MaxFrameCells]] (2²⁵ cells, ≈ 810 MB); a 4096² frame
+    * (2²⁴ cells, ≈ 405 MB) fits, and a larger box fails the task with a
+    * message naming the image and its extent. */
   def iterativePhotometryWithPsf(spark: SparkSession, pixels: DataFrame,
       psf: PsfModel, boxR: Int, nIters: Int, nSigma: Double,
       statsOpt: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
-    // round 0's residual IS the input image: callers hand in an
-    // already-checkpointed frame (EpochPipeline pins it; the q81/q125
-    // paths pass the memoized bgSub) — skip the redundant re-pin job
-    var residual = graft.operators.Scale.pinOnce(pixels)
-    val fixedStats = statsOpt.getOrElse(backgroundStats(residual))
-    var results = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], starSchema)
+    val stats: Map[Long, (Double, Double)] =
+      statsOpt.getOrElse(backgroundStats(pixels))
+        .select(col("img_id"), col("bkg_median"), col("bkg_std"))
+        .collect()
+        .collect { case r if !r.anyNull => r.getLong(0) -> (r.getDouble(1), r.getDouble(2)) }
+        .toMap
+    pixels.select(col("img_id"), col("y"), col("x"), col("v"))
+      .as[(Long, Long, Long, Double)]
+      .groupByKey(_._1)
+      .flatMapGroups((img, rows) => stats.get(img) match {
+        case Some((median, std)) =>
+          photometryKernel(Frame.load(img, rows), median, median + nSigma * std,
+            psf, boxR, nIters)
+        case None => Iterator.empty
+      })
+      .toDF("img_id", "star_id", "group_id", "x_fit", "y_fit", "flux_fit",
+        "iter_detected")
+  }
 
-    var iter = 1
-    var continue = true
-    while (iter <= nIters && continue) {
-      // checkpoint the round's catalog so the emptiness probe and the
-      // group fit don't each recompute the detection joins
-      val stars = detectStars(residual, nSigma, boxR, Double.MaxValue,
-        0, 0L, 0L, Some(fixedStats)).localCheckpoint()
-      if (stars.isEmpty) { continue = false }
+  /** The largest bounding box, in cells, that one photometry task holds
+    * densely (2²⁵: 8192 × 4096, or 2× a 4096² frame). */
+  val MaxFrameCells: Long = 1L << 25
+
+  /** One image held densely over its bounding box: `v` row-major from
+    * (`y0`, `x0`), with `present` marking the cells that have a pixel. */
+  private[pipeline] final class Frame(val img: Long, val y0: Long, val x0: Long,
+      val height: Int, val width: Int, val v: Array[Double],
+      val present: java.util.BitSet) {
+    /** Cell index of (y, x), or −1 when it is off the box or has no pixel. */
+    def at(y: Long, x: Long): Int = {
+      val dy = y - y0; val dx = x - x0
+      if (dy < 0 || dx < 0 || dy >= height || dx >= width) -1
       else {
-        val grouped = groupStars(spark, stars, boxR.toDouble)
-        val fitted = fitGroups(spark, grouped, residual, psf, boxR)
-          .withColumn("iter_detected", lit(iter))
-          .localCheckpoint()
-        results = results.unionByName(fitted.select(starSchema.map(f => col(f.name)): _*))
-        // the residual only feeds the NEXT round's detection — skip the
-        // subtraction after the final round
-        if (iter < nIters)
-          residual = subtractModel(residual, fitted, psf, boxR).localCheckpoint()
+        val i = dy.toInt * width + dx.toInt
+        if (present.get(i)) i else -1
+      }
+    }
+    def y(i: Int): Long = y0 + i / width
+    def x(i: Int): Long = x0 + i % width
+  }
+
+  private[pipeline] object Frame {
+    private val Chunk = 1 << 16
+
+    /** Stream `rows` (one image's `(img_id, y, x, v)`) into 64 Ki-entry
+      * chunks of (Int y, Int x) offsets from the first pixel and double
+      * values, then fill the dense frame. Fails, naming the image and its
+      * extent, when the bounding box exceeds [[MaxFrameCells]]. */
+    def load(img: Long, rows: Iterator[(Long, Long, Long, Double)]): Frame = {
+      val ys = scala.collection.mutable.ArrayBuffer.empty[Array[Int]]
+      val xs = scala.collection.mutable.ArrayBuffer.empty[Array[Int]]
+      val vs = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
+      var n = 0L
+      var (fy, fx) = (0L, 0L)
+      var (minY, maxY, minX, maxX) = (0L, -1L, 0L, -1L)
+      def guard(): Unit = require({
+          val (h, w) = (maxY - minY + 1, maxX - minX + 1)
+          h <= MaxFrameCells && w <= MaxFrameCells && h * w <= MaxFrameCells
+        },
+        s"photometry: image $img spans y $minY..$maxY, x $minX..$maxX " +
+          s"(${maxY - minY + 1} × ${maxX - minX + 1} cells), over the " +
+          s"$MaxFrameCells-cell limit of one task's frame")
+      rows.foreach { case (_, y, x, v) =>
+        if (n == 0) { fy = y; fx = x; minY = y; maxY = y; minX = x; maxX = x }
+        else if (y < minY || y > maxY || x < minX || x > maxX) {
+          minY = math.min(minY, y); maxY = math.max(maxY, y)
+          minX = math.min(minX, x); maxX = math.max(maxX, x)
+          guard() // also keeps the offsets below inside Int range
+        }
+        val k = (n % Chunk).toInt
+        if (k == 0) {
+          ys += new Array[Int](Chunk); xs += new Array[Int](Chunk)
+          vs += new Array[Double](Chunk)
+        }
+        val c = (n / Chunk).toInt
+        ys(c)(k) = (y - fy).toInt; xs(c)(k) = (x - fx).toInt; vs(c)(k) = v
+        n += 1
+      }
+      val (h, w) = ((maxY - minY + 1).toInt, (maxX - minX + 1).toInt)
+      val frame = new Array[Double](h * w)
+      val present = new java.util.BitSet(h * w)
+      val (oy, ox) = ((fy - minY).toInt, (fx - minX).toInt)
+      var i = 0L
+      while (i < n) {
+        val (c, k) = ((i / Chunk).toInt, (i % Chunk).toInt)
+        val cell = (ys(c)(k) + oy) * w + xs(c)(k) + ox
+        frame(cell) = vs(c)(k); present.set(cell)
+        i += 1
+      }
+      new Frame(img, minY, minX, h, w, frame, present)
+    }
+  }
+
+  /** Iteratively-subtracted PSF photometry of ONE image (do_photometry,
+    * core.py:416-452), in memory, with Spark SQL's rounding; per round,
+    *  - detect: pixels with v > `threshold` → [[peaksOf]] → flux-weighted
+    *    centroid over the (2·boxR+1)² box of existing pixels, weights
+    *    max(v − `median`, 0);
+    *  - group: [[linkGroups]] within boxR (DAOGroup, core.py:440);
+    *  - fit: [[fitGroup]] over the union of the members' boxes around
+    *    their rounded centroids, each pixel once;
+    *  - subtract: sum every star's (flux/volume)·psf over its box around
+    *    the rounded fit position, then subtract once per pixel (skipped
+    *    after the last round).
+    * Stops early once a round detects nothing. Emits
+    * `(img_id, star_id, group_id, x_fit, y_fit, flux_fit, iter_detected)`;
+    * `frame` is the residual and is overwritten. */
+  private def photometryKernel(frame: Frame, median: Double, threshold: Double,
+      psf: PsfModel, boxR: Int, nIters: Int): Iterator[(Long, Int, Int, Double, Double, Double, Int)] = {
+    val img = frame.img
+    val v = frame.v
+    val vol = psf.volume
+    val out = scala.collection.mutable.ArrayBuffer
+      .empty[(Long, Int, Int, Double, Double, Double, Int)]
+    /** Existing cells of the (2·boxR+1)² box around (cy, cx), row-major. */
+    def box(cy: Long, cx: Long)(f: Int => Unit): Unit =
+      for (y <- cy - boxR to cy + boxR; x <- cx - boxR to cx + boxR) {
+        val i = frame.at(y, x)
+        if (i >= 0) f(i)
+      }
+    var iter = 1
+    var detected = true
+    while (iter <= nIters && detected) {
+      val above = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Long, Long, Double, Double)]
+      var i = frame.present.nextSetBit(0)
+      while (i >= 0) {
+        if (v(i) > threshold) above += ((img, frame.y(i), frame.x(i), v(i), median))
+        i = frame.present.nextSetBit(i + 1)
+      }
+      val peaks = peaksOf(above.toArray, Double.MaxValue, 0, 0L, 0L)
+      detected = peaks.nonEmpty
+      if (detected) {
+        val k = peaks.length
+        val (cx, cy) = (new Array[Double](k), new Array[Double](k))
+        for (s <- 0 until k) {
+          var (sw, swx, swy) = (0.0, 0.0, 0.0)
+          box(peaks(s)._2, peaks(s)._3) { i =>
+            val w = math.max(v(i) - median, 0.0)
+            sw += w; swx += w * frame.x(i); swy += w * frame.y(i)
+          }
+          cx(s) = swx / sw; cy(s) = swy / sw
+        }
+        // peaks are numbered 1..k in array order, so star_id = index + 1
+        val root = linkGroups(cx, cy, boxR.toDouble * boxR.toDouble)
+        val fits = new Array[(Double, Double, Double)](k)
+        for ((r, members) <- (0 until k).groupBy(root).toSeq.sortBy(_._1)) {
+          val seen = scala.collection.mutable.HashSet.empty[Int]
+          val pix = scala.collection.mutable.ArrayBuffer.empty[Int]
+          members.foreach(s => box(roundHalfUp(cy(s)), roundHalfUp(cx(s))) { i =>
+            if (seen.add(i)) pix += i
+          })
+          val (fx, fy, ff) = fitGroup(pix.map(frame.x).toArray,
+            pix.map(frame.y).toArray, pix.map(v).toArray,
+            members.map(cx).toArray, members.map(cy).toArray, psf, boxR)
+          members.indices.foreach { m =>
+            fits(members(m)) = (fx(m), fy(m), ff(m))
+            out += ((img, members(m) + 1, r + 1, fx(m), fy(m), ff(m), iter))
+          }
+        }
+        if (iter < nIters) {
+          val model = scala.collection.mutable.HashMap.empty[Int, Double]
+          fits.foreach { case (xf, yf, f) =>
+            box(roundHalfUp(yf), roundHalfUp(xf)) { i =>
+              model(i) = model.getOrElse(i, 0.0) +
+                f / vol * psf.eval(frame.x(i) - xf, frame.y(i) - yf)
+            }
+          }
+          model.foreach { case (i, m) => v(i) -= m }
+        }
       }
       iter += 1
     }
-    results
+    out.iterator
+  }
+
+  /** DAOGroup (core.py:440) union-find over stars given in `star_id` order:
+    * stars i < j link when their squared distance is ≤ `r2`. Returns each
+    * star's group root, the index of its group's first (smallest-id)
+    * member. */
+  private[pipeline] def linkGroups(xs: Array[Double], ys: Array[Double],
+      r2: Double): Array[Int] = {
+    val parent = Array.tabulate(xs.length)(identity)
+    def find(i: Int): Int = {
+      var r = i; while (parent(r) != r) r = parent(r)
+      var c = i
+      while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
+      r
+    }
+    for (i <- xs.indices; j <- (i + 1) until xs.length) {
+      val dx = xs(i) - xs(j); val dy = ys(i) - ys(j)
+      if (dx * dx + dy * dy <= r2) {
+        val (ri, rj) = (find(i), find(j))
+        if (ri != rj) parent(math.max(ri, rj)) = math.min(ri, rj)
+      }
+    }
+    xs.indices.map(find).toArray
   }
 
   /** DAOGroup (core.py:440): connected components of the within-`linkRadius`
-    * star graph, per image, via flatMapGroups union-find — no Catalyst
-    * primitive expresses transitive closure, and per-image cardinality is
-    * bounded, so in-memory per group is the right scale tradeoff. */
+    * star graph, per image, via flatMapGroups over [[linkGroups]] — no
+    * Catalyst primitive expresses transitive closure, and per-image
+    * cardinality is bounded, so in-memory per group is the right scale
+    * tradeoff. */
   def groupStars(spark: SparkSession, stars: DataFrame, linkRadius: Double): DataFrame = {
     import spark.implicits._
-    val r2 = linkRadius * linkRadius
     stars.select(col("img_id"), col("star_id"), col("xcentroid"),
         col("ycentroid"), col("peak"), col("flux"))
       .as[(Long, Int, Double, Double, Double, Double)]
@@ -616,146 +785,103 @@ object Photometry {
         // star_id order, not shuffle arrival order: a group's id is its
         // smallest star_id, and the rows it emits keep that order
         val ss = it.toArray.sortBy(_._2)
-        val parent = Array.tabulate(ss.length)(identity)
-        def find(i: Int): Int = {
-          var r = i; while (parent(r) != r) r = parent(r)
-          var c = i
-          while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-          r
-        }
-        for (i <- ss.indices; j <- (i + 1) until ss.length) {
-          val dx = ss(i)._3 - ss(j)._3; val dy = ss(i)._4 - ss(j)._4
-          if (dx * dx + dy * dy <= r2) {
-            val (ri, rj) = (find(i), find(j))
-            if (ri != rj) parent(math.max(ri, rj)) = math.min(ri, rj)
-          }
-        }
+        val root = linkGroups(ss.map(_._3), ss.map(_._4), linkRadius * linkRadius)
         ss.indices.iterator.map { i =>
           val s = ss(i)
-          (img, s._2, ss(find(i))._2, s._3, s._4, s._5, s._6)
+          (img, s._2, ss(root(i))._2, s._3, s._4, s._5, s._6)
         }
       }
       .toDF("img_id", "star_id", "group_id", "xcentroid", "ycentroid",
         "peak", "flux")
   }
 
-  /** Per-group PSF fit (fit_stars, core.py:442-450): a linear LSQ warm
-    * start — solve (ΦᵀΦ)f = Φᵀz for member fluxes at the detection
-    * centroids — then `posSteps` damped Gauss-Newton iterations over the
-    * full per-group parameter vector [fluxes, x positions, y positions],
+  /** Per-group PSF fit (fit_stars, core.py:442-450) over the group's pixel
+    * evidence (`px`, `py`, `pv`) for members starting at (`mx`, `my`): a
+    * linear LSQ warm start — solve (ΦᵀΦ)f = Φᵀz for member fluxes at the
+    * detection centroids — then `posSteps` damped Gauss-Newton iterations
+    * over the full parameter vector [fluxes, x positions, y positions],
     * matching the reference's LevMar fit of flux AND position. Position
     * derivatives are central differences (the EPSF grid has no analytic
-    * gradient); steps are clamped to ±0.5 px and the star is kept inside
-    * its evidence box. Pixel evidence is gathered by a box join keyed on
-    * (img, group); each group solves a 3k×3k system — group cardinality
-    * is crowding-bounded, so the solve stays O(1) per group at any data
-    * scale. */
-  private def fitGroups(spark: SparkSession, grouped: DataFrame,
-      residual: DataFrame, psf: PsfModel, boxR: Int,
-      posSteps: Int = 2): DataFrame = {
-    import spark.implicits._
-    val boxOffs = array((-boxR to boxR).map(lit): _*)
-    val box = grouped
-      .withColumn("dy", explode(boxOffs)).withColumn("dx", explode(boxOffs))
-      .select(col("img_id"), col("group_id"), col("star_id"),
-        col("xcentroid"), col("ycentroid"),
-        (round(col("ycentroid")).cast(LongType) + col("dy")).as("y"),
-        (round(col("xcentroid")).cast(LongType) + col("dx")).as("x"))
-    val evidence = box.join(residual, Seq("img_id", "y", "x"))
-      .select(col("img_id"), col("group_id"), col("star_id"),
-        col("xcentroid"), col("ycentroid"), col("x"), col("y"), col("v"))
-      .as[(Long, Int, Int, Double, Double, Long, Long, Double)]
-    evidence.groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key: (Long, Int), it: Iterator[(Long, Int, Int, Double, Double, Long, Long, Double)]) =>
-        val (img, gid) = key
-        val rows = it.toArray
-        // member stars (id → centroid)
-        val members = rows.map(r => (r._3, r._4, r._5)).distinct.sortBy(_._1)
-        val k = members.length
-        // distinct pixels
-        val pix = rows.map(r => (r._6, r._7, r._8)).distinct
-        val phi = Array.ofDim[Double](pix.length, k)
-        for (pi <- pix.indices; mi <- 0 until k) {
-          val dx = pix(pi)._1 - members(mi)._2
-          val dy = pix(pi)._2 - members(mi)._3
-          phi(pi)(mi) = psf.eval(dx, dy)
-        }
-        val ata = Array.ofDim[Double](k, k)
-        val atb = new Array[Double](k)
-        for (pi <- pix.indices) {
-          for (a <- 0 until k) {
-            atb(a) += phi(pi)(a) * pix(pi)._3
-            for (b <- 0 until k) ata(a)(b) += phi(pi)(a) * phi(pi)(b)
-          }
-        }
-        // ridge for stability of blended groups
-        for (a <- 0 until k) ata(a)(a) += 1e-9
-        val fluxesRaw = LinAlg.solve(ata, atb).getOrElse(new Array[Double](k))
-        val vol = psf.volume
-        // Gauss-Newton refinement of [f, x, y] around the warm start
-        val xs = members.map(_._2)
-        val ys = members.map(_._3)
-        val fs = fluxesRaw.clone()
-        val h = 0.25 // central-difference step; resolves oversample≥2 grids
-        var step = 0
-        while (step < posSteps && k > 0) {
-          val n3 = 3 * k
-          val jtj = Array.ofDim[Double](n3, n3)
-          val jtr = new Array[Double](n3)
-          val jrow = new Array[Double](n3)
-          var pi = 0
-          while (pi < pix.length) {
-            val px = pix(pi)._1.toDouble
-            val py = pix(pi)._2.toDouble
-            var model = 0.0
-            var j = 0
-            while (j < k) {
-              val dx = px - xs(j); val dy = py - ys(j)
-              val phi0 = psf.eval(dx, dy)
-              model += fs(j) * phi0
-              jrow(j) = phi0
-              // ∂model/∂x_j = −f_j·∂φ/∂dx (dx = px − x_j)
-              jrow(k + j) = -fs(j) *
-                (psf.eval(dx + h, dy) - psf.eval(dx - h, dy)) / (2 * h)
-              jrow(2 * k + j) = -fs(j) *
-                (psf.eval(dx, dy + h) - psf.eval(dx, dy - h)) / (2 * h)
-              j += 1
-            }
-            val r = pix(pi)._3 - model
-            var a = 0
-            while (a < n3) {
-              jtr(a) += jrow(a) * r
-              var b = 0
-              while (b < n3) { jtj(a)(b) += jrow(a) * jrow(b); b += 1 }
-              a += 1
-            }
-            pi += 1
-          }
-          // Levenberg damping (relative) + absolute ridge for flat columns
-          var a = 0
-          while (a < n3) { jtj(a)(a) += 1e-3 * jtj(a)(a) + 1e-9; a += 1 }
-          LinAlg.solve(jtj, jtr) match {
-            case Some(delta) =>
-              var j = 0
-              while (j < k) {
-                fs(j) += delta(j)
-                val mx = members(j)._2; val my = members(j)._3
-                xs(j) = math.max(mx - boxR * 0.5, math.min(mx + boxR * 0.5,
-                  xs(j) + math.max(-0.5, math.min(0.5, delta(k + j)))))
-                ys(j) = math.max(my - boxR * 0.5, math.min(my + boxR * 0.5,
-                  ys(j) + math.max(-0.5, math.min(0.5, delta(2 * k + j)))))
-                j += 1
-              }
-            case None => step = posSteps // singular: keep current params
-          }
-          step += 1
-        }
-        members.indices.iterator.map { mi =>
-          (img, members(mi)._1, gid, xs(mi), ys(mi), fs(mi) * vol, 0)
-        }
+    * gradient); steps are clamped to ±0.5 px and the star is kept within
+    * boxR/2 of its start. Returns (x, y, total flux) per member: the solve
+    * is 3k×3k for k members, and crowding bounds k. */
+  private[pipeline] def fitGroup(px: Array[Long], py: Array[Long],
+      pv: Array[Double], mx: Array[Double], my: Array[Double], psf: PsfModel,
+      boxR: Int, posSteps: Int = 2): (Array[Double], Array[Double], Array[Double]) = {
+    val k = mx.length
+    val np = px.length
+    val phi = Array.ofDim[Double](np, k)
+    for (pi <- 0 until np; mi <- 0 until k)
+      phi(pi)(mi) = psf.eval(px(pi) - mx(mi), py(pi) - my(mi))
+    val ata = Array.ofDim[Double](k, k)
+    val atb = new Array[Double](k)
+    for (pi <- 0 until np) {
+      for (a <- 0 until k) {
+        atb(a) += phi(pi)(a) * pv(pi)
+        for (b <- 0 until k) ata(a)(b) += phi(pi)(a) * phi(pi)(b)
       }
-      .toDF("img_id", "star_id", "group_id", "x_fit", "y_fit", "flux_fit",
-        "iter_detected")
+    }
+    // ridge for stability of blended groups
+    for (a <- 0 until k) ata(a)(a) += 1e-9
+    val fs = LinAlg.solve(ata, atb).getOrElse(new Array[Double](k))
+    // Gauss-Newton refinement of [f, x, y] around the warm start
+    val xs = mx.clone()
+    val ys = my.clone()
+    val h = 0.25 // central-difference step; resolves oversample≥2 grids
+    var step = 0
+    while (step < posSteps && k > 0) {
+      val n3 = 3 * k
+      val jtj = Array.ofDim[Double](n3, n3)
+      val jtr = new Array[Double](n3)
+      val jrow = new Array[Double](n3)
+      var pi = 0
+      while (pi < np) {
+        val pxd = px(pi).toDouble
+        val pyd = py(pi).toDouble
+        var model = 0.0
+        var j = 0
+        while (j < k) {
+          val dx = pxd - xs(j); val dy = pyd - ys(j)
+          val phi0 = psf.eval(dx, dy)
+          model += fs(j) * phi0
+          jrow(j) = phi0
+          // ∂model/∂x_j = −f_j·∂φ/∂dx (dx = px − x_j)
+          jrow(k + j) = -fs(j) *
+            (psf.eval(dx + h, dy) - psf.eval(dx - h, dy)) / (2 * h)
+          jrow(2 * k + j) = -fs(j) *
+            (psf.eval(dx, dy + h) - psf.eval(dx, dy - h)) / (2 * h)
+          j += 1
+        }
+        val r = pv(pi) - model
+        var a = 0
+        while (a < n3) {
+          jtr(a) += jrow(a) * r
+          var b = 0
+          while (b < n3) { jtj(a)(b) += jrow(a) * jrow(b); b += 1 }
+          a += 1
+        }
+        pi += 1
+      }
+      // Levenberg damping (relative) + absolute ridge for flat columns
+      var a = 0
+      while (a < n3) { jtj(a)(a) += 1e-3 * jtj(a)(a) + 1e-9; a += 1 }
+      LinAlg.solve(jtj, jtr) match {
+        case Some(delta) =>
+          var j = 0
+          while (j < k) {
+            fs(j) += delta(j)
+            xs(j) = math.max(mx(j) - boxR * 0.5, math.min(mx(j) + boxR * 0.5,
+              xs(j) + math.max(-0.5, math.min(0.5, delta(k + j)))))
+            ys(j) = math.max(my(j) - boxR * 0.5, math.min(my(j) + boxR * 0.5,
+              ys(j) + math.max(-0.5, math.min(0.5, delta(2 * k + j)))))
+            j += 1
+          }
+        case None => step = posSteps // singular: keep current params
+      }
+      step += 1
+    }
+    val vol = psf.volume
+    (xs, ys, fs.map(_ * vol))
   }
 
   /** Subtract the fitted PSF models from the residual image (public: also

@@ -58,12 +58,13 @@ class EpochPipelineSpec extends SparkSpec {
     val (_, jobs) = jobsDuring {
       EpochPipeline.run(spark, px, 64, 64, minStars = 2).catalog.collect()
     }
-    // 79–81 jobs measured over 36 runs (AQE's broadcast timing moves the
-    // count by a job or two); 130 before the alignment reused the stats,
-    // the combine was pinned and the peak test became one pass. The
-    // fixpoint clip back in the alignment measured 107, an unpinned
-    // combine 97, so the bound keeps headroom for the jitter only.
-    assert(jobs <= 85, s"$jobs jobs")
+    // 60 jobs measured in 16 runs over two JVMs; AQE's broadcast timing
+    // has moved this count by a job or two before, so the bound keeps
+    // that much headroom only. 79–81 while photometry and the EPSF build
+    // ran their rounds as Spark jobs; 130 before the alignment reused the
+    // stats, the combine was pinned and the peak test became one pass.
+    info(s"$jobs jobs")
+    assert(jobs <= 64, s"$jobs jobs")
   }
 
   test("multi-epoch loop: concurrent epochs, statuses per branch, tagged union") {
