@@ -24,14 +24,17 @@ final case class ClipStats(n: Long, mean: Double, median: Double, std: Double,
   * |v − median| ≤ sigma·std), iterate until fixed point or `maxIters`.
   *
   * Distributivity: clipping is not algebraically mergeable, so the buffer
-  * holds the group's values exactly (SURVEY.md §7 hard-part 3). This is by
-  * design: every reference call site has small bounded group cardinality
-  * (images per pixel ≈ 3, annulus ≈ 1.5 k px, stars per image ≤ thousands).
-  * For 100 TB runs the group count is huge (16.7 M pixel keys) but each
-  * group stays tiny — exactly the shape Spark hash aggregation scales on,
-  * with partial buffers merged by concatenation. Mean/std use Kahan
-  * compensated summation so results are reproducible regardless of merge
-  * order to well below the 1e-6 output rounding used by the oracle queries.
+  * holds the group's values exactly (SURVEY.md §7 hard-part 3), with
+  * partial buffers merged by concatenation. Most call sites have many
+  * small groups (images per pixel ≈ 3 in the median combine, annulus
+  * ≈ 1.5 k px), but the per-image background (`Photometry.backgroundStats`)
+  * is one group of 16.7 M values per 4096² image. Memory per task: the
+  * buffer at 8 B per value (up to 16 B while it grows by doubling) plus the
+  * clip's one sorted copy at 8 B per value, so at most ≈ 400 MB for a
+  * 4096² image.
+  * Mean/std use Kahan compensated summation so results are reproducible
+  * regardless of merge order to well below the 1e-6 output rounding used
+  * by the oracle queries.
   */
 class SigmaClippedStats(sigma: Double, maxIters: Int)
     extends Aggregator[Double, ArrayBuffer[Double], ClipStats] {
@@ -58,33 +61,70 @@ object SigmaClippedStats {
 
   /** The iterative clip itself, shared by the Aggregator and the
     * TypedImperativeAggregate fast path so both are bit-identical. */
-  def clip(values: Array[Double], sigma: Double, maxIters: Int): ClipStats = {
-    if (values.isEmpty)
+  def clip(values: Array[Double], sigma: Double, maxIters: Int): ClipStats =
+    clip(values, values.length, sigma, maxIters)
+
+  /** The clip over `values(0 until n)`, which it does not modify. Each
+    * round's survivors (|v − median| ≤ sigma·std) are one contiguous run of
+    * the sorted values, since v − median is monotone in v: so one sorted
+    * copy serves every round as a slice `sorted(lo until hi)`, and the sums
+    * run over `values` in input order within the slice's range. The result
+    * is bit-identical to filtering and re-sorting the survivors each round. */
+  def clip(values: Array[Double], n: Int, sigma: Double, maxIters: Int): ClipStats = {
+    if (n == 0)
       return ClipStats(0L, Double.NaN, Double.NaN, Double.NaN, 0.0)
-    var vals = values
+    val sorted = java.util.Arrays.copyOf(values, n)
+    java.util.Arrays.sort(sorted)
+    var lo = 0
+    var hi = n
+    // until a round removes a value, every value survives, NaN included
+    var clipped = false
+    val survives = (v: Double) =>
+      !clipped || v >= sorted(lo) && v <= sorted(hi - 1)
+    def std(): Double = {
+      val m = kahanSum(values, n, survives, v => v) / (hi - lo)
+      math.sqrt(kahanSum(values, n, survives, v => (v - m) * (v - m)) / (hi - lo))
+    }
     var it = 0
     var changed = true
     while (it < maxIters && changed) {
-      val med = median(vals)
-      val sd = stdPop(vals)
-      val kept = vals.filter(v => math.abs(v - med) <= sigma * sd)
-      changed = kept.length != vals.length
-      if (kept.nonEmpty) vals = kept else changed = false
+      val med = sortedMedian(sorted, lo, hi)
+      val bound = sigma * std()
+      def kept(v: Double) = math.abs(v - med) <= bound
+      var l = lo
+      var h = hi
+      while (l < h && !kept(sorted(l))) l += 1
+      while (h > l && !kept(sorted(h - 1))) h -= 1
+      changed = h - l != hi - lo
+      if (h > l) {
+        lo = l; hi = h
+        clipped ||= changed
+      } else changed = false
       it += 1
     }
-    ClipStats(vals.length.toLong, mean(vals), median(vals), stdPop(vals),
-      kahanSum(vals))
+    val sum = kahanSum(values, n, survives, v => v)
+    ClipStats((hi - lo).toLong, sum / (hi - lo), sortedMedian(sorted, lo, hi),
+      std(), sum)
   }
 
   /** Kahan-compensated sum — merge-order independent to ~2·eps. */
-  private[functions] def kahanSum(vals: Array[Double]): Double = {
+  private[functions] def kahanSum(vals: Array[Double]): Double =
+    kahanSum(vals, vals.length, _ => true, v => v)
+
+  /** Kahan-compensated sum of `term(v)` over the values `v` of
+    * `vals(0 until n)` that pass `keep`, in index order. */
+  private def kahanSum(vals: Array[Double], n: Int, keep: Double => Boolean,
+      term: Double => Double): Double = {
     var s = 0.0; var c = 0.0
     var i = 0
-    while (i < vals.length) {
-      val y = vals(i) - c
-      val t = s + y
-      c = (t - s) - y
-      s = t
+    while (i < n) {
+      val v = vals(i)
+      if (keep(v)) {
+        val y = term(v) - c
+        val t = s + y
+        c = (t - s) - y
+        s = t
+      }
       i += 1
     }
     s
@@ -92,19 +132,29 @@ object SigmaClippedStats {
 
   def mean(vals: Array[Double]): Double = kahanSum(vals) / vals.length
 
-  /** numpy-style median: average of the two middle order statistics. */
+  /** numpy-style median: average of the two middle order statistics.
+    * Sorts a primitive copy: `ArrayOps.sorted` has no `Array[Double]` fast
+    * path and would box every value. `Arrays.sort(double[])` orders by
+    * `java.lang.Double.compare`, the order of the default
+    * `Ordering[Double]`, so the result is the same bit for bit. */
   def median(vals: Array[Double]): Double = {
-    val sorted = vals.sorted
-    val n = sorted.length
-    if (n % 2 == 1) sorted(n / 2)
-    else (sorted(n / 2 - 1) + sorted(n / 2)) / 2.0
+    val sorted = vals.clone()
+    java.util.Arrays.sort(sorted)
+    sortedMedian(sorted, 0, sorted.length)
+  }
+
+  /** The median of the sorted slice `sorted(lo until hi)`, `hi > lo`. */
+  private def sortedMedian(sorted: Array[Double], lo: Int, hi: Int): Double = {
+    val mid = lo + (hi - lo) / 2
+    if ((hi - lo) % 2 == 1) sorted(mid)
+    else (sorted(mid - 1) + sorted(mid)) / 2.0
   }
 
   /** Population standard deviation (ddof=0, numpy default). */
   def stdPop(vals: Array[Double]): Double = {
     val m = mean(vals)
-    val sq = vals.map(v => (v - m) * (v - m))
-    math.sqrt(kahanSum(sq) / vals.length)
+    math.sqrt(kahanSum(vals, vals.length, _ => true, v => (v - m) * (v - m)) /
+      vals.length)
   }
 
   /** Column function: sigma-clipped stats as a struct(n, mean, median, std).

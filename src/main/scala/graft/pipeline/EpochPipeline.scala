@@ -109,20 +109,11 @@ object EpochPipeline {
         graft.sources.Pdf.frameImages(pinned, width, height))
     }
 
-    val bufferable = Photometry.bufferable(width, height)
-
-    // 1. per-image stats (one grouped pass) double as the image census —
-    // the stats row count IS the image count, so no separate distinct scan.
-    // One row per image = a model object (SURVEY.md abstraction #5):
-    // collect it ONCE and rebuild as a local relation, so the census is a
-    // driver-side length (no count job) and every broadcast of the stats
-    // below builds from driver memory instead of scheduling a cluster job.
-    val pixStatsDistributed = Photometry.backgroundStats(pinned,
-      bufferable = bufferable)
-    val pixStatsRows = pixStatsDistributed.collect()
-    val pixStats = spark.createDataFrame(
-      java.util.Arrays.asList(pixStatsRows: _*), pixStatsDistributed.schema)
-    val nImages = pixStatsRows.length.toLong
+    // 1. per-image stats (one grouped pass, collected by backgroundStats)
+    // double as the image census: the stats row count IS the image count,
+    // read from the local relation without a job
+    val pixStats = Photometry.backgroundStats(pinned)
+    val nImages = pixStats.collect().length.toLong
     // the combine feeds the stats, the subtraction and the annulus gather:
     // pin it so those three reads do not each redo alignment and median
     val combined =
@@ -138,17 +129,13 @@ object EpochPipeline {
     // shift-invariant (subtracting the median shifts mean and median by
     // the same constant and keeps the survivor set), so the subtracted
     // image's stats are the combined image's, re-centered at zero — no
-    // second fixpoint loop. A single-image epoch is its own combine, so
-    // its stats are the already-computed per-image row, relabeled; the
-    // checkpointed 1-row-per-image frame keeps its five consumers from
-    // re-running the aggregate.
+    // second clip. A single-image epoch is its own combine, so its stats
+    // are the already-computed per-image row, relabeled. Either way the
+    // stats are a local relation, so their five consumers below never
+    // re-run the aggregate.
     val baseStats =
-      if (nImages > 1) {
-        // same local-relation treatment as pixStats: 1 row per combined
-        // image, consumed by several broadcasts below
-        val d = Photometry.backgroundStats(combined, bufferable = bufferable)
-        spark.createDataFrame(java.util.Arrays.asList(d.collect(): _*), d.schema)
-      } else pixStats.select(lit(0L).as("img_id"), col("bkg_mean"),
+      if (nImages > 1) Photometry.backgroundStats(combined)
+      else pixStats.select(lit(0L).as("img_id"), col("bkg_mean"),
         col("bkg_median"), col("bkg_std"))
     val sub = combined.join(broadcast(baseStats), Seq("img_id"))
       .select(col("img_id"), col("y"), col("x"),
@@ -194,7 +181,7 @@ object EpochPipeline {
     // the measured stars, and every action on the catalog would rerun the
     // whole-image kernel: pin them once.
     val results = Photometry.epsfPhotometry(spark, sub, fwhm, 2, nSigma,
-        statsOpt = Some(subStats), starsOpt = Some(maskedPinned))
+        maskedPinned, statsOpt = Some(subStats))
       .withColumn("uid", row_number().over(
         Window.partitionBy(col("img_id"))
           .orderBy(col("iter_detected"), col("star_id"))))

@@ -13,84 +13,43 @@ import org.apache.spark.sql.types._
   * sigma-clipped aggregate, median combine is `groupBy(y,x)`, np.roll is a
   * key rewrite, detection is a per-image 3×3 peak kernel. A 4096² frame is
   * 16.7 M rows — at 100 TB the pixel table partitions by `img_id` and each
-  * stage shuffles by its natural key. Only the iterative photometry holds
-  * a whole image, one per task, as a dense frame (≈ 405 MB at 4096²).
+  * stage shuffles by its natural key. Two stages hold a whole image in one
+  * task: the background clip, as one aggregation buffer of its values
+  * (8 B per pixel, 134 MB at 4096²), and the iterative photometry, as a
+  * dense frame (≈ 405 MB at 4096²).
   */
 object Photometry {
 
   /** Per-image sigma-clipped background (sigma_clipped_stats, psf_phot.py:68;
-    * sigma=2.0 per core.py:70).
+    * sigma=2.0 and five rounds, core.py:70), as
+    * `(img_id, bkg_mean, bkg_median, bkg_std)`.
     *
-    * This is the few-groups/huge-cardinality shape (one group per image,
-    * 16.7 M pixels each at full frame), where a buffering aggregate would
-    * hold whole frames in aggregation buffers — so it runs as the
-    * fixed-point DataFrame loop instead (SURVEY.md §2.5's two-pass
-    * alternative): per round one exact-percentile + stddev_pop aggregate,
-    * then a broadcast-threshold filter; stop when no image's survivor
-    * count changed, or after the reference's 5 rounds. Same fixpoint as
-    * SigmaClippedStats.clip; per-pixel state never leaves the scan. The
-    * buffering aggregate remains the right tool for the many-small-groups
-    * call sites (median combine, annulus). */
-  def backgroundStats(pixels: DataFrame, sigma: Double = 2.0,
-      maxIters: Int = 5, bufferable: Boolean = false): DataFrame = {
-    val spark = pixels.sparkSession
-    import spark.implicits._
-    // when the caller can bound the per-image pixel count (small frames /
-    // fixtures), the buffering aggregate runs the whole clip fixpoint in
-    // ONE shuffle instead of maxIters+1 aggregate rounds — same clip
-    // semantics (SigmaClippedStats.clip), different physical plan. Full
-    // frames (16.7 M px = 134 MB buffers) must keep the loop.
-    if (bufferable) {
-      val scs = sigmaClippedStats(sigma, maxIters)
-      return pixels.groupBy(col("img_id")).agg(scs(col("v")).as("s"))
-        .select(col("img_id"), col("s.mean").as("bkg_mean"),
-          col("s.median").as("bkg_median"), col("s.std").as("bkg_std"))
-    }
-    // pin the 2-column projection for the loop's repeated scans; released
-    // before returning (the result itself is a collected model object)
-    val base = pixels.select(col("img_id"), col("v")).persist()
-    def agg(df: DataFrame): Array[(Long, Long, Double, Double, Double)] =
-      df.groupBy(col("img_id"))
-        .agg(count(lit(1)).as("n"), avg(col("v")).as("mean"),
-          expr("percentile(v, 0.5)").as("med"),
-          stddev_pop(col("v")).as("sd"))
-        .as[(Long, Long, Double, Double, Double)].collect()
-    var cur = base
-    var res = agg(cur)
-    var it = 0
-    var changed = true
-    while (it < maxIters && changed) {
-      val bounds = res.map { case (img, _, _, med, sd) =>
-        (img, med, sigma * sd) }.toSeq.toDF("img_id", "_med", "_bound")
-      cur = cur.join(broadcast(bounds), Seq("img_id"))
-        .filter(abs(col("v") - col("_med")) <= col("_bound"))
-        .select(col("img_id"), col("v"))
-      val nxt = agg(cur)
-      val prevN = res.map(r => r._1 -> r._2).toMap
-      changed = nxt.exists(r => prevN.get(r._1).forall(_ != r._2))
-      // an image whose rows were ALL clipped this round vanishes from the
-      // groupBy result — keep its previous-round stats (the last non-empty
-      // survivor set, matching SigmaClippedStats.clip's kept.nonEmpty
-      // guard) instead of silently dropping the image downstream
-      val nxtImgs = nxt.map(_._1).toSet
-      res = nxt ++ res.filterNot(r => nxtImgs.contains(r._1))
-      it += 1
-    }
-    base.unpersist(blocking = false)
-    res.toSeq.toDF("img_id", "n", "bkg_mean", "bkg_median", "bkg_std")
-      .select(col("img_id"), col("bkg_mean"), col("bkg_median"), col("bkg_std"))
+    * One grouped [[sigmaClippedStats]] aggregate at every frame size: each
+    * image's values shuffle once into one aggregation buffer and the whole
+    * clip fixpoint runs in the task that finishes the group. The buffer is
+    * 8 B per pixel (134 MB at 4096²) plus the clip's one sorted copy; see
+    * [[graft.functions.SigmaClippedStats]].
+    *
+    * The stats are one row per image, a model object held on the driver
+    * (SURVEY.md abstraction #5): the call collects them and returns a
+    * local relation, so counting images launches no job and every
+    * broadcast of the stats builds from driver memory.
+    *
+    * `bufferable` is ignored. It stays only because
+    * `perfbench/harness/src/main/scala/perfbench/EpochStages.scala` passes
+    * it by name. */
+  def backgroundStats(pixels: DataFrame, bufferable: Boolean = true): DataFrame = {
+    val scs = sigmaClippedStats(2.0, 5)
+    val stats = pixels.groupBy(col("img_id")).agg(scs(col("v")).as("s"))
+      .select(col("img_id"), col("s.mean").as("bkg_mean"),
+        col("s.median").as("bkg_median"), col("s.std").as("bkg_std"))
+    pixels.sparkSession.createDataFrame(
+      java.util.Arrays.asList(stats.collect(): _*), stats.schema)
   }
 
-  /** Whether a `width`×`height` frame fits an aggregation buffer (≤ 1 M px
-    * = 8 MB), so [[backgroundStats]] can take the one-shuffle clip; full
-    * frames take the fixpoint loop. */
-  def bufferable(width: Int, height: Int): Boolean =
-    width.toLong * height <= (1L << 20)
-
   /** Global background subtraction (psf_phot.py:69: image −= median). */
-  def subtractBackground(pixels: DataFrame, bufferable: Boolean = false): DataFrame =
-    pixels.join(broadcast(backgroundStats(pixels, bufferable = bufferable)),
-        Seq("img_id"))
+  def subtractBackground(pixels: DataFrame): DataFrame =
+    pixels.join(broadcast(backgroundStats(pixels)), Seq("img_id"))
       .select(col("img_id"), col("y"), col("x"),
         (col("v") - col("bkg_median")).as("v"))
 
@@ -225,8 +184,7 @@ object Photometry {
   def alignAndCombine(pixels: DataFrame, width: Int, height: Int,
       nSigma: Double = 10.0, matchRadius: Double = 20.0,
       stats: Option[DataFrame] = None): DataFrame = {
-    val bkg = stats.getOrElse(
-      backgroundStats(pixels, bufferable = bufferable(width, height)))
+    val bkg = stats.getOrElse(backgroundStats(pixels))
     val stars = detectStars(pixels, nSigma, 3, Double.MaxValue, 0, 0L, 0L,
       Some(bkg)).localCheckpoint()
     // no stars anywhere (cloudy epoch): no shift estimation possible —
@@ -523,21 +481,17 @@ object Photometry {
       GaussianPsf(fwhm / GaussianFit.SigmaToFwhm),
       math.max(math.ceil(2 * fwhm).toInt, 2), nIters, nSigma, stats)
 
-  /** EPSF-closed-loop photometry: build the empirical PSF from the field's
-    * own bright stars (build_psf, psf_phot.py:76), then measure with it
-    * (do_photometry, psf_phot.py:84) — the reference's actual sequence. */
+  /** EPSF-closed-loop photometry: build the empirical PSF from the
+    * caller's star table (build_psf(stars_tbl), psf_phot.py:76), then
+    * measure with it (do_photometry, psf_phot.py:84) — the reference's
+    * actual sequence. `stars` is the reference's masked catalog: every row
+    * is stacked into the EPSF, so blends and close neighbours must already
+    * be gone. */
   def epsfPhotometry(spark: SparkSession, pixels: DataFrame, fwhm: Double,
-      nIters: Int, nSigma: Double, oversample: Int = 2,
-      statsOpt: Option[DataFrame] = None,
-      starsOpt: Option[DataFrame] = None): DataFrame = {
+      nIters: Int, nSigma: Double, stars: DataFrame, oversample: Int = 2,
+      statsOpt: Option[DataFrame] = None): DataFrame = {
     val boxR = math.max(math.ceil(2 * fwhm).toInt, 2)
     val stats = statsOpt.getOrElse(backgroundStats(pixels))
-    // the reference builds the EPSF from the caller's masked star table
-    // (build_psf(stars_tbl), psf_phot.py:76) — accept it and skip the
-    // extra detection pass; detect only when the caller has none
-    val stars = starsOpt.getOrElse(
-      detectStars(pixels, nSigma, boxR, Double.MaxValue, 0, 0L, 0L,
-        Some(stats)))
     val epsf = buildEpsfIterative(pixels, stars, boxR, oversample)
     val psf = collectGridPsf(epsf, boxR, oversample)
     // degenerate EPSF (starless field / empty stack): fall back to the

@@ -97,13 +97,11 @@ object PixelQueries {
     cached(s, d, "field")(renderField(s, d))
   /** Test access to the rendered field (planted-truth pipeline specs). */
   private[graft] def fieldFor(s: SparkSession, d: String): DataFrame = field(s, d)
-  /** One clip pass (bufferable: the 64² frame fits an aggregation buffer)
-    * serves subtraction AND detection thresholds — clipping is
-    * shift-invariant, so the subtracted image's stats are this row
+  /** One clip pass serves subtraction AND detection thresholds — clipping
+    * is shift-invariant, so the subtracted image's stats are this row
     * re-centered at zero. */
   private def stats0(s: SparkSession, d: String): DataFrame =
-    cached(s, d, "stats")(
-      Photometry.backgroundStats(field(s, d), bufferable = true))
+    cached(s, d, "stats")(Photometry.backgroundStats(field(s, d)))
   private def shiftedStats(s: SparkSession, d: String): DataFrame =
     stats0(s, d).select(col("img_id"),
       (col("bkg_mean") - col("bkg_median")).as("bkg_mean"),

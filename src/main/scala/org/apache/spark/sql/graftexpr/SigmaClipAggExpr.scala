@@ -22,7 +22,6 @@ final class DoubleBuf(var arr: Array[Double], var n: Int) {
       arr = java.util.Arrays.copyOf(arr, math.max(n + o.n, arr.length * 2))
     System.arraycopy(o.arr, 0, arr, n, o.n); n += o.n
   }
-  def values: Array[Double] = java.util.Arrays.copyOf(arr, n)
 }
 
 /** `sigma_clipped_stats` as a TypedImperativeAggregate — the SURVEY.md §4
@@ -65,7 +64,7 @@ case class SigmaClipAggExpr(
   }
 
   override def eval(buffer: DoubleBuf): Any = {
-    val s = graft.functions.SigmaClippedStats.clip(buffer.values, sigma, maxIters)
+    val s = graft.functions.SigmaClippedStats.clip(buffer.arr, buffer.n, sigma, maxIters)
     InternalRow(s.n, s.mean, s.median, s.std, s.sum)
   }
 

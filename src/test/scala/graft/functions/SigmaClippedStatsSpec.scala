@@ -10,6 +10,34 @@ class SigmaClippedStatsSpec extends SparkSpec {
     assert(SigmaClippedStats.median(Array(3.0, 1.0, 2.0)) === 2.0)
     assert(SigmaClippedStats.median(Array(4.0, 1.0, 2.0, 3.0)) === 2.5)
     assert(SigmaClippedStats.median(Array(1.0, 2.0)) === 1.5)
+    // bit for bit against the boxed `sorted` (the default Ordering[Double])
+    def reference(vals: Array[Double]): Double = {
+      val sorted = vals.sorted
+      val n = sorted.length
+      if (n % 2 == 1) sorted(n / 2) else (sorted(n / 2 - 1) + sorted(n / 2)) / 2.0
+    }
+    def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+    def sameBits(vals: Array[Double]): Unit = {
+      val before = vals.map(bits)
+      assert(bits(SigmaClippedStats.median(vals)) === bits(reference(vals)),
+        vals.mkString(","))
+      assert(vals.map(bits).sameElements(before), "median sorted its input")
+    }
+    val nan = Double.NaN
+    val inf = Double.PositiveInfinity
+    Seq(Array(0.0, -0.0), Array(-0.0, 0.0), Array(-0.0, 0.0, 1.0),
+      Array(0.0, -0.0, -0.0), Array(nan, 1.0, 2.0), Array(nan, 1.0),
+      Array(nan, nan, -inf), Array(inf, -inf), Array(inf, -inf, 3.0),
+      Array(inf, inf, 1.0, 1.0), Array(2.0, 2.0, 2.0, 1.0),
+      Array(-inf, nan, -0.0, 0.0, inf, 5.0, 5.0), Array(7.5))
+      .foreach(sameBits)
+    val rnd = new scala.util.Random(41)
+    (1 to 400).foreach { n =>
+      // a coarse grid makes duplicates and exact ties common
+      sameBits(Array.fill(n)(
+        if (rnd.nextInt(4) == 0) (rnd.nextInt(21) - 10) * 0.5
+        else rnd.nextGaussian() * 100.0))
+    }
   }
 
   test("stdPop is population std (ddof=0)") {
@@ -55,6 +83,53 @@ class SigmaClippedStatsSpec extends SparkSpec {
       assert(out.n <= vs.length && out.n >= 1)
       assert(out.median >= vs.min - 1e-9 && out.median <= vs.max + 1e-9)
     }
+  }
+
+  test("clip equals filtering and re-sorting the survivors every round, bit for bit") {
+    // the direct formulation: a new survivor array and a fresh sort per round
+    def reference(values: Array[Double], sigma: Double, maxIters: Int): ClipStats = {
+      import SigmaClippedStats.{mean => mean0, median => median0}
+      var vals = values
+      var it = 0
+      var changed = true
+      while (it < maxIters && changed) {
+        val med = median0(vals)
+        val sd = stdPop(vals)
+        val kept = vals.filter(v => math.abs(v - med) <= sigma * sd)
+        changed = kept.length != vals.length
+        if (kept.nonEmpty) vals = kept else changed = false
+        it += 1
+      }
+      ClipStats(vals.length.toLong, mean0(vals), median0(vals), stdPop(vals),
+        kahanSum(vals))
+    }
+    def bits(s: ClipStats) = Seq(s.mean, s.median, s.std, s.sum)
+      .map(java.lang.Double.doubleToRawLongBits) :+ s.n
+    val nan = Double.NaN
+    val inf = Double.PositiveInfinity
+    val special = Seq(Array(5.0), Array(1.0, 1.0, 1.0), Array(-0.0, 0.0, 0.0, 7.0),
+      Array(nan, 1.0, 2.0, 3.0), Array(inf, 1.0, 2.0), Array(-inf, 4.0, 4.0, 1e300),
+      Array(1e308, -1e308, 3.0, 3.0), Array(0.0, 0.0, 0.0, 1.0, 1000.0))
+    val rnd = new scala.util.Random(7)
+    val random = (1 to 300).map { i =>
+      Array.fill(1 + rnd.nextInt(if (i % 10 == 0) 3000 else 60)) {
+        val g = rnd.nextGaussian()
+        if (rnd.nextInt(20) == 0) g * 500.0        // outliers
+        else if (rnd.nextInt(3) == 0) math.rint(g * 4) // ties
+        else 100.0 + g
+      }
+    }
+    for (vals <- special ++ random; (sigma, iters) <- Seq((2.0, 5), (0.5, 20),
+        (3.0, 1), (-1.0, 5))) {
+      val before = vals.map(java.lang.Double.doubleToRawLongBits)
+      assert(bits(SigmaClippedStats.clip(vals, sigma, iters)) ===
+        bits(reference(vals, sigma, iters)), s"sigma $sigma: ${vals.take(8).mkString(",")}")
+      assert(vals.map(java.lang.Double.doubleToRawLongBits).sameElements(before))
+    }
+    // a buffer longer than its fill: only the first n values count
+    val padded = Array(3.0, 1.0, 2.0, 1e9, 1e9)
+    assert(bits(SigmaClippedStats.clip(padded, 3, 2.0, 5)) ===
+      bits(reference(Array(3.0, 1.0, 2.0), 2.0, 5)))
   }
 
   test("merge order does not change the result") {

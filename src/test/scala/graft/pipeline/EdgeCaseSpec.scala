@@ -54,7 +54,9 @@ class EdgeCaseSpec extends SparkSpec {
 
   test("EPSF photometry on a starless field returns empty, not NPE") {
     val px = Photometry.subtractBackground(flatField(1L, 48))
-    assert(Photometry.epsfPhotometry(spark, px, 4.2, 2, 10.0).count() === 0)
+    val boxR = math.max(math.ceil(2 * 4.2).toInt, 2)
+    assert(Photometry.epsfPhotometry(spark, px, 4.2, 2, 10.0,
+      Photometry.detectStars(px, 10.0, boxR)).count() === 0)
   }
 
   test("plateau peaks (equal adjacent maxima) detect as a single star") {

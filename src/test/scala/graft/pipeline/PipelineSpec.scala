@@ -76,6 +76,62 @@ class PhotometrySpec extends SparkSpec {
     assert(math.abs(row.getAs[Double]("bkg_median") - 100.0) < 1.0)
   }
 
+  /** Two seeded 64² images: image 1 is uniform noise, which a 2σ clip
+    * never touches (one round); image 2 is Gaussian noise plus the planted
+    * stars, whose tails the clip keeps trimming. */
+  private def clipField: DataFrame = {
+    val rnd = new scala.util.Random(29)
+    val uniform = for (y <- 0 until 64; x <- 0 until 64)
+      yield (1L, y.toLong, x.toLong, 90.0 + 20.0 * rnd.nextDouble())
+    uniform.toDF("img_id", "y", "x", "v")
+      .union(starField(2L, 64, 100.0, planted))
+  }
+
+  /** Clip rounds until the survivor set stops changing (at most 5). */
+  private def clipRounds(vals: Array[Double]): Int = {
+    var cur = vals; var rounds = 0; var changed = true
+    while (rounds < 5 && changed) {
+      val med = graft.functions.SigmaClippedStats.median(cur)
+      val bound = 2.0 * graft.functions.SigmaClippedStats.stdPop(cur)
+      val kept = cur.filter(v => math.abs(v - med) <= bound)
+      changed = kept.length != cur.length
+      cur = kept; rounds += 1
+    }
+    rounds
+  }
+
+  test("background stats equal the retired fixpoint loop's output") {
+    val px = clipField
+    val vals = px.select("img_id", "v").as[(Long, Double)].collect()
+      .groupMap(_._1)(_._2)
+    assert(clipRounds(vals(1L)) === 1)
+    assert(clipRounds(vals(2L)) >= 3)
+    // (img_id, mean, median, std) of the per-round exact-percentile and
+    // stddev_pop DataFrame loop this aggregate replaced, on this field
+    val loop = Seq(
+      (1L, 100.16242761432676, 100.18709833371238, 5.799434917750952),
+      (2L, 100.02553364869812, 100.00746085346344, 0.8509418333943632))
+    val got = Photometry.backgroundStats(px)
+      .select("img_id", "bkg_mean", "bkg_median", "bkg_std")
+      .as[(Long, Double, Double, Double)].collect().sortBy(_._1)
+    assert(got.map(_._1).toSeq === loop.map(_._1))
+    got.zip(loop).foreach { case ((img, mean, med, std), (_, lMean, lMed, lStd)) =>
+      assert(med === lMed, s"image $img median")
+      assert(math.abs(mean - lMean) <= 1e-12 * math.abs(lMean), s"image $img mean $mean vs $lMean")
+      assert(math.abs(std - lStd) <= 1e-12 * math.abs(lStd), s"image $img std $std vs $lStd")
+    }
+  }
+
+  test("job fence: one background clip of three or more rounds") {
+    val px = starField(2L, 64, 100.0, planted).localCheckpoint()
+    assert(clipRounds(px.select("v").as[Double].collect()) >= 3)
+    val (_, jobs) = jobsDuring(Photometry.backgroundStats(px))
+    // 2 jobs measured (the aggregate's shuffle stage and its collect); the
+    // per-round DataFrame loop it replaced launched 28 on this field
+    info(s"$jobs jobs")
+    assert(jobs <= 4, s"$jobs jobs")
+  }
+
   test("detection finds exactly the planted stars with accurate centroids") {
     val px = Photometry.subtractBackground(starField(1L, 64, 100.0, planted))
     val stars = Photometry.detectStars(px, 10.0, 4)
@@ -257,7 +313,9 @@ class PhotometrySpec extends SparkSpec {
     val sig = 1.8
     val px = Photometry.subtractBackground(starField(1L, 64, 100.0, planted))
     val fwhm = sig * GaussianFit.SigmaToFwhm
-    val out = Photometry.epsfPhotometry(spark, px, fwhm, 2, 10.0)
+    val boxR = math.max(math.ceil(2 * fwhm).toInt, 2)
+    val out = Photometry.epsfPhotometry(spark, px, fwhm, 2, 10.0,
+        Photometry.detectStars(px, 10.0, boxR))
       .select("x_fit", "y_fit", "flux_fit").as[(Double, Double, Double)].collect()
     planted.foreach { case (sx, sy, amp, s) =>
       val trueFlux = amp * 2 * math.Pi * s * s
