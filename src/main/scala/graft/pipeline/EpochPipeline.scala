@@ -1,7 +1,7 @@
 package graft.pipeline
 
-import graft.operators.{RankTrim, SpatialJoins}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,9 +16,11 @@ import org.apache.spark.sql.functions._
   * FWHM is implausible (psf_phot.py:78-82), and null sky coordinates when
   * the WCS solve fails (psf_phot.py:95-98).
   *
-  * Everything except the tiny FWHM cutout fit runs distributed; epochs are
-  * independent (no cross-epoch state), so a 100 TB run maps epochs across
-  * the cluster and this class orchestrates one of them.
+  * The pixels are processed distributed; the small model objects (per-image
+  * stats, star tables, alignment shifts, the star mask, the FWHM cutout
+  * fit, the EPSF grid) are computed on the driver. Epochs are independent
+  * (no cross-epoch state), so a 100 TB run maps epochs across the cluster
+  * and this class orchestrates one of them.
   */
 object EpochPipeline {
 
@@ -73,6 +75,34 @@ object EpochPipeline {
         val fit = GaussianFit.fit(cut.map(_._1), cut.map(_._2), cut.map(_._3))
         if (fit.fwhm > 2.0) fit.fwhm else 0.0 // plausibility guard, core.py:96
     }
+  }
+
+  /** image_mask (core.py:317-330, 338-340) over a star table
+    * `(img_id, star_id, x, y, flux)`, on the driver; returns the indices of
+    * the kept stars in input order. The rules are those of the SQL
+    * operators it replaces, `SpatialJoins.crowdingAnti` keyed by
+    * `star_id` and then `RankTrim.trim` per image:
+    *  - crowding: a star_id is dropped when another star_id lies at
+    *    sqrt(dx² + dy²) strictly under `radius`;
+    *  - trim: an image with more than `minRows` survivors drops its
+    *    `nTrim` first and `nTrim` last by (flux desc, star_id asc), flux
+    *    ordered as Spark SQL orders doubles. */
+  private[pipeline] def maskStars(stars: Seq[(Long, Int, Double, Double, Double)],
+      radius: Double, nTrim: Int, minRows: Int): Seq[Int] = {
+    val grid = new Photometry.PointGrid(stars.map(_._3).toArray,
+      stars.map(_._4).toArray, radius)
+    val crowded = stars.iterator.filter { case (_, id, x, y, _) =>
+      grid.near(x, y).exists { case (j, _, _, _) => stars(j)._2 != id }
+    }.map(_._2).toSet
+    val survivors = stars.indices.filterNot(i => crowded(stars(i)._2))
+    val kept = survivors.groupBy(stars(_)._1).values.flatMap { idx =>
+      if (idx.length <= minRows) idx
+      else idx.sortWith { (a, b) =>
+        val c = compareDoubles(stars(a)._5, stars(b)._5)
+        c > 0 || c == 0 && stars(a)._2 < stars(b)._2
+      }.slice(nTrim, idx.length - nTrim)
+    }.toSet
+    survivors.filter(kept)
   }
 
   /** Run one epoch end to end over long-form pixels (one or more images of
@@ -157,22 +187,22 @@ object EpochPipeline {
     val fwhm = findFwhm(spark, sub, bright)
     if (fwhm == 0.0) return Result("aborted_no_fwhm", 0.0, emptyCatalog(spark))
 
-    // 4. detection + image_mask: crowding exclusion + two-sided rank trim.
-    // The catalog is tiny — checkpoint it so the mask joins and windows
-    // run over stored rows, not the re-derived detection joins.
+    // 4. detection (one frame-kernel pass) + image_mask: the detections
+    // are a few stars per image, so the crowding exclusion and the
+    // two-sided rank trim run on the driver and the masked table goes back
+    // as a local relation
     val detected = Photometry.detectStars(sub, nSigma,
       math.max(math.ceil(fwhm).toInt, 3), Double.MaxValue, 0, 0L, 0L,
-      Some(subStats)).localCheckpoint()
-    val uncrowded = SpatialJoins.crowdingAnti(
-      detected.withColumn("sid", col("star_id")),
-      "sid", "xcentroid", "ycentroid", 5 * fwhm)
-    val masked = RankTrim.trim(uncrowded, Seq(col("img_id")), col("flux"),
-      Seq(col("star_id")), 5, 10)
-
+      Some(subStats))
+    val found = detected.collect()
+    val kept = maskStars(found.map(r => (r.getAs[Long]("img_id"),
+      r.getAs[Int]("star_id"), r.getAs[Double]("xcentroid"),
+      r.getAs[Double]("ycentroid"), r.getAs[Double]("flux"))), 5 * fwhm, 5, 10)
     // guard: diagnostics-only epoch (psf_phot.py:78-82)
-    val maskedPinned = masked.localCheckpoint()
-    if (maskedPinned.count() < minStars || fwhm > maxStarsFwhm)
+    if (kept.length < minStars || fwhm > maxStarsFwhm)
       return Result("diagnostics_only", fwhm, emptyCatalog(spark))
+    val masked = spark.createDataFrame(
+      java.util.Arrays.asList(kept.map(found): _*), detected.schema)
 
     // 5+6. EPSF build from the masked catalog (build_psf(stars_tbl),
     // psf_phot.py:76) + iterative PSF photometry. star_id restarts per
@@ -181,7 +211,7 @@ object EpochPipeline {
     // the measured stars, and every action on the catalog would rerun the
     // whole-image kernel: pin them once.
     val results = Photometry.epsfPhotometry(spark, sub, fwhm, 2, nSigma,
-        maskedPinned, statsOpt = Some(subStats))
+        masked, statsOpt = Some(subStats))
       .withColumn("uid", row_number().over(
         Window.partitionBy(col("img_id"))
           .orderBy(col("iter_detected"), col("star_id"))))
@@ -227,16 +257,22 @@ object EpochPipeline {
     * localCheckpoint blocks — epochs beyond the bound queue and recycle
     * the same workers, keeping peak driver memory and scheduler pressure
     * flat no matter the campaign length. Returns the union of per-epoch
-    * catalogs tagged with epoch_id, plus statuses. */
+    * catalogs tagged with epoch_id, plus statuses.
+    *
+    * `epochIds` lists the epochs to run when the caller already knows
+    * them (an epoch with no pixels then takes the no-FWHM branch); without
+    * it they are the distinct `epochCol` values of `pixels`, a scan of the
+    * whole input. */
   def runEpochs(spark: SparkSession, pixels: DataFrame, epochCol: String,
       width: Int, height: Int, nSigma: Double = 10.0,
       minStars: Int = 3, parallelism: Int = 4,
-      reportDir: Option[String] = None): (Map[Long, String], DataFrame) = {
+      reportDir: Option[String] = None,
+      epochIds: Option[Seq[Long]] = None): (Map[Long, String], DataFrame) = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     require(parallelism >= 1, "parallelism must be positive")
-    val epochs = pixels.select(col(epochCol)).distinct()
-      .collect().map(_.getLong(0)).sorted
+    val epochs = epochIds.map(_.distinct.toArray).getOrElse(
+      pixels.select(col(epochCol)).distinct().collect().map(_.getLong(0))).sorted
     if (epochs.isEmpty)
       return (Map.empty[Long, String],
         emptyCatalog(spark).withColumn("epoch_id", lit(null).cast("long")))

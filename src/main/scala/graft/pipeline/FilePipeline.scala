@@ -34,15 +34,24 @@ object FilePipeline {
       reportDir: Option[String] = None): PipelineResult = {
     val meta = spark.read
       .schema("filename STRING, epoch_id LONG").csv(csvPath)
-    val pixels = Fits.readFits(spark, fitsGlob)
-      .withColumn("filename", element_at(split(col("img_id"), "/"), -1))
+    def basename(path: String) = element_at(split(col(path), "/"), -1)
+    // the epochs come from the file listing joined to the metadata:
+    // binaryFile reads a file's bytes only when `content` is selected, so
+    // this lists the files without decoding any of them
+    val epochIds = CatalogSinks.readBinary(spark, fitsGlob).select(col("path"))
+      .withColumn("filename", basename("path"))
       .join(broadcast(meta), Seq("filename")) // unlisted files drop out
+      .select(col("epoch_id")).distinct()
+      .collect().map(_.getLong(0)).toSeq
+    val pixels = Fits.readFits(spark, fitsGlob)
+      .withColumn("filename", basename("img_id"))
+      .join(broadcast(meta), Seq("filename"))
       .withColumn("img", xxhash64(col("img_id"))) // stable numeric image id
       .select(col("epoch_id"), col("img").as("img_id"), col("y"), col("x"),
         col("v"))
     val (statuses, catalog) =
       EpochPipeline.runEpochs(spark, pixels, "epoch_id", width, height,
-        minStars = minStars, reportDir = reportDir)
+        minStars = minStars, reportDir = reportDir, epochIds = Some(epochIds))
     resultsDir.foreach(dir =>
       CatalogSinks.writePartitioned(catalog, "epoch_id", dir))
     PipelineResult(statuses, catalog)

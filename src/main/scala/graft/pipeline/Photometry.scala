@@ -1,22 +1,29 @@
 package graft.pipeline
 
+import graft.functions.SigmaClippedStats
 import graft.functions.SigmaClippedStats.sigmaClippedStats
-import graft.operators.SpatialJoins
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** The reference pipeline's image-domain operators re-expressed over
   * long-form pixels `(img_id: long, y: long, x: long, v: double)` —
-  * abstraction #1 in SURVEY.md §1. Long form makes every per-pixel
-  * operation a plain projection/aggregate: background stats are a grouped
-  * sigma-clipped aggregate, median combine is `groupBy(y,x)`, np.roll is a
-  * key rewrite, detection is a per-image 3×3 peak kernel. A 4096² frame is
-  * 16.7 M rows — at 100 TB the pixel table partitions by `img_id` and each
-  * stage shuffles by its natural key. Two stages hold a whole image in one
-  * task: the background clip, as one aggregation buffer of its values
-  * (8 B per pixel, 134 MB at 4096²), and the iterative photometry, as a
-  * dense frame (≈ 405 MB at 4096²).
+  * abstraction #1 in SURVEY.md §1. The long-form table is the input and
+  * the relational surface of every operator here; each stage shuffles it
+  * once by its natural key.
+  *
+  * Four stages are frame kernels that hold a whole image in one task: the
+  * background clip, as one aggregation buffer of the image's values (8 B
+  * per pixel plus the clip's sorted copy, ≈ 270 MB at 4096²), and
+  * detection ([[detectStars]]), iterative photometry
+  * ([[iterativePhotometryWithPsf]]) and, through detection, the alignment
+  * of [[alignAndCombine]], each as a dense [[Frame]] (≈ 24 B per
+  * bounding-box cell at peak, ≈ 405 MB at 4096²). A frame whose bounding
+  * box exceeds [[MaxFrameCells]] fails its task with a message naming the
+  * image and its extent. The combine's clipped median shuffles by row and
+  * holds one row of the stack per task, and the star tables, shifts and
+  * EPSF grid are model objects held on the driver (abstraction #5).
   */
 object Photometry {
 
@@ -47,6 +54,15 @@ object Photometry {
       java.util.Arrays.asList(stats.collect(): _*), stats.schema)
   }
 
+  /** Per-image `(bkg_median, bkg_std)` collected to the driver, for the
+    * frame kernels' closures; rows with a null stat are dropped, so their
+    * images emit nothing. */
+  private def statsMap(stats: DataFrame): Map[Long, (Double, Double)] =
+    stats.select(col("img_id"), col("bkg_median"), col("bkg_std"))
+      .collect()
+      .collect { case r if !r.anyNull => r.getLong(0) -> (r.getDouble(1), r.getDouble(2)) }
+      .toMap
+
   /** Global background subtraction (psf_phot.py:69: image −= median). */
   def subtractBackground(pixels: DataFrame): DataFrame =
     pixels.join(broadcast(backgroundStats(pixels)), Seq("img_id"))
@@ -55,20 +71,7 @@ object Photometry {
 
   /** Star detection (DAOStarFinder semantics simplified, core.py:116-146):
     * local maxima above `bkg + nSigma·std` (core.py:143's 10σ default),
-    * then flux-weighted centroid over a (2R+1)² box.
-    *
-    * Plan: the threshold pass scans the pixel table once, joined to the
-    * broadcast per-image stats, and keeps the above-threshold pixels (a
-    * ~1e-5 fraction at 10σ). Those rows shuffle once by `img_id` into
-    * [[peaksOf]], which runs the 3×3 peak test and numbers each image's
-    * peaks in the same pass. The box gather joins the exploded (2R+1)²
-    * peak boxes to the pixel table and folds every shape statistic into
-    * one aggregation. AQE sizes that join at run time: a pixel table under
-    * the broadcast threshold (a 192² frame is) is broadcast whole; at full
-    * frame the pixel side is too large, so the small box side is
-    * broadcast or both sides shuffle by pixel key. Requires boxRadius ≥ 1
-    * (the 3×3 sharpness subset comes from the box). Emits one star row
-    * per image peak: the Generator shape (§2.11). */
+    * then flux-weighted centroid over a (2R+1)² box. */
   def detectStars(pixels: DataFrame, nSigma: Double, boxRadius: Int): DataFrame =
     detectStars(pixels, nSigma, boxRadius, Double.MaxValue, 0, 0L, 0L, None)
 
@@ -76,155 +79,250 @@ object Photometry {
     * `peakMax` rejects saturated peaks (find_stars `peak=100000`,
     * core.py:130-131), and `excludeBorder > 0` with the image extent drops
     * peaks within that many pixels of the edge (`exclude_border=True`,
-    * core.py:144) — both are rules of the peak kernel, applied before the
-    * centroid box join. `precomputedStats` passes in a
-    * backgroundStats frame computed once by the caller — the reference
-    * builds its finder with a FIXED threshold (core.py:439), so repeated
-    * detections over the same image must not re-estimate the
-    * background. */
+    * core.py:144). `precomputedStats` passes in a [[backgroundStats]]
+    * frame computed once by the caller — the reference builds its finder
+    * with a FIXED threshold (core.py:439), so repeated detections over the
+    * same image must not re-estimate the background.
+    *
+    * Plan: the stats are collected to the driver and shipped in the task
+    * closure; the pixels shuffle once by `img_id` and each task loads its
+    * image into a dense [[Frame]] and runs [[detect]] over it, so a call
+    * launches the same few jobs at any star count. An image without a
+    * stats row emits nothing. Emits
+    * `(img_id, star_id, xcentroid, ycentroid, sharpness, roundness, npix,
+    * sky, peak, flux, mag)`, one row per peak: the Generator shape (§2.11).
+    * Pixels are unique per (img_id, y, x).
+    *
+    * Memory: one image per task, ≈ 24 B per bounding-box cell at peak
+    * (16 B per pixel while streaming plus the 8 B dense frame), ≈ 405 MB
+    * for a 4096² frame; a bounding box over [[MaxFrameCells]] fails the
+    * task, naming the image and its extent. */
   def detectStars(pixels: DataFrame, nSigma: Double, boxRadius: Int,
       peakMax: Double, excludeBorder: Int, width: Long, height: Long,
       precomputedStats: Option[DataFrame] = None): DataFrame = {
     val spark = pixels.sparkSession
     import spark.implicits._
-    val stats = broadcast(precomputedStats.getOrElse(backgroundStats(pixels)))
-    // above-threshold pixels: the only pixels that can be peaks OR beat a
-    // peak. Tiny at any real nSigma.
-    val aboveThr = pixels.join(stats, Seq("img_id"))
-      .filter(col("v") > col("bkg_median") + lit(nSigma) * col("bkg_std"))
-      .select(col("img_id"), col("y"), col("x"), col("v"), col("bkg_median"))
-    val peaks = aboveThr.as[(Long, Long, Long, Double, Double)]
+    val stats = statsMap(precomputedStats.getOrElse(backgroundStats(pixels)))
+    pixels.select(col("img_id"), col("y"), col("x"), col("v"))
+      .as[(Long, Long, Long, Double)]
       .groupByKey(_._1)
-      .flatMapGroups((_, rows) =>
-        peaksOf(rows.toArray, peakMax, excludeBorder, width, height))
-      .toDF("img_id", "py", "px", "peak", "bkg_median", "star_id")
-    // ONE box gather per peak serves every remaining statistic: flux,
-    // flux-weighted centroid and npix over the (2R+1)² box; DAOFIND-style
-    // sharpness — (peak − mean of the 8 existing neighbors) / peak — from
-    // the |d|≤1 subset via conditional aggregates; roundness from the
-    // flux-weighted second moments about the centroid (marginal-width
-    // asymmetry, DAOFIND roundness2 analog), folded into the same pass.
-    val boxOffs = array((-boxRadius to boxRadius).map(lit): _*)
-    val box = peaks
-      .withColumn("dy", explode(boxOffs)).withColumn("dx", explode(boxOffs))
-      .select(col("img_id"), col("star_id"), col("py"), col("px"), col("peak"),
-        col("bkg_median"),
-        (col("py") + col("dy")).as("y"), (col("px") + col("dx")).as("x"))
-    val inner = abs(col("y") - col("py")) <= 1 && abs(col("x") - col("px")) <= 1
-    val sw = sum(col("w")); val swx = sum(col("w") * col("x"))
-    val swy = sum(col("w") * col("y"))
-    val sxx = sum(col("w") * col("x") * col("x")) / sw - (swx / sw) * (swx / sw)
-    val syy = sum(col("w") * col("y") * col("y")) / sw - (swy / sw) * (swy / sw)
-    box.join(pixels, Seq("img_id", "y", "x"))
-      .withColumn("w", greatest(col("v") - col("bkg_median"), lit(0.0)))
-      .groupBy(col("img_id"), col("star_id"), col("py"), col("px"))
-      .agg(first(col("peak")).as("peak"), sum(col("w")).as("flux"),
-        (swx / sw).as("xcentroid"), (swy / sw).as("ycentroid"),
-        sum(when(inner, col("v"))).as("s2"),
-        sum(when(inner, 1L)).as("c2"),
-        when(sxx + syy =!= 0.0, (sxx - syy) / (sxx + syy))
-          .otherwise(lit(null)).as("roundness"),
-        count(lit(1)).cast(LongType).as("npix"),
-        first(col("bkg_median")).as("sky"))
-      .withColumn("sharpness",
-        when(col("c2") > 1 && col("peak") =!= 0.0,
-          (col("peak") - (col("s2") - col("peak")) / (col("c2") - 1)) / col("peak"))
-          .otherwise(lit(null)))
-      .withColumn("mag", lit(-2.5) * log10(col("flux")))
-      .select(col("img_id"), col("star_id"), col("xcentroid"), col("ycentroid"),
-        col("sharpness"), col("roundness"), col("npix"), col("sky"),
-        col("peak"), col("flux"), col("mag"))
+      .flatMapGroups((img, rows) => stats.get(img) match {
+        case Some((median, std)) =>
+          detect(Frame.load(img, rows), median, median + nSigma * std,
+              boxRadius, peakMax, excludeBorder, width, height)
+            .iterator.map(d => (img, d.starId, d.xcentroid, d.ycentroid,
+              d.sharpness, d.roundness, d.npix, median, d.peak, d.flux, d.mag))
+        case None => Iterator.empty
+      })
+      .toDF("img_id", "star_id", "xcentroid", "ycentroid", "sharpness",
+        "roundness", "npix", "sky", "peak", "flux", "mag")
   }
 
-  /** The 3×3 peak test over ONE image's above-threshold pixels
-    * `(img_id, y, x, v, bkg_median)`, returning its peaks as
-    * `(img_id, y, x, v, bkg_median, star_id)` numbered 1..n in (y, x)
-    * order.
+  /** One star found by [[detect]]; `None` is SQL NULL. */
+  private[pipeline] final case class Detection(starId: Int, peak: Double,
+      flux: Double, xcentroid: Double, ycentroid: Double,
+      sharpness: Option[Double], roundness: Option[Double], npix: Long,
+      mag: Option[Double])
+
+  /** Detection over ONE image, in memory, with Spark SQL's arithmetic: the
+    * peaks of [[peaksOf]] above `threshold`, numbered 1..n in (y, x) order,
+    * each measured over the existing cells of its (2·boxR+1)² box with
+    * weights w = max(v − `median`, 0):
+    *  - flux Σw, centroid (Σw·x, Σw·y)/Σw, npix = the box's cell count;
+    *  - sharpness (peak − mean of the other existing 3×3 cells) / peak,
+    *    NULL unless the 3×3 box has another cell and peak ≠ 0 (DAOFIND);
+    *  - roundness (sxx − syy)/(sxx + syy) from the flux-weighted second
+    *    moments about the centroid, NULL when sxx + syy = 0;
+    *  - mag −2.5·log10(flux), NULL when flux ≤ 0 (Spark's log10).
+    * Requires boxR ≥ 1 (the 3×3 sharpness subset comes from the box). The
+    * one detection of [[detectStars]] and of each [[photometryKernel]]
+    * round. */
+  private[pipeline] def detect(frame: Frame, median: Double, threshold: Double,
+      boxR: Int, peakMax: Double, excludeBorder: Int, width: Long,
+      height: Long): Array[Detection] = {
+    val v = frame.v
+    peaksOf(frame, threshold, peakMax, excludeBorder, width, height)
+      .zipWithIndex.map { case (p, s) =>
+        val (py, px) = (frame.y(p), frame.x(p))
+        var (sw, swx, swy, swxx, swyy, s2) = (0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
+        var (npix, c2) = (0L, 0L)
+        for (y <- py - boxR to py + boxR; x <- px - boxR to px + boxR) {
+          val i = frame.at(y, x)
+          if (i >= 0) {
+            val w = math.max(v(i) - median, 0.0)
+            sw += w; swx += w * x; swy += w * y
+            swxx += w * x * x; swyy += w * y * y
+            npix += 1
+            if (math.abs(y - py) <= 1 && math.abs(x - px) <= 1) { s2 += v(i); c2 += 1 }
+          }
+        }
+        val peak = v(p)
+        val sxx = swxx / sw - (swx / sw) * (swx / sw)
+        val syy = swyy / sw - (swy / sw) * (swy / sw)
+        Detection(s + 1, peak, sw, swx / sw, swy / sw,
+          if (c2 > 1 && peak != 0.0) Some((peak - (s2 - peak) / (c2 - 1)) / peak) else None,
+          if (sxx + syy != 0.0) Some((sxx - syy) / (sxx + syy)) else None,
+          npix, if (sw <= 0.0) None else Some(-2.5 * StrictMath.log10(sw)))
+      }
+  }
+
+  /** The 3×3 peak test over one image's frame: the cells above
+    * `threshold`, as cell indices in (y, x) order.
     *
-    * A pixel is a peak when no above-threshold pixel in its 3×3
-    * neighbourhood orders before it by (v desc, y asc, x asc), so a
-    * plateau yields one peak at its smallest (y, x). Values compare as
-    * Spark SQL orders doubles (−0.0 equals 0.0, NaN is largest). A
-    * sub-threshold pixel is smaller than every above-threshold one, so
-    * the above-threshold set alone decides the test. Saturated pixels
-    * (v ≥ `peakMax`, find_stars peak=100000, core.py:130-131) and pixels
+    * A cell is a peak when no existing cell in its 3×3 neighbourhood
+    * orders before it by (v desc, y asc, x asc), so a plateau yields one
+    * peak at its smallest (y, x). Values compare as Spark SQL orders
+    * doubles (−0.0 equals 0.0, NaN is largest), the threshold too. A
+    * cell at or under the threshold orders after every cell above it, so
+    * only above-threshold neighbours can veto. Saturated cells
+    * (v ≥ `peakMax`, find_stars peak=100000, core.py:130-131) and cells
     * within `excludeBorder` of the `width`×`height` edge
-    * (exclude_border=True, core.py:144) can veto a neighbour but are
-    * never peaks themselves. */
-  private def peaksOf(px: Array[(Long, Long, Long, Double, Double)],
-      peakMax: Double, excludeBorder: Int, width: Long,
-      height: Long): Array[(Long, Long, Long, Double, Double, Int)] = {
-    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
-    val at = px.iterator.map(p => (p._2, p._3) -> p._4).toMap
-    def eligible(y: Long, x: Long, v: Double): Boolean =
-      compareDoubles(v, peakMax) < 0 && (excludeBorder <= 0 ||
+    * (exclude_border=True, core.py:144) can veto a neighbour but are never
+    * peaks themselves. */
+  private def peaksOf(frame: Frame, threshold: Double, peakMax: Double,
+      excludeBorder: Int, width: Long, height: Long): Array[Int] = {
+    val v = frame.v
+    def eligible(y: Long, x: Long, i: Int): Boolean =
+      compareDoubles(v(i), peakMax) < 0 && (excludeBorder <= 0 ||
         x >= excludeBorder && x < width - excludeBorder &&
         y >= excludeBorder && y < height - excludeBorder)
-    def beats(ny: Long, nx: Long, nv: Double, y: Long, x: Long, v: Double) = {
-      val c = compareDoubles(nv, v)
-      c > 0 || c == 0 && (ny < y || ny == y && nx < x)
+    // row-major cell order is (y, x) order
+    def beats(j: Int, i: Int): Boolean = {
+      val c = compareDoubles(v(j), v(i))
+      c > 0 || c == 0 && j < i
     }
-    def unbeaten(y: Long, x: Long, v: Double): Boolean =
-      (-1 to 1).forall(dy => (-1 to 1).forall(dx =>
-        at.get((y + dy, x + dx)).forall(nv => !beats(y + dy, x + dx, nv, y, x, v))))
-    px.filter { case (_, y, x, v, _) => eligible(y, x, v) && unbeaten(y, x, v) }
-      .sortBy(p => (p._2, p._3))
-      .zipWithIndex
-      .map { case ((img, y, x, v, bkg), i) => (img, y, x, v, bkg, i + 1) }
+    def unbeaten(y: Long, x: Long, i: Int): Boolean =
+      (-1 to 1).forall(dy => (-1 to 1).forall { dx =>
+        val j = frame.at(y + dy, x + dx)
+        j < 0 || !beats(j, i)
+      })
+    val peaks = scala.collection.mutable.ArrayBuilder.make[Int]
+    var i = frame.present.nextSetBit(0)
+    while (i >= 0) {
+      if (compareDoubles(v(i), threshold) > 0) {
+        val (y, x) = (frame.y(i), frame.x(i))
+        if (eligible(y, x, i) && unbeaten(y, x, i)) peaks += i
+      }
+      i = frame.present.nextSetBit(i + 1)
+    }
+    peaks.result()
   }
 
   /** image_combiner (core.py:245-279): detect stars per image, estimate each
     * image's integer shift against the reference frame (nearest-neighbor
     * match → median offset, core.py:148-177 + 203-206), roll the pixel keys
-    * (core.py:209 — a projection, no data movement beyond the final
-    * combine), then per-pixel sigma-clipped median across the stack
-    * (core.py:215-243). `height`/`width` wrap the roll like np.roll.
-    * `stats` passes in the per-image [[backgroundStats]] the caller already
-    * holds, so the detection threshold costs no second clip. */
+    * (core.py:209, np.roll: coordinates wrap modulo `width` and `height`),
+    * then take the per-pixel sigma-clipped median across the stack
+    * (core.py:215-243), as `(y, x, v, n_stack)`. `stats` passes in the
+    * per-image [[backgroundStats]] the caller already holds, so the
+    * detection threshold costs no second clip.
+    *
+    * Plan: [[detectStars]] runs as its frame kernel and its star tables (a
+    * few stars per image, a model object) are collected; [[alignShifts]]
+    * matches them on the driver. The rolled pixels then shuffle once by
+    * `y`, and each task clips every pixel's stack of that row with
+    * [[SigmaClippedStats.clip]] (sigma 2, five rounds), values in `img_id`
+    * order. With no stars anywhere (a cloudy epoch) every shift is 0 and
+    * the combine is the unshifted clipped median.
+    *
+    * Memory: the detection holds one image per task (see [[detectStars]]);
+    * the combine holds one row of the stack, `width` × images values. */
   def alignAndCombine(pixels: DataFrame, width: Int, height: Int,
       nSigma: Double = 10.0, matchRadius: Double = 20.0,
       stats: Option[DataFrame] = None): DataFrame = {
+    val spark = pixels.sparkSession
+    import spark.implicits._
     val bkg = stats.getOrElse(backgroundStats(pixels))
     val stars = detectStars(pixels, nSigma, 3, Double.MaxValue, 0, 0L, 0L,
-      Some(bkg)).localCheckpoint()
-    // no stars anywhere (cloudy epoch): no shift estimation possible —
-    // fall through to an unshifted clipped-median combine, don't crash
-    val refImgOpt = Option(stars.agg(min(col("img_id"))).head().get(0))
-      .map(_.asInstanceOf[Long])
-    if (refImgOpt.isEmpty) {
-      val scs0 = sigmaClippedStats(2.0, 5)
-      return pixels.groupBy(col("y"), col("x"))
-        .agg(scs0(col("v")).as("s"))
-        .select(col("y"), col("x"), col("s.median").as("v"), col("s.n").as("n_stack"))
+        Some(bkg))
+      .select(col("img_id"), col("star_id"), col("xcentroid"), col("ycentroid"))
+      .as[(Long, Int, Double, Double)].collect()
+    val shifts = alignShifts(stars, matchRadius)
+    pixels.select(col("img_id"), col("y"), col("x"), col("v"))
+      .as[(Long, Long, Long, Double)]
+      .map { case (img, y, x, v) =>
+        val (sx, sy) = shifts.getOrElse(img, (0L, 0L))
+        (img, Math.floorMod(y + sy, height.toLong),
+          Math.floorMod(x + sx, width.toLong), v)
+      }
+      .groupByKey(_._2)
+      .flatMapGroups((y, row) => clipStacks(y, row.toArray))
+      .toDF("y", "x", "v", "n_stack")
+  }
+
+  /** Each image's integer (shift_x, shift_y) onto the reference image, the
+    * smallest `img_id` with a star, from `stars` as
+    * `(img_id, star_id, xcentroid, ycentroid)` (calculate_shift,
+    * core.py:148-177 + 203-208), with the rules of the SQL plan it
+    * replaces: each star's nearest reference star strictly within
+    * `matchRadius`, ties broken by (distance, reference star_id); per
+    * image, `rint` of the median of −offset, the two middle values
+    * interpolated as Spark's `percentile` does (0.5·lo + 0.5·hi). Images
+    * with no matched star (and the reference) are absent: their shift is
+    * 0. */
+  private[pipeline] def alignShifts(stars: Seq[(Long, Int, Double, Double)],
+      matchRadius: Double): Map[Long, (Long, Long)] = {
+    if (stars.isEmpty) return Map.empty
+    val refImg = stars.iterator.map(_._1).min
+    val ref = stars.filter(_._1 == refImg).toArray
+    val grid = new PointGrid(ref.map(_._3), ref.map(_._4), matchRadius)
+    def shift(offsets: Seq[Double]): Long = {
+      val s = offsets.sorted
+      val n = s.length
+      Math.rint(if (n % 2 == 1) s(n / 2) else 0.5 * s(n / 2 - 1) + 0.5 * s(n / 2)).toLong
     }
-    val refImg = refImgOpt.get
-    val ref = stars.filter(col("img_id") === refImg)
-      .select(col("star_id").as("ref_id"), col("xcentroid").as("rx"),
-        col("ycentroid").as("ry"))
-    val others = stars.filter(col("img_id") =!= refImg)
-      .withColumn("sid", concat_ws("_", col("img_id"), col("star_id")))
-    // nearest reference star per detected star, then per-image median offset
-    val matched = SpatialJoins.nearestNeighbor(
-      others, "sid", "xcentroid", "ycentroid",
-      ref, "ref_id", "rx", "ry", matchRadius)
-      .join(others.select(col("sid").as("left_id"), col("img_id")), Seq("left_id"))
-    // np.int(np.round(median)) with banker's rounding (core.py:207-208);
-    // Spark's rint builtin IS Math.rint — codegen'd, no UDF. nanvl keeps
-    // the old UDF's NaN→0 (no shift) semantics: under ANSI mode a bare
-    // CAST(NaN AS BIGINT) would throw instead of degrading gracefully
-    val shifts = matched.groupBy(col("img_id"))
-      .agg(expr("CAST(rint(nanvl(median(-dx), 0d)) AS BIGINT)").as("shift_x"),
-        expr("CAST(rint(nanvl(median(-dy), 0d)) AS BIGINT)").as("shift_y"))
-    val rolled = pixels.join(broadcast(shifts), Seq("img_id"), "left_outer")
-      .withColumn("sx", coalesce(col("shift_x"), lit(0L)))
-      .withColumn("sy", coalesce(col("shift_y"), lit(0L)))
-      .select(col("img_id"),
-        pmod(col("y") + col("sy"), lit(height.toLong)).as("y"),
-        pmod(col("x") + col("sx"), lit(width.toLong)).as("x"), col("v"))
-    val scs = sigmaClippedStats(2.0, 5)
-    rolled.groupBy(col("y"), col("x"))
-      .agg(scs(col("v")).as("s"))
-      .select(col("y"), col("x"), col("s.median").as("v"), col("s.n").as("n_stack"))
+    stars.filter(_._1 != refImg).groupBy(_._1).flatMap { case (img, ss) =>
+      val offsets = ss.flatMap { case (_, _, x, y) =>
+        grid.near(x, y).minByOption { case (j, d, _, _) => (d, ref(j)._2) }
+          .map { case (_, _, dx, dy) => (-dx, -dy) }
+      }
+      if (offsets.isEmpty) None
+      else Some(img -> ((shift(offsets.map(_._1)), shift(offsets.map(_._2)))))
+    }
+  }
+
+  /** The clipped median of every pixel stack in one row `y` of the rolled
+    * pixels `(img_id, y, x, v)`: per x, the values in `img_id` order
+    * through [[SigmaClippedStats.clip]] (sigma 2, five rounds), emitted as
+    * `(y, x, median, n)` in x order. */
+  private def clipStacks(y: Long, row: Array[(Long, Long, Long, Double)])
+      : Iterator[(Long, Long, Double, Long)] = {
+    java.util.Arrays.sort(row, (a: (Long, Long, Long, Double), b: (Long, Long, Long, Double)) =>
+      if (a._3 != b._3) java.lang.Long.compare(a._3, b._3)
+      else java.lang.Long.compare(a._1, b._1))
+    val vals = new Array[Double](row.length)
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double, Long)]
+    var lo = 0
+    while (lo < row.length) {
+      var hi = lo
+      while (hi < row.length && row(hi)._3 == row(lo)._3) {
+        vals(hi - lo) = row(hi)._4; hi += 1
+      }
+      val s = SigmaClippedStats.clip(vals, hi - lo, 2.0, 5)
+      out += ((y, row(lo)._3, s.median, s.n))
+      lo = hi
+    }
+    out.iterator
+  }
+
+  /** Points bucketed into square cells of side `r`, for the strict
+    * within-`r` probes of the alignment match and the crowding mask (the
+    * grid of [[graft.operators.SpatialJoins]], on the driver). */
+  private[pipeline] final class PointGrid(xs: Array[Double], ys: Array[Double],
+      r: Double) {
+    private def cell(c: Double): Long = math.floor(c / r).toLong
+    private val cells = xs.indices.groupBy(i => (cell(xs(i)), cell(ys(i))))
+    /** Every point j with dist = sqrt(dx² + dy²) < r, as (j, dist, dx, dy)
+      * where (dx, dy) = (x, y) − point j. */
+    def near(x: Double, y: Double): Iterator[(Int, Double, Double, Double)] =
+      for {
+        cy <- (cell(y) - 1 to cell(y) + 1).iterator
+        cx <- (cell(x) - 1 to cell(x) + 1).iterator
+        j <- cells.getOrElse((cx, cy), Nil).iterator
+        (dx, dy) = (x - xs(j), y - ys(j))
+        d = math.sqrt(dx * dx + dy * dy)
+        if d < r
+      } yield (j, d, dx, dy)
   }
 
   /** Per-star annulus background (bkg_sub, core.py:352-381): sigma-clipped
@@ -525,12 +623,7 @@ object Photometry {
       psf: PsfModel, boxR: Int, nIters: Int, nSigma: Double,
       statsOpt: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
-    val stats: Map[Long, (Double, Double)] =
-      statsOpt.getOrElse(backgroundStats(pixels))
-        .select(col("img_id"), col("bkg_median"), col("bkg_std"))
-        .collect()
-        .collect { case r if !r.anyNull => r.getLong(0) -> (r.getDouble(1), r.getDouble(2)) }
-        .toMap
+    val stats = statsMap(statsOpt.getOrElse(backgroundStats(pixels)))
     pixels.select(col("img_id"), col("y"), col("x"), col("v"))
       .as[(Long, Long, Long, Double)]
       .groupByKey(_._1)
@@ -544,8 +637,9 @@ object Photometry {
         "iter_detected")
   }
 
-  /** The largest bounding box, in cells, that one photometry task holds
-    * densely (2²⁵: 8192 × 4096, or 2× a 4096² frame). */
+  /** The largest bounding box, in cells, that one frame-kernel task
+    * (detection, photometry) holds densely (2²⁵: 8192 × 4096, or 2× a
+    * 4096² frame). */
   val MaxFrameCells: Long = 1L << 25
 
   /** One image held densely over its bounding box: `v` row-major from
@@ -584,7 +678,7 @@ object Photometry {
           val (h, w) = (maxY - minY + 1, maxX - minX + 1)
           h <= MaxFrameCells && w <= MaxFrameCells && h * w <= MaxFrameCells
         },
-        s"photometry: image $img spans y $minY..$maxY, x $minX..$maxX " +
+        s"frame kernel: image $img spans y $minY..$maxY, x $minX..$maxX " +
           s"(${maxY - minY + 1} × ${maxX - minX + 1} cells), over the " +
           s"$MaxFrameCells-cell limit of one task's frame")
       rows.foreach { case (_, y, x, v) =>
@@ -620,9 +714,8 @@ object Photometry {
 
   /** Iteratively-subtracted PSF photometry of ONE image (do_photometry,
     * core.py:416-452), in memory, with Spark SQL's rounding; per round,
-    *  - detect: pixels with v > `threshold` → [[peaksOf]] → flux-weighted
-    *    centroid over the (2·boxR+1)² box of existing pixels, weights
-    *    max(v − `median`, 0);
+    *  - detect: [[detect]] above `threshold` with a (2·boxR+1)² box, no
+    *    saturation or border veto; its centroids seed the fits;
     *  - group: [[linkGroups]] within boxR (DAOGroup, core.py:440);
     *  - fit: [[fitGroup]] over the union of the members' boxes around
     *    their rounded centroids, each pixel once;
@@ -648,27 +741,12 @@ object Photometry {
     var iter = 1
     var detected = true
     while (iter <= nIters && detected) {
-      val above = scala.collection.mutable.ArrayBuffer
-        .empty[(Long, Long, Long, Double, Double)]
-      var i = frame.present.nextSetBit(0)
-      while (i >= 0) {
-        if (v(i) > threshold) above += ((img, frame.y(i), frame.x(i), v(i), median))
-        i = frame.present.nextSetBit(i + 1)
-      }
-      val peaks = peaksOf(above.toArray, Double.MaxValue, 0, 0L, 0L)
-      detected = peaks.nonEmpty
+      val found = detect(frame, median, threshold, boxR, Double.MaxValue, 0, 0L, 0L)
+      detected = found.nonEmpty
       if (detected) {
-        val k = peaks.length
-        val (cx, cy) = (new Array[Double](k), new Array[Double](k))
-        for (s <- 0 until k) {
-          var (sw, swx, swy) = (0.0, 0.0, 0.0)
-          box(peaks(s)._2, peaks(s)._3) { i =>
-            val w = math.max(v(i) - median, 0.0)
-            sw += w; swx += w * frame.x(i); swy += w * frame.y(i)
-          }
-          cx(s) = swx / sw; cy(s) = swy / sw
-        }
-        // peaks are numbered 1..k in array order, so star_id = index + 1
+        val k = found.length
+        val (cx, cy) = (found.map(_.xcentroid), found.map(_.ycentroid))
+        // stars are numbered 1..k in array order, so star_id = index + 1
         val root = linkGroups(cx, cy, boxR.toDouble * boxR.toDouble)
         val fits = new Array[(Double, Double, Double)](k)
         for ((r, members) <- (0 until k).groupBy(root).toSeq.sortBy(_._1)) {

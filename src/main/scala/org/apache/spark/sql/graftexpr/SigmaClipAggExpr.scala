@@ -10,7 +10,9 @@ import org.apache.spark.sql.types._
 
 /** Growable primitive buffer for the sigma-clip aggregate: no boxing, and
   * (de)serialization is a flat little-endian double block instead of Kryo
-  * object graphs. */
+  * object graphs. Row-by-row `add` grows by doubling; `addAll` of a
+  * partial grows to exactly the merged size, since merges come few and
+  * large (a whole image's values at 4096²). */
 final class DoubleBuf(var arr: Array[Double], var n: Int) {
   def add(v: Double): Unit = {
     if (n == arr.length)
@@ -18,8 +20,7 @@ final class DoubleBuf(var arr: Array[Double], var n: Int) {
     arr(n) = v; n += 1
   }
   def addAll(o: DoubleBuf): Unit = {
-    if (n + o.n > arr.length)
-      arr = java.util.Arrays.copyOf(arr, math.max(n + o.n, arr.length * 2))
+    if (n + o.n > arr.length) arr = java.util.Arrays.copyOf(arr, n + o.n)
     System.arraycopy(o.arr, 0, arr, n, o.n); n += o.n
   }
 }
@@ -59,9 +60,12 @@ case class SigmaClipAggExpr(
     buffer
   }
 
-  override def merge(buffer: DoubleBuf, other: DoubleBuf): DoubleBuf = {
-    buffer.addAll(other); buffer
-  }
+  /** An empty buffer adopts `other` instead of copying it: `other` is a
+    * partial freshly deserialized for this merge, so nothing else holds
+    * it. */
+  override def merge(buffer: DoubleBuf, other: DoubleBuf): DoubleBuf =
+    if (buffer.n == 0) other
+    else { buffer.addAll(other); buffer }
 
   override def eval(buffer: DoubleBuf): Any = {
     val s = graft.functions.SigmaClippedStats.clip(buffer.arr, buffer.n, sigma, maxIters)

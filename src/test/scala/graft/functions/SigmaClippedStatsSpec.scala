@@ -177,6 +177,35 @@ class SigmaClipFastPathSpec extends SparkSpec {
     }
   }
 
+  test("merging partials sizes the buffer exactly; clip outputs unchanged") {
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.graftexpr.{DoubleBuf, SigmaClipAggExpr}
+    import org.apache.spark.sql.types.DoubleType
+    val agg = SigmaClipAggExpr(BoundReference(0, DoubleType, nullable = true), 2.0, 5)
+    val rnd = new scala.util.Random(23)
+    val vs = Array.fill(1000)(rnd.nextGaussian() * 5 + (if (rnd.nextInt(50) == 0) 400 else 0))
+    // a partial as the final aggregation sees it: serialized, then read back
+    def partial(from: Int, until: Int): DoubleBuf = {
+      val b = agg.createAggregationBuffer()
+      vs.slice(from, until).foreach(b.add)
+      agg.deserialize(agg.serialize(b))
+    }
+    val one = agg.merge(agg.createAggregationBuffer(), partial(0, 1000))
+    assert(one.n === 1000 && one.arr.length === 1000)
+    val two = agg.merge(agg.merge(agg.createAggregationBuffer(), partial(0, 600)),
+      partial(600, 1000))
+    assert(two.n === 1000 && two.arr.length === 1000)
+    def bits(s: ClipStats) = Seq(s.n.toDouble, s.mean, s.median, s.std, s.sum)
+      .map(java.lang.Double.doubleToRawLongBits)
+    val want = bits(SigmaClippedStats.clip(vs, 2.0, 5))
+    Seq(one, two).foreach { b =>
+      assert(bits(SigmaClippedStats.clip(b.arr, b.n, 2.0, 5)) === want)
+      val row = agg.eval(b).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
+      assert(Seq(row.getLong(0).toDouble, row.getDouble(1), row.getDouble(2),
+        row.getDouble(3), row.getDouble(4)).map(java.lang.Double.doubleToRawLongBits) === want)
+    }
+  }
+
   test("empty-input and null handling match (NaN sentinel stats)") {
     val df = Seq((1, Some(1.0)), (1, None), (2, None))
       .toDF("k", "v")

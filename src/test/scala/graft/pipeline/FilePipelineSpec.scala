@@ -44,13 +44,15 @@ class FilePipelineSpec extends SparkSpec {
   test("metadata CSV + FITS files to per-epoch partitioned catalogs") {
     val dir = Files.createTempDirectory("graft-filepipe")
     // epoch 1: two dithered frames; epoch 2: starless (abort branch);
-    // a third unlisted file must be ignored
+    // a third unlisted file must be ignored, and listed files that are
+    // missing must neither fail the run nor start an epoch of their own
     Files.write(dir.resolve("e1a.fits"), fits(1, (0, 0), starless = false))
     Files.write(dir.resolve("e1b.fits"), fits(2, (1, -1), starless = false))
     Files.write(dir.resolve("e2a.fits"), fits(3, (0, 0), starless = true))
     Files.write(dir.resolve("ignored.fits"), fits(4, (0, 0), starless = false))
     Files.write(dir.resolve("meta.csv"),
-      "e1a.fits,1\ne1b.fits,1\ne2a.fits,2\n".getBytes("US-ASCII"))
+      "e1a.fits,1\ne1b.fits,1\ne1c.fits,1\ne2a.fits,2\ne3a.fits,3\n"
+        .getBytes("US-ASCII"))
     val out = dir.resolve("results").toString
 
     val reports = java.nio.file.Files.createTempDirectory("graft-fp-reports")
@@ -76,5 +78,21 @@ class FilePipelineSpec extends SparkSpec {
     val back = spark.read.parquet(out)
     assert(back.filter($"epoch_id" === 1L).count() >= planted.length)
     assert(back.filter($"epoch_id" === 2L).count() === 0L)
+  }
+
+  test("listing the FITS files for their epochs reads no file content") {
+    val dir = Files.createTempDirectory("graft-filepipe-list")
+    Files.write(dir.resolve("big.fits"), fits(1, (0, 0), starless = false))
+    val glob = dir.toString + "/*.fits"
+    val key = "spark.sql.sources.binaryFile.maxLength"
+    // a file over binaryFile's length limit fails any read of `content`,
+    // so the path-only listing passing proves it reads no bytes
+    spark.conf.set(key, "100")
+    try {
+      assert(graft.sources.CatalogSinks.readBinary(spark, glob).select("path")
+        .collect().length === 1)
+      intercept[Exception](graft.sources.CatalogSinks.readBinary(spark, glob)
+        .select("content").collect())
+    } finally spark.conf.unset(key)
   }
 }
