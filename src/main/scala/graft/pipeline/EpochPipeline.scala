@@ -1,41 +1,71 @@
 package graft.pipeline
 
+import graft.functions.SigmaClippedStats
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The reference's full per-epoch pipeline (psf_phot.py:9-98) composed from
   * the engine's operators — entry point 1 of SURVEY.md §3.1:
   *
   *   combine → background → FWHM → detect → mask (crowd + trim) →
-  *   annulus → EPSF → photometry → WCS → catalog
+  *   EPSF → photometry → annulus → WCS → catalog
   *
   * with the reference's guard branches: epoch aborted when the FWHM solve
   * fails (psf_phot.py:53-55), diagnostics-only when too few stars or the
   * FWHM is implausible (psf_phot.py:78-82), and null sky coordinates when
   * the WCS solve fails (psf_phot.py:95-98).
   *
-  * The pixels are processed distributed; the small model objects (per-image
-  * stats, star tables, alignment shifts, the star mask, the FWHM cutout
-  * fit, the EPSF grid) are computed on the driver. Epochs are independent
-  * (no cross-epoch state), so a 100 TB run maps epochs across the cluster
-  * and this class orchestrates one of them.
+  * [[run]] is two distributed phases and a driver tail:
+  *  - the combine: per-image stats, the alignment's detection and the
+  *    per-row clipped median, each distributed over the input images
+  *    ([[Photometry.alignAndCombine]]); a one-image epoch is its own
+  *    combined frame;
+  *  - the frame kernel: the combined frame shuffles once, by its image id,
+  *    into ONE task that runs every step after the combine in memory
+  *    ([[epochKernel]]) and returns the epoch's status, FWHM and measured
+  *    stars as one row;
+  *  - on the driver: that row's stars in flux-descending order as a local
+  *    relation, then the WCS columns and magnitudes.
+  *
+  * Memory of the kernel task: the combined frame's values and their
+  * residual, 16 B per bounding-box cell plus a presence bit, after a load
+  * and a background clip that peak at 24.2 B per cell (≈ 405 MB at 4096²);
+  * a frame over [[Photometry.MaxFrameCells]] fails, naming the image.
+  * Epochs are independent (no cross-epoch state), so a campaign maps
+  * epochs across the cluster ([[runEpochs]]).
   */
 object EpochPipeline {
 
   final case class Result(status: String, fwhm: Double, catalog: DataFrame)
 
+  /** One measured star of the epoch kernel; `annulus_bkg` is NULL when no
+    * pixel lies in its ring. */
+  private[pipeline] final case class CatalogStar(star_id: Int, group_id: Int,
+      xcentroid: Double, ycentroid: Double, flux: Double, iter_detected: Int,
+      annulus_bkg: Option[Double])
+
+  /** What the epoch kernel returns: the guard branch taken, the FWHM (0 when
+    * aborted) and the measured stars (empty unless `ok`). */
+  private[pipeline] final case class Outcome(status: String, fwhm: Double,
+      stars: Seq[CatalogStar])
+
+  // find_fwhm's search limits (core.py:72-110)
+  private val SatLimit = 50000.0
+  private val MinPeak = 1000.0
+  private val MinSeparation = 8.0
+  private val MaxTries = 100
+  private val CutoutRadius = 8
+
   /** FWHM estimation (find_fwhm, core.py:52-114): pick the brightest
-    * unsaturated star — iterative argmax with suppression (core.py:72-105:
-    * saturated peaks ≥ satLimit are skipped, stars dimmer than minPeak
-    * abandon the search, bounded tries) — then LSQ-fit a 2-D Gaussian to
-    * its cutout. Greedy selection runs on the (small) star list; the pixel
-    * cutout is gathered by an exact-key box join. */
+    * unsaturated star ([[fwhmStar]]) among the `maxTries` brightest rows
+    * of `stars` by (peak desc, y, x), then LSQ-fit a 2-D Gaussian to its
+    * cutout ([[cutoutFwhm]]). The candidates are collected to the driver;
+    * the pixel cutout is gathered by a filter over `pixels`. */
   def findFwhm(spark: SparkSession, pixels: DataFrame, stars: DataFrame,
-      satLimit: Double = 50000.0, minPeak: Double = 1000.0,
-      minSeparation: Double = 8.0, maxTries: Int = 100,
-      cutoutRadius: Int = 8): Double = {
+      satLimit: Double = SatLimit, minPeak: Double = MinPeak,
+      minSeparation: Double = MinSeparation, maxTries: Int = MaxTries,
+      cutoutRadius: Int = CutoutRadius): Double = {
     import spark.implicits._
     val cands = stars
       .orderBy(col("peak").desc, col("ycentroid"), col("xcentroid"))
@@ -43,26 +73,7 @@ object EpochPipeline {
       .limit(maxTries)
       .as[(Long, Double, Double, Double)]
       .collect() // ≤ maxTries rows — the reference's bounded search
-    // greedy walk in peak order: saturated stars are suppressed (their
-    // neighborhood is excluded, like the reference's zeroed search box);
-    // the walk abandons once peaks drop below minPeak (core.py:110).
-    val suppressed = scala.collection.mutable.ArrayBuffer[(Double, Double)]()
-    var pick: Option[(Long, Double, Double, Double)] = None
-    val it = cands.iterator
-    var abandoned = false
-    while (pick.isEmpty && !abandoned && it.hasNext) {
-      val c = it.next()
-      if (c._4 < minPeak) abandoned = true
-      else if (c._4 >= satLimit) suppressed += ((c._2, c._3))
-      else {
-        val clear = suppressed.forall { case (tx, ty) =>
-          val dx = c._2 - tx; val dy = c._3 - ty
-          dx * dx + dy * dy >= minSeparation * minSeparation
-        }
-        if (clear) pick = Some(c)
-      }
-    }
-    pick match {
+    fwhmStar(cands, satLimit, minPeak, minSeparation) match {
       case None => 0.0 // sentinel: no usable star (core.py:107-113)
       case Some((img, xc, yc, _)) =>
         val cut = pixels
@@ -72,9 +83,39 @@ object EpochPipeline {
           .select(col("x").cast("double"), col("y").cast("double"), col("v"))
           .as[(Double, Double, Double)]
           .collect()
-        val fit = GaussianFit.fit(cut.map(_._1), cut.map(_._2), cut.map(_._3))
-        if (fit.fwhm > 2.0) fit.fwhm else 0.0 // plausibility guard, core.py:96
+        cutoutFwhm(cut.map(_._1), cut.map(_._2), cut.map(_._3))
     }
+  }
+
+  /** find_fwhm's greedy walk (core.py:72-110) over candidates
+    * `(img_id, x, y, peak)` in search order: saturated stars (peak ≥
+    * `satLimit`) are suppressed, and so is any later candidate within
+    * `minSeparation` of one (the reference zeroes their search box); the
+    * walk abandons once a peak drops below `minPeak`. Returns the first
+    * clear candidate. */
+  private[pipeline] def fwhmStar(cands: Seq[(Long, Double, Double, Double)],
+      satLimit: Double, minPeak: Double,
+      minSeparation: Double): Option[(Long, Double, Double, Double)] = {
+    val suppressed = scala.collection.mutable.ArrayBuffer[(Double, Double)]()
+    val it = cands.iterator
+    while (it.hasNext) {
+      val c = it.next()
+      if (c._4 < minPeak) return None
+      else if (c._4 >= satLimit) suppressed += ((c._2, c._3))
+      else if (suppressed.forall { case (tx, ty) =>
+          val dx = c._2 - tx; val dy = c._3 - ty
+          dx * dx + dy * dy >= minSeparation * minSeparation
+        }) return Some(c)
+    }
+    None
+  }
+
+  /** The FWHM of a 2-D Gaussian fit to a cutout, or 0 when the fit fails
+    * or is implausibly narrow (≤ 2 px, core.py:96). */
+  private[pipeline] def cutoutFwhm(xs: Array[Double], ys: Array[Double],
+      vs: Array[Double]): Double = {
+    val fit = GaussianFit.fit(xs, ys, vs)
+    if (fit.fwhm > 2.0) fit.fwhm else 0.0
   }
 
   /** image_mask (core.py:317-330, 338-340) over a star table
@@ -127,11 +168,11 @@ object EpochPipeline {
       reportPath: Option[String] = None): Result = {
     import spark.implicits._
 
-    // every stage makes multiple passes over the epoch's pixels (detection
-    // scans, box joins, the combine) — materialize the input once so those
-    // passes read stored blocks instead of recomputing the source lineage
-    // (pinOnce: a caller handing in an already-checkpointed frame — e.g.
-    // the shared rendered-field intermediate — skips the redundant copy)
+    // the stats, the alignment's detection and the combine each read the
+    // epoch's pixels: materialize the input once so those passes read
+    // stored blocks instead of recomputing the source lineage (pinOnce: a
+    // caller handing in an already-checkpointed frame — e.g. the shared
+    // rendered-field intermediate — skips the redundant copy)
     val pinned = graft.operators.Scale.pinOnce(pixels)
 
     reportPath.foreach { p =>
@@ -139,114 +180,144 @@ object EpochPipeline {
         graft.sources.Pdf.frameImages(pinned, width, height))
     }
 
-    // 1. per-image stats (one grouped pass, collected by backgroundStats)
-    // double as the image census: the stats row count IS the image count,
-    // read from the local relation without a job
+    // 1. the combine. The per-image stats (one grouped pass, collected by
+    // backgroundStats) feed the alignment's detection and double as the
+    // image census: their row count IS the image count, read from the
+    // local relation without a job. A one-image epoch is its own combine.
     val pixStats = Photometry.backgroundStats(pinned)
-    val nImages = pixStats.collect().length.toLong
-    // the combine feeds the stats, the subtraction and the annulus gather:
-    // pin it so those three reads do not each redo alignment and median
     val combined =
-      if (nImages > 1)
+      if (pixStats.collect().length > 1)
         Photometry.alignAndCombine(pinned, width, height, nSigma,
-            stats = Some(pixStats))
-          .select(lit(0L).as("img_id"), col("y"), col("x"), col("v"))
-          .localCheckpoint()
-      else pinned.select(lit(0L).as("img_id"), col("y"), col("x"), col("v"))
+          stats = Some(pixStats))
+      else pinned
 
-    // 2. global background subtraction. One stats pass serves both the
-    // subtraction and every later detection threshold: sigma clipping is
-    // shift-invariant (subtracting the median shifts mean and median by
-    // the same constant and keeps the survivor set), so the subtracted
-    // image's stats are the combined image's, re-centered at zero — no
-    // second clip. A single-image epoch is its own combine, so its stats
-    // are the already-computed per-image row, relabeled. Either way the
-    // stats are a local relation, so their five consumers below never
-    // re-run the aggregate.
-    val baseStats =
-      if (nImages > 1) Photometry.backgroundStats(combined)
-      else pixStats.select(lit(0L).as("img_id"), col("bkg_mean"),
-        col("bkg_median"), col("bkg_std"))
-    val sub = combined.join(broadcast(baseStats), Seq("img_id"))
-      .select(col("img_id"), col("y"), col("x"),
-        (col("v") - col("bkg_median")).as("v"))
-      .localCheckpoint()
-    val subStats = baseStats.select(col("img_id"),
-      (col("bkg_mean") - col("bkg_median")).as("bkg_mean"),
-      lit(0.0).as("bkg_median"), col("bkg_std"))
+    // 2. every step after the combine, in one task over the combined frame;
+    // an epoch without pixels has no frame and takes the no-FWHM branch
+    val outcome = combined
+      .select(lit(0L).as("img_id"), col("y"), col("x"), col("v"))
+      .as[(Long, Long, Long, Double)]
+      .groupByKey(_._1)
+      .flatMapGroups((img, rows) => Iterator.single(epochKernel(
+        Photometry.Frame.load(img, rows), nSigma, minStars, maxStarsFwhm)))
+      .collect()
+      .headOption.getOrElse(Outcome("aborted_no_fwhm", 0.0, Nil))
+    if (outcome.status != "ok")
+      return Result(outcome.status, outcome.fwhm, emptyCatalog(spark))
 
-    // 3. FWHM from the brightest clean star; abort epoch on failure. The
-    // candidate list is the above-threshold pixels themselves — the
-    // reference's search is an argmax walk over the image (np.max +
-    // np.where, core.py:72-76), not a detection pass, so feeding peak
-    // pixels directly matches its semantics and skips a detection chain.
-    val bright = sub.join(broadcast(subStats), Seq("img_id"))
-      .filter(col("v") > col("bkg_median") + lit(nSigma) * col("bkg_std"))
-      .select(col("img_id"), col("x").cast("double").as("xcentroid"),
-        col("y").cast("double").as("ycentroid"), col("v").as("peak"))
-    val fwhm = findFwhm(spark, sub, bright)
-    if (fwhm == 0.0) return Result("aborted_no_fwhm", 0.0, emptyCatalog(spark))
-
-    // 4. detection (one frame-kernel pass) + image_mask: the detections
-    // are a few stars per image, so the crowding exclusion and the
-    // two-sided rank trim run on the driver and the masked table goes back
-    // as a local relation
-    val detected = Photometry.detectStars(sub, nSigma,
-      math.max(math.ceil(fwhm).toInt, 3), Double.MaxValue, 0, 0L, 0L,
-      Some(subStats))
-    val found = detected.collect()
-    val kept = maskStars(found.map(r => (r.getAs[Long]("img_id"),
-      r.getAs[Int]("star_id"), r.getAs[Double]("xcentroid"),
-      r.getAs[Double]("ycentroid"), r.getAs[Double]("flux"))), 5 * fwhm, 5, 10)
-    // guard: diagnostics-only epoch (psf_phot.py:78-82)
-    if (kept.length < minStars || fwhm > maxStarsFwhm)
-      return Result("diagnostics_only", fwhm, emptyCatalog(spark))
-    val masked = spark.createDataFrame(
-      java.util.Arrays.asList(kept.map(found): _*), detected.schema)
-
-    // 5+6. EPSF build from the masked catalog (build_psf(stars_tbl),
-    // psf_phot.py:76) + iterative PSF photometry. star_id restarts per
-    // photometry iteration, so give every measured star a unique key
-    // before anything joins on it. The annulus and the catalog both read
-    // the measured stars, and every action on the catalog would rerun the
-    // whole-image kernel: pin them once.
-    val results = Photometry.epsfPhotometry(spark, sub, fwhm, 2, nSigma,
-        masked, statsOpt = Some(subStats))
-      .withColumn("uid", row_number().over(
-        Window.partitionBy(col("img_id"))
-          .orderBy(col("iter_detected"), col("star_id"))))
-      .localCheckpoint()
-
-    // 7. annulus background at the MEASURED positions (not the earlier
-    // detection pass — its star_ids are a different numbering)
-    val photStars = results.select(col("img_id"), col("uid").as("star_id"),
-      col("x_fit").as("xcentroid"), col("y_fit").as("ycentroid"))
-    val annulus = Photometry.annulusBackground(combined, photStars,
-      2 * fwhm, 3 * fwhm)
-
-    // 8. WCS enrichment (or null sky coordinates when no solver)
-    val withStarIds = results
-      .withColumnRenamed("x_fit", "xcentroid")
-      .withColumnRenamed("y_fit", "ycentroid")
-      .withColumnRenamed("flux_fit", "flux")
+    // 3. WCS enrichment (or null sky coordinates when no solver) and the
+    // catalog — positive-flux magnitudes, flux-desc order (write_csv) —
+    // over the measured stars as a local relation. The stars are sorted
+    // here, since a local relation keeps its row order through filters and
+    // projections, and a Sort would cost a sampling job and a shuffle in
+    // every consumer; the solver's join does not keep it, so that branch
+    // sorts again.
+    val measured = outcome.stars
+      .sortWith((a, b) => compareDoubles(a.flux, b.flux) > 0)
+      .toDF().withColumn("img_id", lit(0L))
     val enriched = wcsSolver match {
-      case Some(sv) => WcsEnrichment.enrich(spark, withStarIds, sv)
-      case None => withStarIds
+      case Some(sv) => WcsEnrichment.enrich(spark, measured, sv)
+        .orderBy(col("flux").desc)
+      case None => measured
         .withColumn("ra", lit(null).cast("double"))
         .withColumn("dec", lit(null).cast("double"))
     }
-
-    // 9. catalog: positive-flux magnitudes, flux-desc order (write_csv)
     val catalog = enriched
-      .join(annulus.select(col("star_id").as("ann_star"), col("annulus_bkg")),
-        col("uid") === col("ann_star"), "left_outer")
       .filter(col("flux") > 0)
       .withColumn("mag", lit(-2.5) * log10(col("flux")))
       .select(col("img_id"), col("star_id"), col("group_id"),
         col("xcentroid"), col("ycentroid"), col("flux"), col("mag"),
         col("iter_detected"), col("annulus_bkg"), col("ra"), col("dec"))
-      .orderBy(col("flux").desc)
-    Result("ok", fwhm, catalog)
+    Result("ok", outcome.fwhm, catalog)
+  }
+
+  /** Every step of the epoch after the combine, over the combined `frame`
+    * in memory, with the rules of the DataFrame operators that the
+    * registered queries use:
+    *  1. background: [[SigmaClippedStats.clip]] (σ 2, five rounds) of the
+    *     frame's values; the residual is v − median, and the detection
+    *     threshold nSigma·std above it (psf_phot.py:68-69);
+    *  2. FWHM ([[findFwhm]]): the above-threshold cells by (peak desc, y,
+    *     x), the first `MaxTries` through [[fwhmStar]], and a Gaussian fit
+    *     to the residual cutout of the pick ([[cutoutFwhm]]); 0 aborts;
+    *  3. [[Photometry.detect]] with a box of max(⌈fwhm⌉, 3), then
+    *     [[maskStars]] at radius 5·fwhm; too few stars or a FWHM over
+    *     `maxStarsFwhm` is diagnostics-only;
+    *  4. the EPSF of the masked stars ([[Photometry.epsfGrid]], as
+    *     [[Photometry.buildEpsfIterative]]), or the Gaussian of the FWHM
+    *     when it is degenerate;
+    *  5. two rounds of [[Photometry.photometryKernel]] over the residual,
+    *     as [[Photometry.iterativePhotometryWithPsf]];
+    *  6. per measured star in (iter_detected, star_id) order, the annulus
+    *     median of the ORIGINAL values in 2·fwhm ≤ d < 3·fwhm
+    *     ([[Photometry.annulusOf]], as [[Photometry.annulusBackground]]).
+    *
+    * Memory: the frame's values stay for the annulus and one residual
+    * array is allocated after the clip, so the steady state is 16 B per
+    * cell plus the presence bit. The clip holds the pixels' values and a
+    * sorted copy next to the frame, at most 24 B per cell, under the
+    * 24.2 B of [[Photometry.Frame.load]]. */
+  private[pipeline] def epochKernel(frame: Photometry.Frame, nSigma: Double,
+      minStars: Int, maxStarsFwhm: Double): Outcome = {
+    import Photometry.Frame
+    val (v, present) = (frame.v, frame.present)
+    val values = new Array[Double](present.cardinality)
+    var (i, k) = (present.nextSetBit(0), 0)
+    while (i >= 0) { values(k) = v(i); k += 1; i = present.nextSetBit(i + 1) }
+    val bkg = SigmaClippedStats.clip(values, 2.0, 5)
+    val res = new Array[Double](v.length)
+    i = present.nextSetBit(0)
+    while (i >= 0) { res(i) = v(i) - bkg.median; i = present.nextSetBit(i + 1) }
+    val sub = new Frame(frame.img, frame.y0, frame.x0, frame.height, frame.width,
+      res, present)
+    val threshold = 0.0 + nSigma * bkg.std
+
+    // FWHM: the reference's argmax walk over the image (np.max + np.where,
+    // core.py:72-76) runs over the above-threshold cells themselves
+    val above = scala.collection.mutable.ArrayBuilder.make[Int]
+    i = present.nextSetBit(0)
+    while (i >= 0) {
+      if (compareDoubles(res(i), threshold) > 0) above += i
+      i = present.nextSetBit(i + 1)
+    }
+    val cands = above.result()
+      .sortWith { (a, b) =>
+        val c = compareDoubles(res(a), res(b))
+        c > 0 || c == 0 && a < b // row-major cell order is (y, x) order
+      }
+      .take(MaxTries)
+      .map(c => (frame.img, sub.x(c).toDouble, sub.y(c).toDouble, res(c)))
+    val fwhm = fwhmStar(cands, SatLimit, MinPeak, MinSeparation) match {
+      case None => 0.0
+      case Some((_, xc, yc, _)) =>
+        val cut = for {
+          y <- math.round(yc) - CutoutRadius to math.round(yc) + CutoutRadius
+          x <- math.round(xc) - CutoutRadius to math.round(xc) + CutoutRadius
+          c = sub.at(y, x) if c >= 0
+        } yield (x.toDouble, y.toDouble, res(c))
+        cutoutFwhm(cut.map(_._1).toArray, cut.map(_._2).toArray,
+          cut.map(_._3).toArray)
+    }
+    if (fwhm == 0.0) return Outcome("aborted_no_fwhm", 0.0, Nil)
+
+    val found = Photometry.detect(sub, 0.0, threshold,
+      math.max(math.ceil(fwhm).toInt, 3), Double.MaxValue, 0, 0L, 0L)
+    val kept = maskStars(found.toSeq.map(d =>
+      (frame.img, d.starId, d.xcentroid, d.ycentroid, d.flux)), 5 * fwhm, 5, 10)
+      .map(found)
+    if (kept.length < minStars || fwhm > maxStarsFwhm)
+      return Outcome("diagnostics_only", fwhm, Nil)
+
+    val boxR = math.max(math.ceil(2 * fwhm).toInt, 2)
+    val psf = Photometry.usablePsf(Photometry.gridPsf(Photometry.epsfGrid(sub,
+      kept.map(d => (d.xcentroid, d.ycentroid, d.flux)), boxR, 2), boxR, 2), fwhm)
+    val measured = Photometry.photometryKernel(sub, 0.0, threshold, psf, boxR, 2)
+      .toSeq.sortBy(m => (m._7, m._2))
+    val annulus = Photometry.annulusOf(frame, measured.map(m => (m._4, m._5)),
+      2 * fwhm, 3 * fwhm)
+    Outcome("ok", fwhm, measured.zip(annulus).map {
+      case ((_, star, group, x, y, flux, iter), ann) =>
+        CatalogStar(star, group, x, y, flux, iter, ann)
+    })
   }
 
   /** The outer per-epoch loop (psf_phot.py:44): epochs are independent, so

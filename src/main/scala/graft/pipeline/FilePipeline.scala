@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 /** The reference's top-level entry point (`pipeline(fn_path, fits_path,
   * res_path)`, psf_phot.py:9-98) composed from the engine's own pieces:
   *
-  *   metadata CSV scan (filename, epoch-set id; psf_phot.py:41)
-  *     → FITS ingest of the listed files (import_images, core.py:18-50)
+  *   metadata CSV (filename, epoch-set id; psf_phot.py:41) + file listing
+  *     → FITS ingest of each epoch's files (import_images, core.py:18-50)
   *     → per-epoch processing loop (concurrent epochs, psf_phot.py:44)
   *     → epoch-partitioned catalog sink (the per-epoch CSV/FITS outputs)
   *
@@ -32,28 +32,50 @@ object FilePipeline {
       width: Int, height: Int, minStars: Int = 3,
       resultsDir: Option[String] = None,
       reportDir: Option[String] = None): PipelineResult = {
-    val meta = spark.read
-      .schema("filename STRING, epoch_id LONG").csv(csvPath)
-    def basename(path: String) = element_at(split(col(path), "/"), -1)
-    // the epochs come from the file listing joined to the metadata:
-    // binaryFile reads a file's bytes only when `content` is selected, so
-    // this lists the files without decoding any of them
-    val epochIds = CatalogSinks.readBinary(spark, fitsGlob).select(col("path"))
-      .withColumn("filename", basename("path"))
-      .join(broadcast(meta), Seq("filename")) // unlisted files drop out
-      .select(col("epoch_id")).distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val pixels = Fits.readFits(spark, fitsGlob)
-      .withColumn("filename", basename("img_id"))
-      .join(broadcast(meta), Seq("filename"))
-      .withColumn("img", xxhash64(col("img_id"))) // stable numeric image id
-      .select(col("epoch_id"), col("img").as("img_id"), col("y"), col("x"),
-        col("v"))
+    val files = epochFiles(spark, csvPath, fitsGlob)
     val (statuses, catalog) =
-      EpochPipeline.runEpochs(spark, pixels, "epoch_id", width, height,
-        minStars = minStars, reportDir = reportDir, epochIds = Some(epochIds))
+      EpochPipeline.runEpochs(spark, epochPixels(spark, files), "epoch_id",
+        width, height, minStars = minStars, reportDir = reportDir,
+        epochIds = Some(files.map(_._1)))
     resultsDir.foreach(dir =>
       CatalogSinks.writePartitioned(catalog, "epoch_id", dir))
     PipelineResult(statuses, catalog)
   }
+
+  /** The files of each epoch, in epoch order: those matched by `fitsGlob`
+    * whose basename the metadata CSV lists. The CSV is read once, one
+    * collect of one row per file; the glob is listed on the driver from
+    * the binaryFile relation's file index, reading no file content (Spark
+    * lists in a job only past `parallelPartitionDiscovery.threshold`
+    * paths). Unlisted files drop out, and listed files that do not exist
+    * start no epoch. */
+  private[pipeline] def epochFiles(spark: SparkSession, csvPath: String,
+      fitsGlob: String): Seq[(Long, Seq[String])] = {
+    val epochsOf = spark.read.schema("filename STRING, epoch_id LONG")
+      .csv(csvPath).collect().toSeq
+      .filterNot(_.isNullAt(0))
+      .map { r =>
+        require(!r.isNullAt(1), s"$csvPath: no epoch id for ${r.getString(0)}")
+        r.getString(0) -> r.getLong(1)
+      }
+      .groupMap(_._1)(_._2)
+    CatalogSinks.readBinary(spark, fitsGlob).inputFiles.toSeq
+      .map(uri => new org.apache.hadoop.fs.Path(new java.net.URI(uri)))
+      .flatMap(p => epochsOf.getOrElse(p.getName, Nil).map(_ -> p.toString))
+      .groupMap(_._1)(_._2).toSeq.sortBy(_._1)
+  }
+
+  /** The epochs' pixels `(epoch_id, img_id, y, x, v)`: each epoch's files
+    * decoded as one scan, its id a literal, and `img_id` the
+    * `xxhash64` of the file's path (the combine's reference image and
+    * stack order follow it). A filter on one epoch prunes the other
+    * epochs' scans from the plan. */
+  private[pipeline] def epochPixels(spark: SparkSession,
+      files: Seq[(Long, Seq[String])]): DataFrame =
+    files.map { case (ep, paths) =>
+      Fits.readFits(spark, paths, 1)
+        .select(lit(ep).as("epoch_id"), xxhash64(col("img_id")).as("img_id"),
+          col("y"), col("x"), col("v"))
+    }.reduceOption(_ union _)
+      .getOrElse(spark.emptyDataFrame) // no epoch: runEpochs reads nothing
 }

@@ -24,6 +24,11 @@ import org.apache.spark.sql.types._
   * image and its extent. The combine's clipped median shuffles by row and
   * holds one row of the stack per task, and the star tables, shifts and
   * EPSF grid are model objects held on the driver (abstraction #5).
+  *
+  * [[EpochPipeline.run]] runs every step after the combine in one task
+  * over the combined frame; the in-memory twins it calls ([[detect]],
+  * [[epsfGrid]], [[photometryKernel]], [[annulusOf]]) keep the rules of the
+  * DataFrame operators here, which the registered queries use.
   */
 object Photometry {
 
@@ -351,6 +356,29 @@ object Photometry {
         col("s.n").as("n_annulus"))
   }
 
+  /** [[annulusBackground]] over ONE frame, in memory: per star `(x, y)`,
+    * the clipped median of the existing cells of the box of half-side
+    * ⌈rOut⌉ around its rounded ([[roundHalfUp]]) position with
+    * rIn² ≤ d² < rOut², compared as Spark SQL compares doubles; `None`
+    * (NULL) when no cell lies in the ring. */
+  private[pipeline] def annulusOf(frame: Frame, stars: Seq[(Double, Double)],
+      rIn: Double, rOut: Double): Seq[Option[Double]] = {
+    val r = math.ceil(rOut).toInt
+    val (in2, out2) = (rIn * rIn, rOut * rOut)
+    stars.map { case (xc, yc) =>
+      val (cy, cx) = (roundHalfUp(yc), roundHalfUp(xc))
+      val ring = scala.collection.mutable.ArrayBuilder.make[Double]
+      for (y <- cy - r to cy + r; x <- cx - r to cx + r) {
+        val i = frame.at(y, x)
+        val d2 = (x - xc) * (x - xc) + (y - yc) * (y - yc)
+        if (i >= 0 && compareDoubles(d2, in2) >= 0 && compareDoubles(d2, out2) < 0)
+          ring += frame.v(i)
+      }
+      val vs = ring.result()
+      if (vs.isEmpty) None else Some(SigmaClippedStats.clip(vs, 2.0, 5).median)
+    }
+  }
+
   /** EPSF-style oversampled mean stack of flux-normalized star cutouts
     * (core.py:384-414; oversampling=2, core.py:411). Each star's cutout is
     * mapped onto an oversampled grid centered on its centroid and the stack
@@ -385,13 +413,13 @@ object Photometry {
     * whole recentering loop in memory ([[recenterEpsf]]), and the final
     * grid — ≤ (2·oversample·R+3)² cells, a model object (abstraction #5) —
     * is collected and returned as a local relation. That task holds the
-    * cutout table, stars × (2(R+2)+1)² rows of 48 B. */
+    * cutout table, stars × (2(R+2)+1)² rows of 48 B. The grid does not
+    * depend on the partitioning: the loop sorts the cutout rows first. */
   def buildEpsfIterative(pixels: DataFrame, stars: DataFrame, cutoutRadius: Int,
       oversample: Int, maxIters: Int = 10, tol: Double = 1e-2): DataFrame = {
     val spark = pixels.sparkSession
     import spark.implicits._
-    val margin = 2 // covers recenter drift (tol-convergent shifts ≪ 1 px)
-    val boxOffs = array((-(cutoutRadius + margin) to (cutoutRadius + margin))
+    val boxOffs = array((-(cutoutRadius + EpsfMargin) to (cutoutRadius + EpsfMargin))
       .map(lit): _*)
     val grid = stars
       .select(col("img_id"), col("xcentroid"), col("ycentroid"), col("flux"))
@@ -410,9 +438,33 @@ object Photometry {
     grid.toSeq.toDF("w", "u", "epsf")
   }
 
+  /** The cutout margin of the EPSF gather around each star's box; covers
+    * the recentering drift (tol-convergent shifts ≪ 1 px). */
+  private val EpsfMargin = 2
+
+  /** [[buildEpsfIterative]] over ONE frame, in memory: the cutout rows of
+    * each star `(xcentroid, ycentroid, flux)`, gathered as its box join
+    * does (the existing cells within `cutoutRadius` + 2 of the rounded
+    * centroid), through [[recenterEpsf]]. */
+  private[pipeline] def epsfGrid(frame: Frame, stars: Seq[(Double, Double, Double)],
+      cutoutRadius: Int, oversample: Int, maxIters: Int = 10,
+      tol: Double = 1e-2): Map[(Long, Long), Double] = {
+    val m = cutoutRadius + EpsfMargin
+    val cut = for {
+      (xc, yc, flux) <- stars.iterator
+      (cy, cx) = (roundHalfUp(yc), roundHalfUp(xc))
+      y <- (cy - m to cy + m).iterator
+      x <- (cx - m to cx + m).iterator
+      i = frame.at(y, x) if i >= 0
+    } yield (y, x, xc, yc, flux, frame.v(i))
+    recenterEpsf(cut, cutoutRadius, oversample, maxIters, tol)
+  }
+
   /** The recentering loop of [[buildEpsfIterative]] over the cutout rows
-    * `(y, x, xcentroid, ycentroid, flux, v)`, with Spark SQL's arithmetic:
-    * per round, keep each star's pixels within `cutoutRadius` of its
+    * `(y, x, xcentroid, ycentroid, flux, v)`, with Spark SQL's arithmetic.
+    * The rows are first sorted by (ycentroid, xcentroid, flux, y, x, v), a
+    * total order, so the per-cell sums do not depend on the order the rows
+    * arrive in. Per round, keep each star's pixels within `cutoutRadius` of its
     * shifted, rounded centroid, average `v / flux` per oversampled cell
     * (w, u), smooth ([[smoothCells]]), and shift every centroid by the
     * model's centroid offset until it is under `tol` px or `maxIters`
@@ -420,7 +472,7 @@ object Photometry {
   private def recenterEpsf(cut: Iterator[(Long, Long, Double, Double, Double, Double)],
       cutoutRadius: Int, oversample: Int, maxIters: Int,
       tol: Double): Map[(Long, Long), Double] = {
-    val rows = cut.toArray
+    val rows = cut.toArray.sorted(EpsfRowOrder)
     var sx = 0.0
     var sy = 0.0
     var grid: Map[(Long, Long), Double] = Map.empty
@@ -453,6 +505,14 @@ object Photometry {
       it += 1
     }
     grid
+  }
+
+  private val EpsfRowOrder: Ordering[(Long, Long, Double, Double, Double, Double)] = {
+    import Ordering.Double.{TotalOrdering => D}
+    Ordering.by[(Long, Long, Double, Double, Double, Double),
+        (Double, Double, Double, Long, Long, Double)](
+      r => (r._4, r._3, r._5, r._1, r._2, r._6))(
+      Ordering.Tuple6(D, D, D, Ordering.Long, Ordering.Long, D))
   }
 
   /** 3×3 quadratic-kernel smoothing of the oversampled EPSF grid
@@ -554,18 +614,30 @@ object Photometry {
 
   /** Materialize an EPSF DataFrame (w, u, epsf) into a dense GridPsf,
     * peak-normalized. The grid is tiny — this is a model readback. */
-  def collectGridPsf(epsf: DataFrame, radius: Int, oversample: Int): GridPsf = {
+  def collectGridPsf(epsf: DataFrame, radius: Int, oversample: Int): GridPsf =
+    gridPsf(epsf.select(col("w"), col("u"), col("epsf")).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)), radius, oversample)
+
+  /** The dense, peak-normalized GridPsf of EPSF cells `(w, u) -> epsf`;
+    * cells outside the grid's support are dropped. */
+  private[pipeline] def gridPsf(cells: Iterable[((Long, Long), Double)],
+      radius: Int, oversample: Int): GridPsf = {
     val size = 2 * radius * oversample + 1
     val grid = Array.ofDim[Double](size, size)
     val c = radius * oversample
-    epsf.select(col("w"), col("u"), col("epsf")).collect().foreach { r =>
-      val w = r.getLong(0).toInt + c; val u = r.getLong(1).toInt + c
-      if (w >= 0 && w < size && u >= 0 && u < size) grid(w)(u) = r.getDouble(2)
+    cells.foreach { case ((w0, u0), e) =>
+      val w = w0.toInt + c; val u = u0.toInt + c
+      if (w >= 0 && w < size && u >= 0 && u < size) grid(w)(u) = e
     }
     val peak = grid.map(_.max).max
     val norm = if (peak > 0) grid.map(_.map(_ / peak)) else grid
     GridPsf(norm, radius, oversample)
   }
+
+  /** The EPSF when it has volume, else the analytic Gaussian of `fwhm`: a
+    * degenerate EPSF (starless field, empty stack) is not fitted against. */
+  private[pipeline] def usablePsf(psf: GridPsf, fwhm: Double): PsfModel =
+    if (psf.volume > 0) psf else GaussianPsf(fwhm / GaussianFit.SigmaToFwhm)
 
   /** Iteratively-subtracted PSF photometry (do_photometry, core.py:416-452)
     * with a Gaussian PSF of the given FWHM: `nIters` rounds of detect →
@@ -591,13 +663,9 @@ object Photometry {
     val boxR = math.max(math.ceil(2 * fwhm).toInt, 2)
     val stats = statsOpt.getOrElse(backgroundStats(pixels))
     val epsf = buildEpsfIterative(pixels, stars, boxR, oversample)
-    val psf = collectGridPsf(epsf, boxR, oversample)
-    // degenerate EPSF (starless field / empty stack): fall back to the
-    // analytic Gaussian rather than fitting against a zero model
-    val usable: PsfModel =
-      if (psf.volume > 0) psf else GaussianPsf(fwhm / GaussianFit.SigmaToFwhm)
-    iterativePhotometryWithPsf(spark, pixels, usable, boxR, nIters, nSigma,
-      Some(stats))
+    iterativePhotometryWithPsf(spark, pixels,
+      usablePsf(collectGridPsf(epsf, boxR, oversample), fwhm), boxR, nIters,
+      nSigma, Some(stats))
   }
 
   /** The detect → group → fit → subtract loop over an arbitrary PSF model,
@@ -725,7 +793,7 @@ object Photometry {
     * Stops early once a round detects nothing. Emits
     * `(img_id, star_id, group_id, x_fit, y_fit, flux_fit, iter_detected)`;
     * `frame` is the residual and is overwritten. */
-  private def photometryKernel(frame: Frame, median: Double, threshold: Double,
+  private[pipeline] def photometryKernel(frame: Frame, median: Double, threshold: Double,
       psf: PsfModel, boxR: Int, nIters: Int): Iterator[(Long, Int, Int, Double, Double, Double, Int)] = {
     val img = frame.img
     val v = frame.v

@@ -49,10 +49,11 @@ object CatalogSinks {
     spark.read.option("header", "true").option("inferSchema", "true").csv(path)
 
   /** binaryFile ingestion — the FITS import boundary (core.py:18-50): each
-    * file becomes (path, length, content); header/pixel decode plugs in as
-    * a downstream map (stubbed, like the multimodal codec). */
-  def readBinary(spark: SparkSession, path: String): DataFrame =
-    spark.read.format("binaryFile").load(path)
+    * file of the `paths` (files or globs) becomes (path, length, content);
+    * header/pixel decode plugs in as a downstream map (stubbed, like the
+    * multimodal codec). */
+  def readBinary(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.format("binaryFile").load(paths: _*)
       .select(col("path"), col("length"), col("content"))
 
   /** Columnar ORC sink/source — the second columnar format the connector

@@ -165,9 +165,13 @@ object Fits {
     * `hdu(hduIndex)` → long-form pixels (img path, y, x, physical value)
     * plus the header map — abstraction #1 + #2 of SURVEY.md §1 in one
     * DataFrame. 2-D image HDUs only (NAXIS1 = width, NAXIS2 = height). */
-  def readFits(spark: SparkSession, path: String, hduIndex: Int = 1): DataFrame = {
+  def readFits(spark: SparkSession, path: String, hduIndex: Int = 1): DataFrame =
+    readFits(spark, Seq(path), hduIndex)
+
+  /** As above over several files or globs, scanned as one relation. */
+  def readFits(spark: SparkSession, paths: Seq[String], hduIndex: Int): DataFrame = {
     import spark.implicits._
-    CatalogSinks.readBinary(spark, path)
+    CatalogSinks.readBinary(spark, paths: _*)
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .flatMap { case (p, bytes) =>

@@ -57,6 +57,9 @@ object Profile {
         throw new IllegalArgumentException(s"--reps must be a positive integer, got '$n'")), rest)
       case rest => (2, rest)
     }
+    if (args.head == "joblat" && names.nonEmpty)
+      throw new IllegalArgumentException(
+        s"joblat takes no query names, got ${names.mkString(" ")}; $Usage")
     val queries = SparkEntry.select("Profile",
       if (names.isEmpty) None else Some(names.mkString(",")))
     val probe = new Probe

@@ -28,6 +28,9 @@ class EpochPipelineSpec extends SparkSpec {
     // Spark's log10 is StrictMath-backed and may differ from Math.log10 by
     // 1 ulp — compare the mag invariant with a tight tolerance, not bitwise
     assert(rows.forall(r => math.abs(r._4 - -2.5 * math.log10(r._3)) < 1e-9))
+    // the catalog comes flux-descending (write_csv)
+    assert(rows.map(_._3).toSeq === rows.map(_._3).toSeq.sorted(
+      Ordering.Double.TotalOrdering.reverse))
   }
 
   test("two epoch runs leave the CacheManager as they found it") {
@@ -45,14 +48,15 @@ class EpochPipelineSpec extends SparkSpec {
     val (_, jobs) = jobsDuring {
       EpochPipeline.run(spark, px, 64, 64, minStars = 2).catalog.collect()
     }
-    // 29 jobs measured; AQE's broadcast timing has moved this count by a
-    // job or two before, so the bound keeps that much headroom only. 60
-    // while detection, the alignment's match and stack and the mask ran as
-    // SQL plans; 79–81 while photometry and the EPSF build ran their
-    // rounds as Spark jobs; 130 before the alignment reused the stats, the
-    // combine was pinned and the peak test became one pass.
+    // 8 jobs measured; AQE's broadcast timing has moved this count by a
+    // job or two before, so the bound keeps that much headroom only. 29
+    // while the steps after the combine ran as separate jobs; 60 while
+    // detection, the alignment's match and stack and the mask ran as SQL
+    // plans; 79–81 while photometry and the EPSF build ran their rounds as
+    // Spark jobs; 130 before the alignment reused the stats, the combine
+    // was pinned and the peak test became one pass.
     info(s"$jobs jobs")
-    assert(jobs <= 32, s"$jobs jobs")
+    assert(jobs <= 11, s"$jobs jobs")
   }
 
   test("multi-epoch loop: concurrent epochs, statuses per branch, tagged union") {

@@ -91,8 +91,38 @@ class FilePipelineSpec extends SparkSpec {
     try {
       assert(graft.sources.CatalogSinks.readBinary(spark, glob).select("path")
         .collect().length === 1)
+      assert(graft.sources.CatalogSinks.readBinary(spark, glob).inputFiles
+        .length === 1)
       intercept[Exception](graft.sources.CatalogSinks.readBinary(spark, glob)
         .select("content").collect())
     } finally spark.conf.unset(key)
+  }
+
+  test("the epochs' files come from one metadata job and a listing with none") {
+    val dir = Files.createTempDirectory("graft-filepipe-files")
+    Seq("e1a", "e1b", "e2a", "ignored").zipWithIndex.foreach { case (f, i) =>
+      Files.write(dir.resolve(s"$f.fits"), fits(i + 1L, (0, 0), starless = false))
+    }
+    Files.write(dir.resolve("meta.csv"),
+      "e1a.fits,1\ne1b.fits,1\ne1c.fits,1\ne2a.fits,2\ne3a.fits,3\n"
+        .getBytes("US-ASCII"))
+    val glob = dir.toString + "/*.fits"
+    val (listed, listJobs) = jobsDuring(
+      graft.sources.CatalogSinks.readBinary(spark, glob).inputFiles)
+    assert(listed.length === 4 && listJobs === 0)
+    val (files, jobs) = jobsDuring(
+      FilePipeline.epochFiles(spark, dir.resolve("meta.csv").toString, glob))
+    assert(jobs === 1)
+    assert(files.map { case (ep, ps) =>
+        ep -> ps.map(p => p.substring(p.lastIndexOf('/') + 1)).sorted } ===
+      Seq(1L -> Seq("e1a.fits", "e1b.fits"), 2L -> Seq("e2a.fits")))
+    // the image ids are xxhash64 of the paths the glob's scan reports
+    val ids = FilePipeline.epochPixels(spark, files)
+      .select("epoch_id", "img_id").distinct().as[(Long, Long)].collect().toSet
+    val want = graft.sources.CatalogSinks.readBinary(spark, glob)
+      .select(col("path"), xxhash64(col("path"))).as[(String, Long)].collect()
+      .collect { case (p, id) if !p.endsWith("ignored.fits") =>
+        (if (p.endsWith("e2a.fits")) 2L else 1L) -> id }.toSet
+    assert(ids === want)
   }
 }

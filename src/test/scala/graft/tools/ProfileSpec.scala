@@ -60,5 +60,7 @@ class ProfileSpec extends SparkSpec {
       .getMessage.contains("--reps"))
     assert(intercept[IllegalArgumentException](profile("show", "q0_missing"))
       .getMessage.contains("q0_missing"))
+    assert(intercept[IllegalArgumentException](profile("joblat", "q83_epoch_pipeline"))
+      .getMessage.contains("joblat takes no query names"))
   }
 }
