@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.functions.SigmaClippedStats
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.functions._
 
@@ -16,24 +16,26 @@ import org.apache.spark.sql.functions._
   * FWHM is implausible (psf_phot.py:78-82), and null sky coordinates when
   * the WCS solve fails (psf_phot.py:95-98).
   *
-  * [[run]] is two distributed phases and a driver tail:
-  *  - the combine: per-image stats, the alignment's detection and the
-  *    per-row clipped median, each distributed over the input images
-  *    ([[Photometry.alignAndCombine]]); a one-image epoch is its own
-  *    combined frame;
-  *  - the frame kernel: the combined frame shuffles once, by its image id,
-  *    into ONE task that runs every step after the combine in memory
-  *    ([[epochKernel]]) and returns the epoch's status, FWHM and measured
+  * A campaign of epochs ([[runEpochs]]) is one plan keyed by `epoch_id`,
+  * the reference's per-epoch loop (psf_phot.py:44) as a `groupBy` on the
+  * epoch (SURVEY.md:84); [[run]] is a campaign of one. The plan is two
+  * distributed phases and a driver tail:
+  *  - the combine: the per-image stats, the alignment's detection and the
+  *    per-row clipped median of every multi-image epoch in the same stages,
+  *    keyed by `(epoch_id, img_id)` ([[Photometry.combineEpochs]]); a
+  *    one-image epoch is its own combined frame;
+  *  - the frame kernel: the combined frames shuffle once, by epoch, and ONE
+  *    task per epoch runs every step after the combine in memory
+  *    ([[epochKernel]]), returning the epoch's status, FWHM and measured
   *    stars as one row;
-  *  - on the driver: that row's stars in flux-descending order as a local
+  *  - on the driver: those rows' stars in flux-descending order as a local
   *    relation, then the WCS columns and magnitudes.
   *
-  * Memory of the kernel task: the combined frame's values and their
+  * Memory of a kernel task: the combined frame's values and their
   * residual, 16 B per bounding-box cell plus a presence bit, after a load
   * and a background clip that peak at 24.2 B per cell (≈ 405 MB at 4096²);
-  * a frame over [[Photometry.MaxFrameCells]] fails, naming the image.
-  * Epochs are independent (no cross-epoch state), so a campaign maps
-  * epochs across the cluster ([[runEpochs]]).
+  * a frame over [[Photometry.MaxFrameCells]] fails, naming its epoch id. The
+  * tasks of different epochs run side by side on the executors.
   */
 object EpochPipeline {
 
@@ -49,6 +51,11 @@ object EpochPipeline {
     * aborted) and the measured stars (empty unless `ok`). */
   private[pipeline] final case class Outcome(status: String, fwhm: Double,
       stars: Seq[CatalogStar])
+
+  /** The detection threshold in background σ (psf_phot.py:68-69). */
+  private val NSigma = 10.0
+  /** The widest FWHM, in px, that still measures stars (psf_phot.py:78-82). */
+  private val MaxStarsFwhm = 30.0
 
   // find_fwhm's search limits (core.py:72-110)
   private val SatLimit = 50000.0
@@ -147,8 +154,8 @@ object EpochPipeline {
   }
 
   /** Run one epoch end to end over long-form pixels (one or more images of
-    * the same field). Returns the status branch taken and the output
-    * catalog (empty for aborted epochs).
+    * the same field): a campaign of one, epoch 0. Returns the status
+    * branch taken, the FWHM and the output catalog (empty unless `ok`).
     *
     * AXIS ORDER (breaking change in round 3): the positional frame dims
     * are `(width, height)` — x-extent first — matching `alignAndCombine`
@@ -161,73 +168,29 @@ object EpochPipeline {
     * the reference's per-epoch diagnostic PDF of the input frames
     * (write_pdf(images=im_data), psf_phot.py:55) — a real PDF via
     * [[graft.sources.Pdf]]; the fuller model+cutout report remains the
-    * standalone `Pdf.writeReport` surface. */
+    * standalone `Pdf.writeReport` surface. `wcsSolver`, when set, solves
+    * the sky coordinates of an `ok` epoch's stars. */
   def run(spark: SparkSession, pixels: DataFrame, width: Int, height: Int,
-      nSigma: Double = 10.0, maxStarsFwhm: Double = 30.0,
       minStars: Int = 3, wcsSolver: Option[WcsEnrichment.Solver] = None,
       reportPath: Option[String] = None): Result = {
-    import spark.implicits._
-
-    // the stats, the alignment's detection and the combine each read the
-    // epoch's pixels: materialize the input once so those passes read
-    // stored blocks instead of recomputing the source lineage (pinOnce: a
-    // caller handing in an already-checkpointed frame — e.g. the shared
-    // rendered-field intermediate — skips the redundant copy)
+    // pinned before the epoch column is added, so a caller handing in an
+    // already-checkpointed frame (the shared rendered-field intermediate)
+    // skips the copy
     val pinned = graft.operators.Scale.pinOnce(pixels)
-
     reportPath.foreach { p =>
       graft.sources.Pdf.writeReport(p,
         graft.sources.Pdf.frameImages(pinned, width, height))
     }
-
-    // 1. the combine. The per-image stats (one grouped pass, collected by
-    // backgroundStats) feed the alignment's detection and double as the
-    // image census: their row count IS the image count, read from the
-    // local relation without a job. A one-image epoch is its own combine.
-    val pixStats = Photometry.backgroundStats(pinned)
-    val combined =
-      if (pixStats.collect().length > 1)
-        Photometry.alignAndCombine(pinned, width, height, nSigma,
-          stats = Some(pixStats))
-      else pinned
-
-    // 2. every step after the combine, in one task over the combined frame;
-    // an epoch without pixels has no frame and takes the no-FWHM branch
-    val outcome = combined
-      .select(lit(0L).as("img_id"), col("y"), col("x"), col("v"))
-      .as[(Long, Long, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups((img, rows) => Iterator.single(epochKernel(
-        Photometry.Frame.load(img, rows), nSigma, minStars, maxStarsFwhm)))
-      .collect()
-      .headOption.getOrElse(Outcome("aborted_no_fwhm", 0.0, Nil))
-    if (outcome.status != "ok")
-      return Result(outcome.status, outcome.fwhm, emptyCatalog(spark))
-
-    // 3. WCS enrichment (or null sky coordinates when no solver) and the
-    // catalog — positive-flux magnitudes, flux-desc order (write_csv) —
-    // over the measured stars as a local relation. The stars are sorted
-    // here, since a local relation keeps its row order through filters and
-    // projections, and a Sort would cost a sampling job and a shuffle in
-    // every consumer; the solver's join does not keep it, so that branch
-    // sorts again.
-    val measured = outcome.stars
-      .sortWith((a, b) => compareDoubles(a.flux, b.flux) > 0)
-      .toDF().withColumn("img_id", lit(0L))
+    val outcome = outcomes(spark, pinned.withColumn("epoch_id", lit(0L)), width,
+      height, minStars).getOrElse(0L, NoFrame)
+    val stars = starTable(spark, Seq(0L -> outcome))
     val enriched = wcsSolver match {
-      case Some(sv) => WcsEnrichment.enrich(spark, measured, sv)
-        .orderBy(col("flux").desc)
-      case None => measured
-        .withColumn("ra", lit(null).cast("double"))
-        .withColumn("dec", lit(null).cast("double"))
+      // the solver's join loses the local relation's order
+      case Some(sv) if outcome.status == "ok" =>
+        WcsEnrichment.enrich(spark, stars, sv).orderBy(col("flux").desc)
+      case _ => withoutSky(stars)
     }
-    val catalog = enriched
-      .filter(col("flux") > 0)
-      .withColumn("mag", lit(-2.5) * log10(col("flux")))
-      .select(col("img_id"), col("star_id"), col("group_id"),
-        col("xcentroid"), col("ycentroid"), col("flux"), col("mag"),
-        col("iter_detected"), col("annulus_bkg"), col("ra"), col("dec"))
-    Result("ok", outcome.fwhm, catalog)
+    Result(outcome.status, outcome.fwhm, catalog(enriched))
   }
 
   /** Every step of the epoch after the combine, over the combined `frame`
@@ -235,13 +198,13 @@ object EpochPipeline {
     * registered queries use:
     *  1. background: [[SigmaClippedStats.clip]] (σ 2, five rounds) of the
     *     frame's values; the residual is v − median, and the detection
-    *     threshold nSigma·std above it (psf_phot.py:68-69);
+    *     threshold `NSigma`·std above it (psf_phot.py:68-69);
     *  2. FWHM ([[findFwhm]]): the above-threshold cells by (peak desc, y,
     *     x), the first `MaxTries` through [[fwhmStar]], and a Gaussian fit
     *     to the residual cutout of the pick ([[cutoutFwhm]]); 0 aborts;
     *  3. [[Photometry.detect]] with a box of max(⌈fwhm⌉, 3), then
     *     [[maskStars]] at radius 5·fwhm; too few stars or a FWHM over
-    *     `maxStarsFwhm` is diagnostics-only;
+    *     `MaxStarsFwhm` is diagnostics-only;
     *  4. the EPSF of the masked stars ([[Photometry.epsfGrid]], as
     *     [[Photometry.buildEpsfIterative]]), or the Gaussian of the FWHM
     *     when it is degenerate;
@@ -256,8 +219,7 @@ object EpochPipeline {
     * cell plus the presence bit. The clip holds the pixels' values and a
     * sorted copy next to the frame, at most 24 B per cell, under the
     * 24.2 B of [[Photometry.Frame.load]]. */
-  private[pipeline] def epochKernel(frame: Photometry.Frame, nSigma: Double,
-      minStars: Int, maxStarsFwhm: Double): Outcome = {
+  private[pipeline] def epochKernel(frame: Photometry.Frame, minStars: Int): Outcome = {
     import Photometry.Frame
     val (v, present) = (frame.v, frame.present)
     val values = new Array[Double](present.cardinality)
@@ -269,7 +231,7 @@ object EpochPipeline {
     while (i >= 0) { res(i) = v(i) - bkg.median; i = present.nextSetBit(i + 1) }
     val sub = new Frame(frame.img, frame.y0, frame.x0, frame.height, frame.width,
       res, present)
-    val threshold = 0.0 + nSigma * bkg.std
+    val threshold = 0.0 + NSigma * bkg.std
 
     // FWHM: the reference's argmax walk over the image (np.max + np.where,
     // core.py:72-76) runs over the above-threshold cells themselves
@@ -304,7 +266,7 @@ object EpochPipeline {
     val kept = maskStars(found.toSeq.map(d =>
       (frame.img, d.starId, d.xcentroid, d.ycentroid, d.flux)), 5 * fwhm, 5, 10)
       .map(found)
-    if (kept.length < minStars || fwhm > maxStarsFwhm)
+    if (kept.length < minStars || fwhm > MaxStarsFwhm)
       return Outcome("diagnostics_only", fwhm, Nil)
 
     val boxR = math.max(math.ceil(2 * fwhm).toInt, 2)
@@ -320,66 +282,119 @@ object EpochPipeline {
     })
   }
 
-  /** The outer per-epoch loop (psf_phot.py:44): epochs are independent, so
-    * they run as concurrent Spark jobs from the driver — on a cluster each
-    * epoch's stages schedule in parallel across executors. Concurrency is
-    * BOUNDED by a fixed-size pool (`parallelism`, default 4): a 350-epoch
-    * campaign must not spawn 350 driver threads each holding job state and
-    * localCheckpoint blocks — epochs beyond the bound queue and recycle
-    * the same workers, keeping peak driver memory and scheduler pressure
-    * flat no matter the campaign length. Returns the union of per-epoch
-    * catalogs tagged with epoch_id, plus statuses.
+  /** The outer per-epoch loop (psf_phot.py:44) as one plan over a
+    * campaign's pixels `(epoch_id, img_id, y, x, v)`: the pixels are pinned
+    * once, every epoch runs in the same stages ([[outcomes]]), and the
+    * statuses come back with one catalog of every epoch's stars, tagged
+    * with `epoch_id`, as a local relation. The job count does not grow
+    * with the number of epochs, except for the reports: with `reportDir`
+    * set, each epoch writes `epoch_<id>.pdf` there in a job of its own.
     *
-    * `epochIds` lists the epochs to run when the caller already knows
-    * them (an epoch with no pixels then takes the no-FWHM branch); without
-    * it they are the distinct `epochCol` values of `pixels`, a scan of the
-    * whole input. */
-  def runEpochs(spark: SparkSession, pixels: DataFrame, epochCol: String,
-      width: Int, height: Int, nSigma: Double = 10.0,
-      minStars: Int = 3, parallelism: Int = 4,
-      reportDir: Option[String] = None,
+    * `epochIds` lists the epochs when the caller knows them: an epoch
+    * listed without pixels takes the no-FWHM branch, and an empty list
+    * reads nothing. Without it the epochs are those of the stats census.
+    *
+    * Memory: the pin is a `localCheckpoint` of the whole campaign's
+    * pixels, whose blocks spill to disk past the storage memory, so a
+    * caller bounds it by the campaign it hands in (a micro-batch of
+    * [[graft.streaming.EpochStream]] is bounded by `maxFilesPerTrigger`).
+    * A kernel task holds one combined frame, at most 24.2 B per cell
+    * ([[Photometry.MaxFrameCells]]), and the stats census of every image
+    * rides in the detection's closure ([[Photometry.MaxCensusImages]]). */
+  def runEpochs(spark: SparkSession, pixels: DataFrame, width: Int, height: Int,
+      minStars: Int = 3, reportDir: Option[String] = None,
       epochIds: Option[Seq[Long]] = None): (Map[Long, String], DataFrame) = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    require(parallelism >= 1, "parallelism must be positive")
-    val epochs = epochIds.map(_.distinct.toArray).getOrElse(
-      pixels.select(col(epochCol)).distinct().collect().map(_.getLong(0))).sorted
-    if (epochs.isEmpty)
-      return (Map.empty[Long, String],
-        emptyCatalog(spark).withColumn("epoch_id", lit(null).cast("long")))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(parallelism, epochs.length))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    val results =
-      try {
-        // submit everything up front (the pool queues past the bound),
-        // await in epoch order
-        val jobs = epochs.map { ep =>
-          ep -> Future {
-            run(spark,
-              pixels.filter(col(epochCol) === ep).drop(epochCol),
-              width, height, nSigma, minStars = minStars,
-              reportPath = reportDir.map(d => s"$d/epoch_$ep.pdf"))
-          }
-        }
-        jobs.map { case (ep, f) => ep -> Await.result(f, Duration.Inf) }
-      } finally pool.shutdown()
-    val statuses = results.map { case (ep, r) => ep -> r.status }.toMap
-    val catalogs = results.map { case (ep, r) =>
-      r.catalog.withColumn("epoch_id", lit(ep))
-    }
-    (statuses, catalogs.reduce(_.unionByName(_)))
+    val pinned = Option.unless(epochIds.exists(_.isEmpty))(
+      graft.operators.Scale.pinOnce(pixels))
+    val measured = pinned.fold(Map.empty[Long, Outcome])(
+      outcomes(spark, _, width, height, minStars))
+    val results = epochIds.getOrElse(measured.keys.toSeq).distinct.sorted
+      .map(ep => ep -> measured.getOrElse(ep, NoFrame))
+    for (dir <- reportDir; px <- pinned; (ep, _) <- results)
+      calledAs(spark, s"runEpochs: report of epoch $ep") {
+        graft.sources.Pdf.writeReport(s"$dir/epoch_$ep.pdf",
+          graft.sources.Pdf.frameImages(px.filter(col("epoch_id") === ep),
+            width, height))
+      }
+    (results.map { case (ep, o) => ep -> o.status }.toMap,
+      catalog(withoutSky(starTable(spark, results)), col("epoch_id")))
   }
 
-  private def emptyCatalog(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField("img_id", LongType), StructField("star_id", IntegerType),
-        StructField("group_id", IntegerType), StructField("xcentroid", DoubleType),
-        StructField("ycentroid", DoubleType), StructField("flux", DoubleType),
-        StructField("mag", DoubleType), StructField("iter_detected", IntegerType),
-        StructField("annulus_bkg", DoubleType), StructField("ra", DoubleType),
-        StructField("dec", DoubleType))))
+  /** The outcome of an epoch without pixels. */
+  private val NoFrame = Outcome("aborted_no_fwhm", 0.0, Nil)
+
+  /** Every epoch of the pinned campaign `(epoch_id, img_id, y, x, v)`
+    * through the combine and [[epochKernel]], keyed by epoch. The stats
+    * census (one collect, [[Photometry.imageStats]]) counts each epoch's
+    * images: only multi-image epochs go through the alignment and the
+    * clipped combine; one-image epochs go to the kernel as they are. */
+  private[pipeline] def outcomes(spark: SparkSession, pinned: DataFrame, width: Int,
+      height: Int, minStars: Int): Map[Long, Outcome] = {
+    import spark.implicits._
+    val census = calledAs(spark, "runEpochs: image stats")(
+      Photometry.imageStats(pinned))
+    val images = census.select(col("epoch_id")).as[Long].collect()
+      .groupMapReduce(identity)(_ => 1)(_ + _)
+    if (images.isEmpty) return Map.empty
+    val (multi, single) = images.keys.toSeq.partition(images(_) > 1)
+    def only(eps: Seq[Long]): DataFrame =
+      if (eps.length == images.size) pinned
+      else pinned.filter(col("epoch_id").isin(eps: _*))
+    val combined = Option.when(multi.nonEmpty)(
+      calledAs(spark, "runEpochs: alignment")(Photometry.combineEpochs(
+        only(multi), Photometry.statsMap(census), width, height, NSigma)))
+    val frames = (combined ++ Option.when(single.nonEmpty)(only(single)))
+      .map(_.select(col("epoch_id"), col("y"), col("x"), col("v")))
+      .reduce(_ union _)
+    calledAs(spark, "runEpochs: combine and epoch kernel") {
+      frames.as[(Long, Long, Long, Double)]
+        .groupByKey(_._1)
+        .flatMapGroups((ep, rows) => Iterator.single(
+          ep -> epochKernel(Photometry.Frame.load(ep, rows), minStars)))
+        .collect().toMap
+    }
+  }
+
+  /** The measured stars of `results` as one local relation `(epoch_id,
+    * img_id, star_id, group_id, xcentroid, ycentroid, flux, iter_detected,
+    * annulus_bkg)`, each epoch's stars in flux-descending order (write_csv).
+    * They are sorted here, since a local relation keeps its row order
+    * through filters and projections, and a Sort would cost a sampling job
+    * and a shuffle in every consumer. */
+  private def starTable(spark: SparkSession,
+      results: Seq[(Long, Outcome)]): DataFrame = {
+    import spark.implicits._
+    results.flatMap { case (ep, o) =>
+      o.stars.sortWith((a, b) => compareDoubles(a.flux, b.flux) > 0).map(ep -> _)
+    }.toDF("epoch_id", "star")
+      .select(col("epoch_id"), lit(0L).as("img_id"), col("star.*"))
+  }
+
+  /** Null sky coordinates: no WCS solver. */
+  private def withoutSky(stars: DataFrame): DataFrame =
+    stars.withColumn("ra", lit(null).cast("double"))
+      .withColumn("dec", lit(null).cast("double"))
+
+  /** The catalog of sky-tagged stars: positive-flux magnitudes in the
+    * reference's columns, then `extra`. */
+  private def catalog(stars: DataFrame, extra: Column*): DataFrame =
+    stars.filter(col("flux") > 0)
+      .withColumn("mag", lit(-2.5) * log10(col("flux")))
+      .select(Seq(col("img_id"), col("star_id"), col("group_id"),
+        col("xcentroid"), col("ycentroid"), col("flux"), col("mag"),
+        col("iter_detected"), col("annulus_bkg"), col("ra"), col("dec")) ++
+        extra: _*)
+
+  /** Run `body` with the jobs it launches named `site` in the Spark UI and
+    * in listeners: a Dataset action launches its jobs from a thread of
+    * Spark's own (`SQLExecution.withThreadLocalCaptured`), whose stack
+    * names no caller, so without this every job of an epoch reports a
+    * `java.util.concurrent` frame as its call site. The thread's previous
+    * call site is restored afterwards. */
+  private def calledAs[T](spark: SparkSession, site: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("callSite.short")
+    sc.setCallSite(site)
+    try body finally sc.setLocalProperty("callSite.short", prev)
   }
 }

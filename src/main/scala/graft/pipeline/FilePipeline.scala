@@ -9,12 +9,19 @@ import org.apache.spark.sql.functions._
   *
   *   metadata CSV (filename, epoch-set id; psf_phot.py:41) + file listing
   *     → FITS ingest of each epoch's files (import_images, core.py:18-50)
-  *     → per-epoch processing loop (concurrent epochs, psf_phot.py:44)
+  *     → the per-epoch processing loop (psf_phot.py:44) as one plan keyed
+  *       by epoch
   *     → epoch-partitioned catalog sink (the per-epoch CSV/FITS outputs)
   *
   * Every stage is the already-tested operator: Fits.readFits decode,
   * EpochPipeline.runEpochs for the epoch dataflow with its guard
   * branches, CatalogSinks.writePartitioned for pruned-readback results.
+  *
+  * Memory: the whole campaign's pixels are pinned once, as a
+  * `localCheckpoint` whose blocks spill to disk, and a kernel task holds
+  * one epoch's combined frame at a time (see [[EpochPipeline.runEpochs]]);
+  * a campaign too large to pin is run as several calls over parts of its
+  * metadata CSV.
   */
 object FilePipeline {
 
@@ -34,8 +41,8 @@ object FilePipeline {
       reportDir: Option[String] = None): PipelineResult = {
     val files = epochFiles(spark, csvPath, fitsGlob)
     val (statuses, catalog) =
-      EpochPipeline.runEpochs(spark, epochPixels(spark, files), "epoch_id",
-        width, height, minStars = minStars, reportDir = reportDir,
+      EpochPipeline.runEpochs(spark, epochPixels(spark, files), width, height,
+        minStars = minStars, reportDir = reportDir,
         epochIds = Some(files.map(_._1)))
     resultsDir.foreach(dir =>
       CatalogSinks.writePartitioned(catalog, "epoch_id", dir))

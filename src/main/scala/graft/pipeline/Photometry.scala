@@ -25,10 +25,15 @@ import org.apache.spark.sql.types._
   * holds one row of the stack per task, and the star tables, shifts and
   * EPSF grid are model objects held on the driver (abstraction #5).
   *
-  * [[EpochPipeline.run]] runs every step after the combine in one task
-  * over the combined frame; the in-memory twins it calls ([[detect]],
-  * [[epsfGrid]], [[photometryKernel]], [[annulusOf]]) keep the rules of the
-  * DataFrame operators here, which the registered queries use.
+  * A campaign keys every per-image step by `(epoch_id, img_id)`, since
+  * image ids repeat across epochs: [[imageStats]], [[detectKeyed]] and
+  * [[combineEpochs]] serve [[EpochPipeline.runEpochs]], and the public
+  * [[backgroundStats]], [[detectStars]] and [[alignAndCombine]] are their
+  * one-epoch case (epoch 0, dropped from the output). The epoch kernel
+  * runs every step after the combine in one task per epoch; the in-memory
+  * twins it calls ([[detect]], [[epsfGrid]], [[photometryKernel]],
+  * [[annulusOf]]) keep the rules of the DataFrame operators here, which
+  * the registered queries use.
   */
 object Photometry {
 
@@ -50,23 +55,42 @@ object Photometry {
     * `bufferable` is ignored. It stays only because
     * `perfbench/harness/src/main/scala/perfbench/EpochStages.scala` passes
     * it by name. */
-  def backgroundStats(pixels: DataFrame, bufferable: Boolean = true): DataFrame = {
+  def backgroundStats(pixels: DataFrame, bufferable: Boolean = true): DataFrame =
+    imageStats(oneEpoch(pixels)).drop("epoch_id")
+
+  /** [[backgroundStats]] of a campaign's pixels `(epoch_id, img_id, y, x,
+    * v)`, one row per `(epoch_id, img_id)`: the campaign's stats census. */
+  private[pipeline] def imageStats(pixels: DataFrame): DataFrame = {
     val scs = sigmaClippedStats(2.0, 5)
-    val stats = pixels.groupBy(col("img_id")).agg(scs(col("v")).as("s"))
-      .select(col("img_id"), col("s.mean").as("bkg_mean"),
+    val stats = pixels.groupBy(col("epoch_id"), col("img_id"))
+      .agg(scs(col("v")).as("s"))
+      .select(col("epoch_id"), col("img_id"), col("s.mean").as("bkg_mean"),
         col("s.median").as("bkg_median"), col("s.std").as("bkg_std"))
     pixels.sparkSession.createDataFrame(
       java.util.Arrays.asList(stats.collect(): _*), stats.schema)
   }
 
-  /** Per-image `(bkg_median, bkg_std)` collected to the driver, for the
-    * frame kernels' closures; rows with a null stat are dropped, so their
-    * images emit nothing. */
-  private def statsMap(stats: DataFrame): Map[Long, (Double, Double)] =
-    stats.select(col("img_id"), col("bkg_median"), col("bkg_std"))
-      .collect()
-      .collect { case r if !r.anyNull => r.getLong(0) -> (r.getDouble(1), r.getDouble(2)) }
-      .toMap
+  /** `df` as epoch 0 of a campaign. */
+  private def oneEpoch(df: DataFrame): DataFrame = df.withColumn("epoch_id", lit(0L))
+
+  /** The largest stats census, in images, that [[statsMap]] ships in the
+    * frame kernels' closures: 2¹⁴, about 16× the reference's whole dataset
+    * (~350 image sets × ~3 images, BASELINE.md). */
+  val MaxCensusImages: Int = 1 << 14
+
+  /** Per-image `(bkg_median, bkg_std)` of a stats census `(epoch_id,
+    * img_id, …)` collected to the driver, for the frame kernels' closures;
+    * rows with a null stat are dropped, so their images emit nothing. A
+    * census over [[MaxCensusImages]] fails, naming its size. */
+  private[pipeline] def statsMap(stats: DataFrame): Map[(Long, Long), (Double, Double)] = {
+    val rows = stats.select(col("epoch_id"), col("img_id"), col("bkg_median"),
+      col("bkg_std")).collect()
+    require(rows.length <= MaxCensusImages, s"stats census: ${rows.length} " +
+      s"images, over the $MaxCensusImages-image limit of one kernel closure")
+    rows.collect { case r if !r.anyNull =>
+      (r.getLong(0), r.getLong(1)) -> (r.getDouble(2), r.getDouble(3))
+    }.toMap
+  }
 
   /** Global background subtraction (psf_phot.py:69: image −= median). */
   def subtractBackground(pixels: DataFrame): DataFrame =
@@ -105,22 +129,34 @@ object Photometry {
   def detectStars(pixels: DataFrame, nSigma: Double, boxRadius: Int,
       peakMax: Double, excludeBorder: Int, width: Long, height: Long,
       precomputedStats: Option[DataFrame] = None): DataFrame = {
+    val px = oneEpoch(pixels)
+    detectKeyed(px, statsMap(precomputedStats.fold(imageStats(px))(oneEpoch)),
+      nSigma, boxRadius, peakMax, excludeBorder, width, height).drop("epoch_id")
+  }
+
+  /** [[detectStars]] over a campaign's pixels `(epoch_id, img_id, y, x, v)`
+    * with the census of [[statsMap]]: one task per `(epoch_id, img_id)`,
+    * rows prefixed with `epoch_id`. */
+  private[pipeline] def detectKeyed(pixels: DataFrame,
+      stats: Map[(Long, Long), (Double, Double)], nSigma: Double, boxRadius: Int,
+      peakMax: Double, excludeBorder: Int, width: Long, height: Long): DataFrame = {
     val spark = pixels.sparkSession
     import spark.implicits._
-    val stats = statsMap(precomputedStats.getOrElse(backgroundStats(pixels)))
-    pixels.select(col("img_id"), col("y"), col("x"), col("v"))
-      .as[(Long, Long, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups((img, rows) => stats.get(img) match {
+    pixels.select(col("epoch_id"), col("img_id"), col("y"), col("x"), col("v"))
+      .as[(Long, Long, Long, Long, Double)]
+      .groupByKey(r => (r._1, r._2))
+      .flatMapGroups((key, rows) => stats.get(key) match {
         case Some((median, std)) =>
-          detect(Frame.load(img, rows), median, median + nSigma * std,
-              boxRadius, peakMax, excludeBorder, width, height)
-            .iterator.map(d => (img, d.starId, d.xcentroid, d.ycentroid,
+          val (ep, img) = key
+          detect(Frame.load(img, rows.map(r => (r._2, r._3, r._4, r._5))),
+              median, median + nSigma * std, boxRadius, peakMax, excludeBorder,
+              width, height)
+            .iterator.map(d => (ep, img, d.starId, d.xcentroid, d.ycentroid,
               d.sharpness, d.roundness, d.npix, median, d.peak, d.flux, d.mag))
         case None => Iterator.empty
       })
-      .toDF("img_id", "star_id", "xcentroid", "ycentroid", "sharpness",
-        "roundness", "npix", "sky", "peak", "flux", "mag")
+      .toDF("epoch_id", "img_id", "star_id", "xcentroid", "ycentroid",
+        "sharpness", "roundness", "npix", "sky", "peak", "flux", "mag")
   }
 
   /** One star found by [[detect]]; `None` is SQL NULL. */
@@ -235,24 +271,39 @@ object Photometry {
   def alignAndCombine(pixels: DataFrame, width: Int, height: Int,
       nSigma: Double = 10.0, matchRadius: Double = 20.0,
       stats: Option[DataFrame] = None): DataFrame = {
+    val px = oneEpoch(pixels)
+    combineEpochs(px, statsMap(stats.fold(imageStats(px))(oneEpoch)), width,
+      height, nSigma, matchRadius).drop("epoch_id")
+  }
+
+  /** [[alignAndCombine]] of every epoch of a campaign's pixels `(epoch_id,
+    * img_id, y, x, v)` with the census of [[statsMap]]: the star tables of
+    * all epochs are collected at once and each epoch is aligned on its own
+    * reference image; the rolled pixels shuffle once by `(epoch_id, y)`.
+    * Emits `(epoch_id, y, x, v, n_stack)`. */
+  private[pipeline] def combineEpochs(pixels: DataFrame,
+      stats: Map[(Long, Long), (Double, Double)], width: Int, height: Int,
+      nSigma: Double, matchRadius: Double = 20.0): DataFrame = {
     val spark = pixels.sparkSession
     import spark.implicits._
-    val bkg = stats.getOrElse(backgroundStats(pixels))
-    val stars = detectStars(pixels, nSigma, 3, Double.MaxValue, 0, 0L, 0L,
-        Some(bkg))
-      .select(col("img_id"), col("star_id"), col("xcentroid"), col("ycentroid"))
-      .as[(Long, Int, Double, Double)].collect()
-    val shifts = alignShifts(stars, matchRadius)
-    pixels.select(col("img_id"), col("y"), col("x"), col("v"))
-      .as[(Long, Long, Long, Double)]
-      .map { case (img, y, x, v) =>
-        val (sx, sy) = shifts.getOrElse(img, (0L, 0L))
-        (img, Math.floorMod(y + sy, height.toLong),
+    val stars = detectKeyed(pixels, stats, nSigma, 3, Double.MaxValue, 0, 0L, 0L)
+      .select(col("epoch_id"), col("img_id"), col("star_id"), col("xcentroid"),
+        col("ycentroid"))
+      .as[(Long, Long, Int, Double, Double)].collect()
+    val shifts = stars.toSeq.groupBy(_._1).flatMap { case (ep, ss) =>
+      alignShifts(ss.map(s => (s._2, s._3, s._4, s._5)), matchRadius)
+        .map { case (img, shift) => (ep, img) -> shift }
+    }
+    pixels.select(col("epoch_id"), col("img_id"), col("y"), col("x"), col("v"))
+      .as[(Long, Long, Long, Long, Double)]
+      .map { case (ep, img, y, x, v) =>
+        val (sx, sy) = shifts.getOrElse((ep, img), (0L, 0L))
+        (ep, img, Math.floorMod(y + sy, height.toLong),
           Math.floorMod(x + sx, width.toLong), v)
       }
-      .groupByKey(_._2)
-      .flatMapGroups((y, row) => clipStacks(y, row.toArray))
-      .toDF("y", "x", "v", "n_stack")
+      .groupByKey(r => (r._1, r._3))
+      .flatMapGroups((key, row) => clipStacks(key._1, key._2, row.toArray))
+      .toDF("epoch_id", "y", "x", "v", "n_stack")
   }
 
   /** Each image's integer (shift_x, shift_y) onto the reference image, the
@@ -286,25 +337,26 @@ object Photometry {
     }
   }
 
-  /** The clipped median of every pixel stack in one row `y` of the rolled
-    * pixels `(img_id, y, x, v)`: per x, the values in `img_id` order
-    * through [[SigmaClippedStats.clip]] (sigma 2, five rounds), emitted as
-    * `(y, x, median, n)` in x order. */
-  private def clipStacks(y: Long, row: Array[(Long, Long, Long, Double)])
-      : Iterator[(Long, Long, Double, Long)] = {
-    java.util.Arrays.sort(row, (a: (Long, Long, Long, Double), b: (Long, Long, Long, Double)) =>
-      if (a._3 != b._3) java.lang.Long.compare(a._3, b._3)
-      else java.lang.Long.compare(a._1, b._1))
+  /** The clipped median of every pixel stack in one row `y` of epoch `ep`'s
+    * rolled pixels `(epoch_id, img_id, y, x, v)`: per x, the values in
+    * `img_id` order through [[SigmaClippedStats.clip]] (sigma 2, five
+    * rounds), emitted as `(ep, y, x, median, n)` in x order. */
+  private def clipStacks(ep: Long, y: Long, row: Array[(Long, Long, Long, Long, Double)])
+      : Iterator[(Long, Long, Long, Double, Long)] = {
+    java.util.Arrays.sort(row, (a: (Long, Long, Long, Long, Double),
+        b: (Long, Long, Long, Long, Double)) =>
+      if (a._4 != b._4) java.lang.Long.compare(a._4, b._4)
+      else java.lang.Long.compare(a._2, b._2))
     val vals = new Array[Double](row.length)
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double, Long)]
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Double, Long)]
     var lo = 0
     while (lo < row.length) {
       var hi = lo
-      while (hi < row.length && row(hi)._3 == row(lo)._3) {
-        vals(hi - lo) = row(hi)._4; hi += 1
+      while (hi < row.length && row(hi)._4 == row(lo)._4) {
+        vals(hi - lo) = row(hi)._5; hi += 1
       }
       val s = SigmaClippedStats.clip(vals, hi - lo, 2.0, 5)
-      out += ((y, row(lo)._3, s.median, s.n))
+      out += ((ep, y, row(lo)._4, s.median, s.n))
       lo = hi
     }
     out.iterator
@@ -377,30 +429,6 @@ object Photometry {
       val vs = ring.result()
       if (vs.isEmpty) None else Some(SigmaClippedStats.clip(vs, 2.0, 5).median)
     }
-  }
-
-  /** EPSF-style oversampled mean stack of flux-normalized star cutouts
-    * (core.py:384-414; oversampling=2, core.py:411). Each star's cutout is
-    * mapped onto an oversampled grid centered on its centroid and the stack
-    * is averaged per grid cell — the grouped iterative aggregate of
-    * SURVEY.md §2.5 (smoothing iterations elided: one stacking pass). */
-  def buildEpsf(pixels: DataFrame, stars: DataFrame, cutoutRadius: Int,
-      oversample: Int): DataFrame = {
-    val boxOffs = array((-cutoutRadius to cutoutRadius).map(lit): _*)
-    val cut = stars
-      .select(col("img_id"), col("star_id"), col("xcentroid"), col("ycentroid"),
-        col("flux"))
-      .withColumn("dy", explode(boxOffs)).withColumn("dx", explode(boxOffs))
-      .select(col("img_id"), col("star_id"), col("xcentroid"), col("ycentroid"),
-        col("flux"),
-        (round(col("ycentroid")).cast(LongType) + col("dy")).as("y"),
-        (round(col("xcentroid")).cast(LongType) + col("dx")).as("x"))
-    cut.join(pixels, Seq("img_id", "y", "x"))
-      .withColumn("u", round((col("x") - col("xcentroid")) * oversample).cast(LongType))
-      .withColumn("w", round((col("y") - col("ycentroid")) * oversample).cast(LongType))
-      .withColumn("nv", col("v") / col("flux"))
-      .groupBy(col("w"), col("u"))
-      .agg(avg(col("nv")).as("epsf"), count(lit(1)).as("n_samples"))
   }
 
   /** Iterative EPSF build (core.py:384-414: oversampling=2, maxiters≤10):
@@ -691,11 +719,11 @@ object Photometry {
       psf: PsfModel, boxR: Int, nIters: Int, nSigma: Double,
       statsOpt: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
-    val stats = statsMap(statsOpt.getOrElse(backgroundStats(pixels)))
+    val stats = statsMap(oneEpoch(statsOpt.getOrElse(backgroundStats(pixels))))
     pixels.select(col("img_id"), col("y"), col("x"), col("v"))
       .as[(Long, Long, Long, Double)]
       .groupByKey(_._1)
-      .flatMapGroups((img, rows) => stats.get(img) match {
+      .flatMapGroups((img, rows) => stats.get((0L, img)) match {
         case Some((median, std)) =>
           photometryKernel(Frame.load(img, rows), median, median + nSigma * std,
             psf, boxR, nIters)
@@ -868,31 +896,6 @@ object Photometry {
       }
     }
     xs.indices.map(find).toArray
-  }
-
-  /** DAOGroup (core.py:440): connected components of the within-`linkRadius`
-    * star graph, per image, via flatMapGroups over [[linkGroups]] — no
-    * Catalyst primitive expresses transitive closure, and per-image
-    * cardinality is bounded, so in-memory per group is the right scale
-    * tradeoff. */
-  def groupStars(spark: SparkSession, stars: DataFrame, linkRadius: Double): DataFrame = {
-    import spark.implicits._
-    stars.select(col("img_id"), col("star_id"), col("xcentroid"),
-        col("ycentroid"), col("peak"), col("flux"))
-      .as[(Long, Int, Double, Double, Double, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (img, it) =>
-        // star_id order, not shuffle arrival order: a group's id is its
-        // smallest star_id, and the rows it emits keep that order
-        val ss = it.toArray.sortBy(_._2)
-        val root = linkGroups(ss.map(_._3), ss.map(_._4), linkRadius * linkRadius)
-        ss.indices.iterator.map { i =>
-          val s = ss(i)
-          (img, s._2, ss(root(i))._2, s._3, s._4, s._5, s._6)
-        }
-      }
-      .toDF("img_id", "star_id", "group_id", "xcentroid", "ycentroid",
-        "peak", "flux")
   }
 
   /** Per-group PSF fit (fit_stars, core.py:442-450) over the group's pixel

@@ -9,11 +9,13 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 /** The reference's per-epoch loop as a stream (SURVEY.md §2.9): epochs
   * land incrementally (new FITS sets in a directory ≙ new micro-batches),
-  * and each micro-batch runs the REAL batch epoch pipeline per epoch —
-  * combine → background → FWHM → detect → photometry → catalog, guards
-  * included — then upserts keyed by epoch id. Re-delivered epochs
-  * overwrite their own slot, so crash-and-rerun (README.md:22-27) is
-  * idempotent end to end.
+  * and each micro-batch runs the REAL batch epoch pipeline over all of its
+  * epochs in one plan ([[EpochPipeline.runEpochs]]) — combine → background
+  * → FWHM → detect → photometry → catalog, guards included — then upserts
+  * keyed by epoch id. Re-delivered epochs overwrite their own slot, so
+  * crash-and-rerun (README.md:22-27) is idempotent end to end. A
+  * micro-batch's pixels are pinned whole, so `maxFilesPerTrigger` bounds
+  * the pin.
   */
 object EpochStream {
 
@@ -26,23 +28,15 @@ object EpochStream {
       minStars: Int): Seq[(Long, String, Seq[Measured])] = {
     val spark = batch.sparkSession
     import spark.implicits._
-    // the epoch pipeline makes several passes over its pixels — pin the
-    // micro-batch so each pass doesn't re-read the source
-    val pinned = batch.persist()
-    try {
-      val epochs = pinned.select(col("epoch_id")).distinct()
-        .collect().map(_.getLong(0)).sorted
-      epochs.toSeq.map { ep =>
-        val px = pinned.filter(col("epoch_id") === ep).drop("epoch_id")
-        val res = EpochPipeline.run(spark, px, width, height,
-          minStars = minStars)
-        val stars = res.catalog
-          .select(col("xcentroid"), col("ycentroid"), col("flux"))
-          .as[(Double, Double, Double)].collect()
-          .map(t => Measured(t._1, t._2, t._3)).toSeq
-        (ep, res.status, stars)
-      }
-    } finally { pinned.unpersist(); () }
+    val (statuses, catalog) = EpochPipeline.runEpochs(spark, batch, width,
+      height, minStars = minStars)
+    val stars = catalog
+      .select(col("epoch_id"), col("xcentroid"), col("ycentroid"), col("flux"))
+      .as[(Long, Double, Double, Double)].collect().toSeq
+      .groupMap(_._1)(t => Measured(t._2, t._3, t._4))
+    statuses.toSeq.sorted.map { case (ep, status) =>
+      (ep, status, stars.getOrElse(ep, Nil))
+    }
   }
 
   /** Start the stream over long-form pixel rows

@@ -122,16 +122,16 @@ object ScaleBench {
         f"status=${res.status} fwhm=${res.fwhm}%.2f stars=$n wall=$dt%.1f s " +
         f"heap=$heapGib%.1fg threads=$cpus")
     } else {
-      // epoch-level concurrency (runEpochs): independent epochs overlap
-      // their stages across the executor pool — the cluster story's
-      // single-node analog. Epochs reuse the same rendered frames tagged
-      // with distinct epoch ids; results stay per-epoch.
+      // a campaign (runEpochs): every epoch runs in the same stages, the
+      // tasks of different epochs side by side on the executors. Epochs
+      // reuse the same rendered frames, image ids included, tagged with
+      // distinct epoch ids; results stay per-epoch.
       val tagged = (0 until nEpochs)
         .map(e => px.withColumn("epoch_id", lit(e.toLong)))
         .reduce(_.unionByName(_))
       val t0 = System.nanoTime()
       val (statuses, catalog) = EpochPipeline.runEpochs(
-        spark, tagged, "epoch_id", size, size, minStars = 5)
+        spark, tagged, size, size, minStars = 5)
       val n = catalog.count()
       val dt = (System.nanoTime() - t0) / 1e9
       println(f"SCALE-CONCURRENT size=${size}x$size images=$nImages epochs=$nEpochs " +

@@ -116,7 +116,7 @@ class EdgeCaseSpec extends SparkSpec {
   test("empty star table: grouping and annulus return empty, not error") {
     val empty = Seq.empty[(Long, Int, Double, Double, Double, Double)]
       .toDF("img_id", "star_id", "xcentroid", "ycentroid", "peak", "flux")
-    assert(Photometry.groupStars(spark, empty, 5.0).count() === 0)
+    assert(Photometry.linkGroups(Array.empty, Array.empty, 25.0).isEmpty)
     assert(Photometry.annulusBackground(flatField(1L, 16), empty, 3.0, 6.0).count() === 0)
   }
 }

@@ -57,6 +57,15 @@ class EpochKernelSpec extends SparkSpec {
     }
   }
 
+  test("the stats census ships up to MaxCensusImages images and fails naming the count above") {
+    def census(n: Int) = (0 until n).map(i => (i % 7L, i.toLong, 100.0, 100.0, 1.0))
+      .toDF("epoch_id", "img_id", "bkg_mean", "bkg_median", "bkg_std")
+    val max = Photometry.MaxCensusImages
+    assert(Photometry.statsMap(census(max)).size === max)
+    val e = intercept[IllegalArgumentException](Photometry.statsMap(census(max + 1)))
+    assert(e.getMessage.contains(s"${max + 1} images"), e.getMessage)
+  }
+
   test("job fence: an epoch after the combine costs as many jobs for 60 stars as for 5") {
     // one-image epochs (no combine) on a 24 px grid of stars, wider apart
     // than the 5·FWHM crowding radius, so both reach the ok branch

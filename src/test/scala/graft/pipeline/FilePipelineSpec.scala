@@ -80,6 +80,27 @@ class FilePipelineSpec extends SparkSpec {
     assert(back.filter($"epoch_id" === 2L).count() === 0L)
   }
 
+  test("a two-epoch run names its own call sites, none in java.util.concurrent") {
+    val dir = Files.createTempDirectory("graft-filepipe-sites")
+    Seq("e1a" -> (0, 0), "e1b" -> (1, -1), "e2a" -> (0, 0), "e2b" -> (-1, 1))
+      .zipWithIndex.foreach { case ((f, shift), i) =>
+        Files.write(dir.resolve(s"$f.fits"), fits(i + 1L, shift, starless = false))
+      }
+    Files.write(dir.resolve("meta.csv"),
+      "e1a.fits,1\ne1b.fits,1\ne2a.fits,2\ne2b.fits,2\n".getBytes("US-ASCII"))
+    val (res, sites) = callSitesDuring(FilePipeline.run(spark,
+      dir.resolve("meta.csv").toString, dir.toString + "/*.fits", W, W,
+      minStars = 1, resultsDir = Some(dir.resolve("results").toString)))
+    assert(res.statuses === Map(1L -> "ok", 2L -> "ok"))
+    sites.foreach(s => info(s))
+    // a short call site is "<method> at <File>.java:<line>"
+    val inConcurrent = sites.filter { s =>
+      "at (\\w+)\\.java:".r.findFirstMatchIn(s).exists(m => scala.util.Try(
+        Class.forName(s"java.util.concurrent.${m.group(1)}")).isSuccess)
+    }
+    assert(sites.nonEmpty && inConcurrent.isEmpty, inConcurrent.mkString("; "))
+  }
+
   test("listing the FITS files for their epochs reads no file content") {
     val dir = Files.createTempDirectory("graft-filepipe-list")
     Files.write(dir.resolve("big.fits"), fits(1, (0, 0), starless = false))

@@ -231,7 +231,7 @@ class PhotometrySpec extends SparkSpec {
   test("EPSF stack peaks at the center cell") {
     val px = Photometry.subtractBackground(starField(1L, 64, 100.0, planted))
     val stars = Photometry.detectStars(px, 10.0, 4)
-    val epsf = Photometry.buildEpsf(px, stars, 5, 2)
+    val epsf = Photometry.buildEpsfIterative(px, stars, 5, 2)
       .select("w", "u", "epsf").as[(Long, Long, Double)].collect()
     val center = epsf.find(e => e._1 == 0 && e._2 == 0).get._3
     assert(epsf.forall(_._3 <= center + 1e-9))
@@ -328,14 +328,11 @@ class PhotometrySpec extends SparkSpec {
   }
 
   test("star grouping: connected components within link radius") {
-    val stars = Seq(
-      (1L, 1, 10.0, 10.0, 1.0, 1.0), (1L, 2, 12.0, 10.0, 1.0, 1.0),
-      (1L, 3, 13.5, 10.0, 1.0, 1.0), // chain 1-2-3 transitively linked
-      (1L, 4, 50.0, 50.0, 1.0, 1.0))
-      .toDF("img_id", "star_id", "xcentroid", "ycentroid", "peak", "flux")
-    val groups = Photometry.groupStars(spark, stars, 2.5)
-      .select("star_id", "group_id").as[(Int, Int)].collect().toMap
-    assert(groups(1) === groups(2) && groups(2) === groups(3))
-    assert(groups(4) !== groups(1))
+    // stars 1-4 in star_id order; chain 1-2-3 transitively linked at 2.5
+    val xs = Array(10.0, 12.0, 13.5, 50.0)
+    val ys = Array(10.0, 10.0, 10.0, 50.0)
+    val groups = Photometry.linkGroups(xs, ys, 2.5 * 2.5)
+    assert(groups(0) === groups(1) && groups(1) === groups(2))
+    assert(groups(3) !== groups(0))
   }
 }

@@ -56,6 +56,15 @@ class EpochStreamSpec extends SparkSpec {
       assert(store.size === 2)
       assert(store(1L)._1 === before._1)
       assert(store(1L)._2.length === before._2.length)
+
+      // both epochs, each with img_id 0, in ONE micro-batch: the same
+      // statuses and stars as delivered in two
+      val separate = (store(1L), store(2L))
+      stream.addData(epochRows(1L, starless = false) ++
+        epochRows(2L, starless = true))
+      q.processAllAvailable()
+      assert(store.size === 2)
+      assert((store(1L), store(2L)) === separate)
     } finally q.stop()
   }
 
