@@ -145,12 +145,13 @@ object Photometry {
     pixels.select(col("epoch_id"), col("img_id"), col("y"), col("x"), col("v"))
       .as[(Long, Long, Long, Long, Double)]
       .groupByKey(r => (r._1, r._2))
+      // the shuffled rows carry the key once, beside (img_id, y, x, v)
+      .mapValues(r => (r._2, r._3, r._4, r._5))
       .flatMapGroups((key, rows) => stats.get(key) match {
         case Some((median, std)) =>
           val (ep, img) = key
-          detect(Frame.load(img, rows.map(r => (r._2, r._3, r._4, r._5))),
-              median, median + nSigma * std, boxRadius, peakMax, excludeBorder,
-              width, height)
+          detect(Frame.load(img, rows), median, median + nSigma * std,
+              boxRadius, peakMax, excludeBorder, width, height)
             .iterator.map(d => (ep, img, d.starId, d.xcentroid, d.ycentroid,
               d.sharpness, d.roundness, d.npix, median, d.peak, d.flux, d.mag))
         case None => Iterator.empty
@@ -302,6 +303,7 @@ object Photometry {
           Math.floorMod(x + sx, width.toLong), v)
       }
       .groupByKey(r => (r._1, r._3))
+      .mapValues(r => (r._2, r._3, r._4, r._5))
       .flatMapGroups((key, row) => clipStacks(key._1, key._2, row.toArray))
       .toDF("epoch_id", "y", "x", "v", "n_stack")
   }
@@ -338,25 +340,24 @@ object Photometry {
   }
 
   /** The clipped median of every pixel stack in one row `y` of epoch `ep`'s
-    * rolled pixels `(epoch_id, img_id, y, x, v)`: per x, the values in
-    * `img_id` order through [[SigmaClippedStats.clip]] (sigma 2, five
-    * rounds), emitted as `(ep, y, x, median, n)` in x order. */
-  private def clipStacks(ep: Long, y: Long, row: Array[(Long, Long, Long, Long, Double)])
+    * rolled pixels `(img_id, y, x, v)`: per x, the values in `img_id` order
+    * through [[SigmaClippedStats.clip]] (sigma 2, five rounds), emitted as
+    * `(ep, y, x, median, n)` in x order. */
+  private def clipStacks(ep: Long, y: Long, row: Array[(Long, Long, Long, Double)])
       : Iterator[(Long, Long, Long, Double, Long)] = {
-    java.util.Arrays.sort(row, (a: (Long, Long, Long, Long, Double),
-        b: (Long, Long, Long, Long, Double)) =>
-      if (a._4 != b._4) java.lang.Long.compare(a._4, b._4)
-      else java.lang.Long.compare(a._2, b._2))
+    java.util.Arrays.sort(row, (a: (Long, Long, Long, Double), b: (Long, Long, Long, Double)) =>
+      if (a._3 != b._3) java.lang.Long.compare(a._3, b._3)
+      else java.lang.Long.compare(a._1, b._1))
     val vals = new Array[Double](row.length)
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Double, Long)]
     var lo = 0
     while (lo < row.length) {
       var hi = lo
-      while (hi < row.length && row(hi)._4 == row(lo)._4) {
-        vals(hi - lo) = row(hi)._5; hi += 1
+      while (hi < row.length && row(hi)._3 == row(lo)._3) {
+        vals(hi - lo) = row(hi)._4; hi += 1
       }
       val s = SigmaClippedStats.clip(vals, hi - lo, 2.0, 5)
-      out += ((ep, y, row(lo)._4, s.median, s.n))
+      out += ((ep, y, row(lo)._3, s.median, s.n))
       lo = hi
     }
     out.iterator
