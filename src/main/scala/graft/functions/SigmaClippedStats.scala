@@ -27,11 +27,13 @@ final case class ClipStats(n: Long, mean: Double, median: Double, std: Double,
   * holds the group's values exactly (SURVEY.md §7 hard-part 3), with
   * partial buffers merged by concatenation. Most call sites have many
   * small groups (images per pixel ≈ 3 in the median combine, annulus
-  * ≈ 1.5 k px), but the per-image background (`Photometry.backgroundStats`)
-  * is one group of 16.7 M values per 4096² image. Memory per task: the
-  * buffer at 8 B per value (up to 16 B while it grows by doubling) plus the
-  * clip's one sorted copy at 8 B per value, so at most ≈ 400 MB for a
-  * 4096² image.
+  * ≈ 1.5 k px), but the public per-image background
+  * (`Photometry.backgroundStats`) is one group of 16.7 M values per 4096²
+  * image. Memory per task: the buffer at 8 B per value (up to 16 B while it
+  * grows by doubling) plus the clip's one sorted copy at 8 B per value, so
+  * at most ≈ 400 MB for a 4096² image. The frame kernels of detection,
+  * photometry and the epoch do not use this aggregate: each calls [[clip]]
+  * on its own frame's values (`Photometry.Frame.background`).
   * Mean/std use Kahan compensated summation so results are reproducible
   * regardless of merge order to well below the 1e-6 output rounding used
   * by the oracle queries.

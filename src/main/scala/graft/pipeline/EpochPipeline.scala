@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import graft.functions.SigmaClippedStats
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.functions._
@@ -18,12 +17,15 @@ import org.apache.spark.sql.functions._
   *
   * A campaign of epochs ([[runEpochs]]) is one plan keyed by `epoch_id`,
   * the reference's per-epoch loop (psf_phot.py:44) as a `groupBy` on the
-  * epoch (SURVEY.md:84); [[run]] is a campaign of one. The plan is two
+  * epoch (SURVEY.md:84); [[run]] is a campaign of one. The plan is three
   * distributed phases and a driver tail:
-  *  - the combine: the per-image stats, the alignment's detection and the
-  *    per-row clipped median of every multi-image epoch in the same stages,
-  *    keyed by `(epoch_id, img_id)` ([[Photometry.combineEpochs]]); a
-  *    one-image epoch is its own combined frame;
+  *  - per image: one task per `(epoch_id, img_id)` clips the image's
+  *    background and finds its stars ([[Photometry.detectKeyed]]); the
+  *    collected rows count each epoch's images and hold the alignment's
+  *    star tables;
+  *  - the combine: the per-row clipped median of every multi-image epoch in
+  *    the same stages ([[Photometry.combineEpochs]]); a one-image epoch is
+  *    its own combined frame;
   *  - the frame kernel: the combined frames shuffle once, by epoch, and ONE
   *    task per epoch runs every step after the combine in memory
   *    ([[epochKernel]]), returning the epoch's status, FWHM and measured
@@ -65,28 +67,25 @@ object EpochPipeline {
   private val CutoutRadius = 8
 
   /** FWHM estimation (find_fwhm, core.py:52-114): pick the brightest
-    * unsaturated star ([[fwhmStar]]) among the `maxTries` brightest rows
+    * unsaturated star ([[fwhmStar]]) among the `MaxTries` brightest rows
     * of `stars` by (peak desc, y, x), then LSQ-fit a 2-D Gaussian to its
     * cutout ([[cutoutFwhm]]). The candidates are collected to the driver;
     * the pixel cutout is gathered by a filter over `pixels`. */
-  def findFwhm(spark: SparkSession, pixels: DataFrame, stars: DataFrame,
-      satLimit: Double = SatLimit, minPeak: Double = MinPeak,
-      minSeparation: Double = MinSeparation, maxTries: Int = MaxTries,
-      cutoutRadius: Int = CutoutRadius): Double = {
+  def findFwhm(spark: SparkSession, pixels: DataFrame, stars: DataFrame): Double = {
     import spark.implicits._
     val cands = stars
       .orderBy(col("peak").desc, col("ycentroid"), col("xcentroid"))
       .select(col("img_id"), col("xcentroid"), col("ycentroid"), col("peak"))
-      .limit(maxTries)
+      .limit(MaxTries)
       .as[(Long, Double, Double, Double)]
-      .collect() // ≤ maxTries rows — the reference's bounded search
-    fwhmStar(cands, satLimit, minPeak, minSeparation) match {
+      .collect() // ≤ MaxTries rows — the reference's bounded search
+    fwhmStar(cands, SatLimit, MinPeak, MinSeparation) match {
       case None => 0.0 // sentinel: no usable star (core.py:107-113)
       case Some((img, xc, yc, _)) =>
         val cut = pixels
           .filter(col("img_id") === img &&
-            col("y").between(math.round(yc) - cutoutRadius, math.round(yc) + cutoutRadius) &&
-            col("x").between(math.round(xc) - cutoutRadius, math.round(xc) + cutoutRadius))
+            col("y").between(math.round(yc) - CutoutRadius, math.round(yc) + CutoutRadius) &&
+            col("x").between(math.round(xc) - CutoutRadius, math.round(xc) + CutoutRadius))
           .select(col("x").cast("double"), col("y").cast("double"), col("v"))
           .as[(Double, Double, Double)]
           .collect()
@@ -196,8 +195,8 @@ object EpochPipeline {
   /** Every step of the epoch after the combine, over the combined `frame`
     * in memory, with the rules of the DataFrame operators that the
     * registered queries use:
-    *  1. background: [[SigmaClippedStats.clip]] (σ 2, five rounds) of the
-    *     frame's values; the residual is v − median, and the detection
+    *  1. background: [[Photometry.Frame.background]] (σ 2, five rounds) of
+    *     the frame's values; the residual is v − median, and the detection
     *     threshold `NSigma`·std above it (psf_phot.py:68-69);
     *  2. FWHM ([[findFwhm]]): the above-threshold cells by (peak desc, y,
     *     x), the first `MaxTries` through [[fwhmStar]], and a Gaussian fit
@@ -222,16 +221,13 @@ object EpochPipeline {
   private[pipeline] def epochKernel(frame: Photometry.Frame, minStars: Int): Outcome = {
     import Photometry.Frame
     val (v, present) = (frame.v, frame.present)
-    val values = new Array[Double](present.cardinality)
-    var (i, k) = (present.nextSetBit(0), 0)
-    while (i >= 0) { values(k) = v(i); k += 1; i = present.nextSetBit(i + 1) }
-    val bkg = SigmaClippedStats.clip(values, 2.0, 5)
+    val (median, std) = frame.background()
     val res = new Array[Double](v.length)
-    i = present.nextSetBit(0)
-    while (i >= 0) { res(i) = v(i) - bkg.median; i = present.nextSetBit(i + 1) }
+    var i = present.nextSetBit(0)
+    while (i >= 0) { res(i) = v(i) - median; i = present.nextSetBit(i + 1) }
     val sub = new Frame(frame.img, frame.y0, frame.x0, frame.height, frame.width,
       res, present)
-    val threshold = 0.0 + NSigma * bkg.std
+    val threshold = 0.0 + NSigma * std
 
     // FWHM: the reference's argmax walk over the image (np.max + np.where,
     // core.py:72-76) runs over the above-threshold cells themselves
@@ -292,15 +288,15 @@ object EpochPipeline {
     *
     * `epochIds` lists the epochs when the caller knows them: an epoch
     * listed without pixels takes the no-FWHM branch, and an empty list
-    * reads nothing. Without it the epochs are those of the stats census.
+    * reads nothing. Without it the epochs are those that have pixels.
     *
     * Memory: the pin is a `localCheckpoint` of the whole campaign's
     * pixels, whose blocks spill to disk past the storage memory, so a
     * caller bounds it by the campaign it hands in (a micro-batch of
     * [[graft.streaming.EpochStream]] is bounded by `maxFilesPerTrigger`).
-    * A kernel task holds one combined frame, at most 24.2 B per cell
-    * ([[Photometry.MaxFrameCells]]), and the stats census of every image
-    * rides in the detection's closure ([[Photometry.MaxCensusImages]]). */
+    * A per-image task holds one image and a kernel task one combined
+    * frame, each at most 24.2 B per cell ([[Photometry.MaxFrameCells]]);
+    * each clips its own frame, so no per-image stats ride in a closure. */
   def runEpochs(spark: SparkSession, pixels: DataFrame, width: Int, height: Int,
       minStars: Int = 3, reportDir: Option[String] = None,
       epochIds: Option[Seq[Long]] = None): (Map[Long, String], DataFrame) = {
@@ -324,25 +320,24 @@ object EpochPipeline {
   private val NoFrame = Outcome("aborted_no_fwhm", 0.0, Nil)
 
   /** Every epoch of the pinned campaign `(epoch_id, img_id, y, x, v)`
-    * through the combine and [[epochKernel]], keyed by epoch. The stats
-    * census (one collect, [[Photometry.imageStats]]) counts each epoch's
-    * images: only multi-image epochs go through the alignment and the
+    * through the combine and [[epochKernel]], keyed by epoch. One per-image
+    * pass ([[Photometry.detectKeyed]], one collect, each task clipping its
+    * own image) counts each epoch's images and finds the alignment's
+    * stars: only multi-image epochs go through the alignment and the
     * clipped combine; one-image epochs go to the kernel as they are. */
   private[pipeline] def outcomes(spark: SparkSession, pinned: DataFrame, width: Int,
       height: Int, minStars: Int): Map[Long, Outcome] = {
     import spark.implicits._
-    val census = calledAs(spark, "runEpochs: image stats")(
-      Photometry.imageStats(pinned))
-    val images = census.select(col("epoch_id")).as[Long].collect()
-      .groupMapReduce(identity)(_ => 1)(_ + _)
+    val images = calledAs(spark, "runEpochs: background and stars")(
+      Photometry.detectKeyed(pinned, None, NSigma, 3, Double.MaxValue, 0, 0L, 0L)
+        .collect()).toSeq.groupBy(_._1)
     if (images.isEmpty) return Map.empty
-    val (multi, single) = images.keys.toSeq.partition(images(_) > 1)
+    val (multi, single) = images.keys.toSeq.partition(images(_).length > 1)
     def only(eps: Seq[Long]): DataFrame =
       if (eps.length == images.size) pinned
       else pinned.filter(col("epoch_id").isin(eps: _*))
-    val combined = Option.when(multi.nonEmpty)(
-      calledAs(spark, "runEpochs: alignment")(Photometry.combineEpochs(
-        only(multi), Photometry.statsMap(census), width, height, NSigma)))
+    val combined = Option.when(multi.nonEmpty)(Photometry.combineEpochs(
+      only(multi), multi.flatMap(images), width, height))
     val frames = (combined ++ Option.when(single.nonEmpty)(only(single)))
       .map(_.select(col("epoch_id"), col("y"), col("x"), col("v")))
       .reduce(_ union _)

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.functions.SigmaClippedStats
 import graft.functions.SigmaClippedStats.sigmaClippedStats
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -13,27 +13,26 @@ import org.apache.spark.sql.types._
   * the relational surface of every operator here; each stage shuffles it
   * once by its natural key.
   *
-  * Four stages are frame kernels that hold a whole image in one task: the
-  * background clip, as one aggregation buffer of the image's values (8 B
-  * per pixel plus the clip's sorted copy, ≈ 270 MB at 4096²), and
-  * detection ([[detectStars]]), iterative photometry
+  * Three stages are frame kernels that hold a whole image in one task as a
+  * dense [[Frame]]: detection ([[detectStars]]), iterative photometry
   * ([[iterativePhotometryWithPsf]]) and, through detection, the alignment
-  * of [[alignAndCombine]], each as a dense [[Frame]] (≈ 24 B per
-  * bounding-box cell at peak, ≈ 405 MB at 4096²). A frame whose bounding
-  * box exceeds [[MaxFrameCells]] fails its task with a message naming the
-  * image and its extent. The combine's clipped median shuffles by row and
-  * holds one row of the stack per task, and the star tables, shifts and
-  * EPSF grid are model objects held on the driver (abstraction #5).
+  * of [[alignAndCombine]]. Unless the caller supplies stats, each task
+  * clips its own frame ([[Frame.background]]), as find_stars clips the
+  * image it searches (core.py:141-143). A task peaks at ≈ 24 B per
+  * bounding-box cell (≈ 405 MB at 4096²), and a box over [[MaxFrameCells]]
+  * fails it, naming the image and its extent. The combine's clipped median
+  * shuffles by row and holds one row of the stack per task, and the star
+  * tables, shifts and EPSF grid are model objects held on the driver
+  * (abstraction #5).
   *
   * A campaign keys every per-image step by `(epoch_id, img_id)`, since
-  * image ids repeat across epochs: [[imageStats]], [[detectKeyed]] and
-  * [[combineEpochs]] serve [[EpochPipeline.runEpochs]], and the public
-  * [[backgroundStats]], [[detectStars]] and [[alignAndCombine]] are their
-  * one-epoch case (epoch 0, dropped from the output). The epoch kernel
-  * runs every step after the combine in one task per epoch; the in-memory
-  * twins it calls ([[detect]], [[epsfGrid]], [[photometryKernel]],
-  * [[annulusOf]]) keep the rules of the DataFrame operators here, which
-  * the registered queries use.
+  * image ids repeat across epochs: [[detectKeyed]] and [[combineEpochs]]
+  * serve [[EpochPipeline.runEpochs]], and the public [[detectStars]] and
+  * [[alignAndCombine]] are their one-epoch case (epoch 0, dropped from the
+  * output). The epoch kernel runs every step after the combine in one task
+  * per epoch; the in-memory twins it calls ([[detect]], [[epsfGrid]],
+  * [[photometryKernel]], [[annulusOf]]) keep the rules of the DataFrame
+  * operators here, which the registered queries use.
   */
 object Photometry {
 
@@ -55,16 +54,11 @@ object Photometry {
     * `bufferable` is ignored. It stays only because
     * `perfbench/harness/src/main/scala/perfbench/EpochStages.scala` passes
     * it by name. */
-  def backgroundStats(pixels: DataFrame, bufferable: Boolean = true): DataFrame =
-    imageStats(oneEpoch(pixels)).drop("epoch_id")
-
-  /** [[backgroundStats]] of a campaign's pixels `(epoch_id, img_id, y, x,
-    * v)`, one row per `(epoch_id, img_id)`: the campaign's stats census. */
-  private[pipeline] def imageStats(pixels: DataFrame): DataFrame = {
+  def backgroundStats(pixels: DataFrame, bufferable: Boolean = true): DataFrame = {
     val scs = sigmaClippedStats(2.0, 5)
-    val stats = pixels.groupBy(col("epoch_id"), col("img_id"))
+    val stats = pixels.groupBy(col("img_id"))
       .agg(scs(col("v")).as("s"))
-      .select(col("epoch_id"), col("img_id"), col("s.mean").as("bkg_mean"),
+      .select(col("img_id"), col("s.mean").as("bkg_mean"),
         col("s.median").as("bkg_median"), col("s.std").as("bkg_std"))
     pixels.sparkSession.createDataFrame(
       java.util.Arrays.asList(stats.collect(): _*), stats.schema)
@@ -73,23 +67,36 @@ object Photometry {
   /** `df` as epoch 0 of a campaign. */
   private def oneEpoch(df: DataFrame): DataFrame = df.withColumn("epoch_id", lit(0L))
 
-  /** The largest stats census, in images, that [[statsMap]] ships in the
-    * frame kernels' closures: 2¹⁴, about 16× the reference's whole dataset
-    * (~350 image sets × ~3 images, BASELINE.md). */
+  /** The largest table of caller-supplied stats, in images, that
+    * [[statsMap]] ships in the frame kernels' closures: 2¹⁴, about 16× the
+    * reference's whole dataset (~350 image sets × ~3 images, BASELINE.md). */
   val MaxCensusImages: Int = 1 << 14
 
-  /** Per-image `(bkg_median, bkg_std)` of a stats census `(epoch_id,
-    * img_id, …)` collected to the driver, for the frame kernels' closures;
-    * rows with a null stat are dropped, so their images emit nothing. A
-    * census over [[MaxCensusImages]] fails, naming its size. */
-  private[pipeline] def statsMap(stats: DataFrame): Map[(Long, Long), (Double, Double)] = {
-    val rows = stats.select(col("epoch_id"), col("img_id"), col("bkg_median"),
-      col("bkg_std")).collect()
-    require(rows.length <= MaxCensusImages, s"stats census: ${rows.length} " +
+  /** Per-image `(bkg_median, bkg_std)` of caller-supplied [[backgroundStats]]
+    * rows collected to the driver, for the frame kernels' closures; rows
+    * with a null stat are dropped, so their images emit nothing. A table
+    * over [[MaxCensusImages]] fails, naming its size. */
+  private[pipeline] def statsMap(stats: DataFrame): Map[Long, (Double, Double)] = {
+    val rows = stats.select(col("img_id"), col("bkg_median"), col("bkg_std"))
+      .collect()
+    require(rows.length <= MaxCensusImages, s"supplied stats: ${rows.length} " +
       s"images, over the $MaxCensusImages-image limit of one kernel closure")
     rows.collect { case r if !r.anyNull =>
-      (r.getLong(0), r.getLong(1)) -> (r.getDouble(2), r.getDouble(3))
+      r.getLong(0) -> (r.getDouble(1), r.getDouble(2))
     }.toMap
+  }
+
+  /** `kernel` over image `img`, loaded from `rows`, with its background
+    * `(median, std)`: its row of `stats` when the caller supplied stats (an
+    * image without one is not loaded and gives `None`), else the frame's
+    * own [[Frame.background]]. */
+  private def withBackground[T](stats: Option[Map[Long, (Double, Double)]],
+      img: Long, rows: Iterator[(Long, Long, Long, Double)])(
+      kernel: (Frame, (Double, Double)) => T): Option[T] = stats match {
+    case Some(m) => m.get(img).map(bkg => kernel(Frame.load(img, rows), bkg))
+    case None =>
+      val frame = Frame.load(img, rows)
+      Some(kernel(frame, frame.background()))
   }
 
   /** Global background subtraction (psf_phot.py:69: image −= median). */
@@ -113,33 +120,47 @@ object Photometry {
     * with a FIXED threshold (core.py:439), so repeated detections over the
     * same image must not re-estimate the background.
     *
-    * Plan: the stats are collected to the driver and shipped in the task
-    * closure; the pixels shuffle once by `img_id` and each task loads its
-    * image into a dense [[Frame]] and runs [[detect]] over it, so a call
-    * launches the same few jobs at any star count. An image without a
-    * stats row emits nothing. Emits
+    * Plan: the pixels shuffle once by `img_id` and each task loads its
+    * image into a dense [[Frame]], takes its background and runs [[detect]]
+    * over it ([[detectKeyed]]), so a call launches the same few jobs at any
+    * star count. Without `precomputedStats` the task clips its own frame
+    * (find_stars' own sigma_clipped_stats, core.py:141-143); supplied stats
+    * are collected to the driver and shipped in the task closure
+    * ([[statsMap]]), and an image without a stats row emits nothing. Emits
     * `(img_id, star_id, xcentroid, ycentroid, sharpness, roundness, npix,
     * sky, peak, flux, mag)`, one row per peak: the Generator shape (§2.11).
     * Pixels are unique per (img_id, y, x).
     *
     * Memory: one image per task, ≈ 24 B per bounding-box cell at peak
-    * (16 B per pixel while streaming plus the 8 B dense frame), ≈ 405 MB
-    * for a 4096² frame; a bounding box over [[MaxFrameCells]] fails the
-    * task, naming the image and its extent. */
+    * (16 B per pixel while streaming plus the 8 B dense frame, then the
+    * frame plus the clip's copy of its values and their sorted copy; no
+    * [[backgroundStats]] buffer), ≈ 405 MB for a 4096² frame; a bounding
+    * box over [[MaxFrameCells]] fails the task, naming the image and its
+    * extent. */
   def detectStars(pixels: DataFrame, nSigma: Double, boxRadius: Int,
       peakMax: Double, excludeBorder: Int, width: Long, height: Long,
       precomputedStats: Option[DataFrame] = None): DataFrame = {
-    val px = oneEpoch(pixels)
-    detectKeyed(px, statsMap(precomputedStats.fold(imageStats(px))(oneEpoch)),
-      nSigma, boxRadius, peakMax, excludeBorder, width, height).drop("epoch_id")
+    val spark = pixels.sparkSession
+    import spark.implicits._
+    detectKeyed(oneEpoch(pixels), precomputedStats.map(statsMap), nSigma,
+        boxRadius, peakMax, excludeBorder, width, height)
+      .flatMap { case (_, img, sky, found) => found.map(d => (img, d.starId,
+        d.xcentroid, d.ycentroid, d.sharpness, d.roundness, d.npix, sky, d.peak,
+        d.flux, d.mag)) }
+      .toDF("img_id", "star_id", "xcentroid", "ycentroid", "sharpness",
+        "roundness", "npix", "sky", "peak", "flux", "mag")
   }
 
-  /** [[detectStars]] over a campaign's pixels `(epoch_id, img_id, y, x, v)`
-    * with the census of [[statsMap]]: one task per `(epoch_id, img_id)`,
-    * rows prefixed with `epoch_id`. */
+  /** The detection of [[detectStars]] over a campaign's pixels `(epoch_id,
+    * img_id, y, x, v)`, one task per `(epoch_id, img_id)`, with the
+    * caller's `stats` by `img_id` ([[statsMap]], the one-epoch case) or,
+    * with none, each frame's own clip: one row `(epoch_id, img_id, sky,
+    * stars)` per image with a background, so an image without a star still
+    * counts. */
   private[pipeline] def detectKeyed(pixels: DataFrame,
-      stats: Map[(Long, Long), (Double, Double)], nSigma: Double, boxRadius: Int,
-      peakMax: Double, excludeBorder: Int, width: Long, height: Long): DataFrame = {
+      stats: Option[Map[Long, (Double, Double)]], nSigma: Double,
+      boxRadius: Int, peakMax: Double, excludeBorder: Int, width: Long,
+      height: Long): Dataset[(Long, Long, Double, Seq[Detection])] = {
     val spark = pixels.sparkSession
     import spark.implicits._
     pixels.select(col("epoch_id"), col("img_id"), col("y"), col("x"), col("v"))
@@ -147,17 +168,11 @@ object Photometry {
       .groupByKey(r => (r._1, r._2))
       // the shuffled rows carry the key once, beside (img_id, y, x, v)
       .mapValues(r => (r._2, r._3, r._4, r._5))
-      .flatMapGroups((key, rows) => stats.get(key) match {
-        case Some((median, std)) =>
-          val (ep, img) = key
-          detect(Frame.load(img, rows), median, median + nSigma * std,
-              boxRadius, peakMax, excludeBorder, width, height)
-            .iterator.map(d => (ep, img, d.starId, d.xcentroid, d.ycentroid,
-              d.sharpness, d.roundness, d.npix, median, d.peak, d.flux, d.mag))
-        case None => Iterator.empty
+      .flatMapGroups((key, rows) => withBackground(stats, key._2, rows) {
+        case (frame, (median, std)) => (key._1, key._2, median, detect(frame,
+          median, median + nSigma * std, boxRadius, peakMax, excludeBorder,
+          width, height).toSeq)
       })
-      .toDF("epoch_id", "img_id", "star_id", "xcentroid", "ycentroid",
-        "sharpness", "roundness", "npix", "sky", "peak", "flux", "mag")
   }
 
   /** One star found by [[detect]]; `None` is SQL NULL. */
@@ -255,9 +270,8 @@ object Photometry {
     * match → median offset, core.py:148-177 + 203-206), roll the pixel keys
     * (core.py:209, np.roll: coordinates wrap modulo `width` and `height`),
     * then take the per-pixel sigma-clipped median across the stack
-    * (core.py:215-243), as `(y, x, v, n_stack)`. `stats` passes in the
-    * per-image [[backgroundStats]] the caller already holds, so the
-    * detection threshold costs no second clip.
+    * (core.py:215-243), as `(y, x, v, n_stack)`. Each image's threshold
+    * comes from its own clip, as in image_combiner (core.py:262-264).
     *
     * Plan: [[detectStars]] runs as its frame kernel and its star tables (a
     * few stars per image, a model object) are collected; [[alignShifts]]
@@ -270,29 +284,25 @@ object Photometry {
     * Memory: the detection holds one image per task (see [[detectStars]]);
     * the combine holds one row of the stack, `width` × images values. */
   def alignAndCombine(pixels: DataFrame, width: Int, height: Int,
-      nSigma: Double = 10.0, matchRadius: Double = 20.0,
-      stats: Option[DataFrame] = None): DataFrame = {
+      nSigma: Double = 10.0, matchRadius: Double = 20.0): DataFrame = {
     val px = oneEpoch(pixels)
-    combineEpochs(px, statsMap(stats.fold(imageStats(px))(oneEpoch)), width,
-      height, nSigma, matchRadius).drop("epoch_id")
+    combineEpochs(px, detectKeyed(px, None, nSigma, 3, Double.MaxValue, 0, 0L,
+      0L).collect().toSeq, width, height, matchRadius).drop("epoch_id")
   }
 
   /** [[alignAndCombine]] of every epoch of a campaign's pixels `(epoch_id,
-    * img_id, y, x, v)` with the census of [[statsMap]]: the star tables of
-    * all epochs are collected at once and each epoch is aligned on its own
-    * reference image; the rolled pixels shuffle once by `(epoch_id, y)`.
-    * Emits `(epoch_id, y, x, v, n_stack)`. */
+    * img_id, y, x, v)`, given the collected rows of [[detectKeyed]] for
+    * those epochs: each epoch is aligned on its own reference image, and the
+    * rolled pixels shuffle once by `(epoch_id, y)`. Emits `(epoch_id, y, x,
+    * v, n_stack)`. */
   private[pipeline] def combineEpochs(pixels: DataFrame,
-      stats: Map[(Long, Long), (Double, Double)], width: Int, height: Int,
-      nSigma: Double, matchRadius: Double = 20.0): DataFrame = {
+      found: Seq[(Long, Long, Double, Seq[Detection])], width: Int, height: Int,
+      matchRadius: Double = 20.0): DataFrame = {
     val spark = pixels.sparkSession
     import spark.implicits._
-    val stars = detectKeyed(pixels, stats, nSigma, 3, Double.MaxValue, 0, 0L, 0L)
-      .select(col("epoch_id"), col("img_id"), col("star_id"), col("xcentroid"),
-        col("ycentroid"))
-      .as[(Long, Long, Int, Double, Double)].collect()
-    val shifts = stars.toSeq.groupBy(_._1).flatMap { case (ep, ss) =>
-      alignShifts(ss.map(s => (s._2, s._3, s._4, s._5)), matchRadius)
+    val shifts = found.groupBy(_._1).flatMap { case (ep, images) =>
+      alignShifts(for ((_, img, _, stars) <- images; d <- stars)
+          yield (img, d.starId, d.xcentroid, d.ycentroid), matchRadius)
         .map { case (img, shift) => (ep, img) -> shift }
     }
     pixels.select(col("epoch_id"), col("img_id"), col("y"), col("x"), col("v"))
@@ -690,11 +700,10 @@ object Photometry {
       nIters: Int, nSigma: Double, stars: DataFrame, oversample: Int = 2,
       statsOpt: Option[DataFrame] = None): DataFrame = {
     val boxR = math.max(math.ceil(2 * fwhm).toInt, 2)
-    val stats = statsOpt.getOrElse(backgroundStats(pixels))
     val epsf = buildEpsfIterative(pixels, stars, boxR, oversample)
     iterativePhotometryWithPsf(spark, pixels,
       usablePsf(collectGridPsf(epsf, boxR, oversample), fwhm), boxR, nIters,
-      nSigma, Some(stats))
+      nSigma, statsOpt)
   }
 
   /** The detect → group → fit → subtract loop over an arbitrary PSF model,
@@ -703,15 +712,17 @@ object Photometry {
     * completion, so a pass costs the same few jobs at any `nIters`.
     *
     * The detection threshold `bkg_median + nSigma·bkg_std` comes from the
-    * per-image stats (`statsOpt`, else [[backgroundStats]] of `pixels`),
-    * estimated ONCE and held fixed across rounds — the reference builds
-    * its finder with a fixed threshold before the loop (core.py:439). The
-    * stats are one row per image, collected to the driver and shipped in
-    * the task closure; an image without a stats row emits nothing.
+    * per-image background, estimated ONCE and held fixed across rounds —
+    * the reference builds its finder with a fixed threshold before the loop
+    * (core.py:439): the caller's stats (`statsOpt`, one row per image,
+    * collected to the driver and shipped in the task closure; an image
+    * without a stats row emits nothing), else the task's own clip of its
+    * frame before the first round ([[Frame.background]]).
     *
     * Memory: a task streams its image into primitive buffers (16 B per
     * pixel), then fills a dense frame over the image's bounding box (8 B
-    * per cell plus a presence bit) and drops the buffers — at most
+    * per cell plus a presence bit) and drops the buffers; the clip holds a
+    * copy of the frame's values and their sorted copy beside it — at most
     * 24.2 B per bounding-box cell of unique pixels at peak. The box is
     * capped at [[MaxFrameCells]] (2²⁵ cells, ≈ 810 MB); a 4096² frame
     * (2²⁴ cells, ≈ 405 MB) fits, and a larger box fails the task with a
@@ -720,16 +731,14 @@ object Photometry {
       psf: PsfModel, boxR: Int, nIters: Int, nSigma: Double,
       statsOpt: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
-    val stats = statsMap(oneEpoch(statsOpt.getOrElse(backgroundStats(pixels))))
+    val stats = statsOpt.map(statsMap)
     pixels.select(col("img_id"), col("y"), col("x"), col("v"))
       .as[(Long, Long, Long, Double)]
       .groupByKey(_._1)
-      .flatMapGroups((img, rows) => stats.get((0L, img)) match {
-        case Some((median, std)) =>
-          photometryKernel(Frame.load(img, rows), median, median + nSigma * std,
-            psf, boxR, nIters)
-        case None => Iterator.empty
-      })
+      .flatMapGroups((img, rows) => withBackground(stats, img, rows) {
+        case (frame, (median, std)) => photometryKernel(frame, median,
+          median + nSigma * std, psf, boxR, nIters)
+      }.getOrElse(Iterator.empty))
       .toDF("img_id", "star_id", "group_id", "x_fit", "y_fit", "flux_fit",
         "iter_detected")
   }
@@ -755,6 +764,19 @@ object Photometry {
     }
     def y(i: Int): Long = y0 + i / width
     def x(i: Int): Long = x0 + i % width
+
+    /** The image's background `(median, std)`: [[SigmaClippedStats.clip]]
+      * (σ 2, five rounds) of the present cells' values in row-major order,
+      * the clip of [[backgroundStats]] up to the order of its Kahan sums.
+      * Holds a copy of the values and the clip's sorted copy, 16 B per
+      * present cell, beside the frame's 8 B per cell. */
+    def background(): (Double, Double) = {
+      val values = new Array[Double](present.cardinality)
+      var (i, k) = (present.nextSetBit(0), 0)
+      while (i >= 0) { values(k) = v(i); k += 1; i = present.nextSetBit(i + 1) }
+      val bkg = SigmaClippedStats.clip(values, 2.0, 5)
+      (bkg.median, bkg.std)
+    }
   }
 
   private[pipeline] object Frame {

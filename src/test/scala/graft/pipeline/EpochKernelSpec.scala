@@ -57,6 +57,29 @@ class EpochKernelSpec extends SparkSpec {
     }
   }
 
+  test("a frame's own clip equals backgroundStats: the median bit for bit") {
+    import KernelFields.{DitherField, PeakField}
+    Seq("crowded" -> CrowdedField.pixels(spark), "peak" -> PeakField.pixels(spark),
+        "dithered" -> DitherField.pixels(spark, DitherField.dithered))
+      .foreach { case (name, px) =>
+        val want = Photometry.backgroundStats(px)
+          .select("img_id", "bkg_median", "bkg_std").as[(Long, Double, Double)]
+          .collect().toSeq.sortBy(_._1)
+        val rows = px.select("img_id", "y", "x", "v").as[(Long, Long, Long, Double)]
+          .collect().groupBy(_._1)
+        val got = want.map { case (img, _, _) =>
+          val (median, std) = Photometry.Frame.load(img, rows(img).iterator)
+            .background()
+          (img, median, std)
+        }
+        assert(got.map(g => (g._1, g._2)) === want.map(w => (w._1, w._2)), name)
+        val worst = got.zip(want).map { case (g, w) =>
+          math.abs(g._3 - w._3) / w._3 }.max
+        info(s"$name: ${want.length} images, worst std relative difference $worst")
+        assert(worst <= 1e-12, s"$name: $worst")
+      }
+  }
+
   test("the stats census ships up to MaxCensusImages images and fails naming the count above") {
     def census(n: Int) = (0 until n).map(i => (i % 7L, i.toLong, 100.0, 100.0, 1.0))
       .toDF("epoch_id", "img_id", "bkg_mean", "bkg_median", "bkg_std")
