@@ -198,8 +198,7 @@ object StreamingQueries {
     * stays at 4 (2/4/8 within noise of each other, 16+ strictly worse).
     * A real deployment sizes state partitions by OBSERVED KEY VOLUME
     * (state rows per shard in the low millions), never by core count —
-    * this constant is the fixture-derived default, overridable per run
-    * with SPARK_GRAFT_STATE_PARTITIONS. */
+    * this constant is the fixture-derived default. */
   private val HarnessStatePartitions = 4
 
   /** State-partition sizing: streaming state shards by
@@ -208,8 +207,8 @@ object StreamingQueries {
     * driver harness). See [[HarnessStatePartitions]] for the sizing
     * rationale and A/B evidence.
     *
-    * Additionally scopes two checkpoint-I/O settings to the harness
-    * stream, both restored after the body:
+    * Additionally scopes three state and checkpoint settings to the
+    * harness stream, each restored after the body:
     *   - checkpoint-file checksums OFF: these checkpoints are
     *     JVM-lifetime temp dirs (TempDirs) — checksum-on-write protects a
     *     DURABLE checkpoint against storage corruption across restarts,
@@ -220,40 +219,33 @@ object StreamingQueries {
     *     java.nio instead of Hadoop's LocalFileSystem — no `.crc` sibling
     *     per file, no Shell-forked chmods, no FileSystem-cache walks
     *     (round-15's #1 residual: per-shard fixed cost).
-    * A deployment with durable checkpoints keeps both defaults. */
+    *   - state-store unload on commit: a loaded state provider otherwise
+    *     stays in the executor until a maintenance round (every 60 s by
+    *     default), which a short replay never reaches, so the live heap
+    *     kept the state maps of every finished replay (~4 MB per
+    *     `suite_stream` pass). Each batch of a replay reloads its shards
+    *     from the checkpoint instead.
+    * A deployment with durable checkpoints keeps all three defaults. */
   private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    // dev-only A/B knobs (the driver never sets them): override every
-    // harness query's state-partition count to isolate commit overhead
-    // (fewer shards) vs stateful-CPU parallelism (more shards), and
-    // SPARK_GRAFT_CHECKPOINT_FM=default to fall back to Hadoop's manager
-    val eff = sys.env.get("SPARK_GRAFT_STATE_PARTITIONS")
-      .map(_.toInt).getOrElse(n)
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val ck = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    val prevCk = s.conf.getOption(ck)
-    val fm = "spark.sql.streaming.checkpointFileManagerClass"
-    val prevFm = s.conf.getOption(fm)
-    val useNio = !sys.env.get("SPARK_GRAFT_CHECKPOINT_FM").contains("default")
-    s.conf.set("spark.sql.shuffle.partitions", eff.toString)
-    s.conf.set(ck, "false")
-    if (useNio)
-      s.conf.set(fm, graft.streaming.NioCheckpointFileManager.className)
-    try body finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      prevCk match {
-        case Some(v) => s.conf.set(ck, v)
-        case None => s.conf.unset(ck)
-      }
-      prevFm match {
-        case Some(v) => s.conf.set(fm, v)
-        case None => s.conf.unset(fm)
-      }
+    val scoped = Seq(
+      "spark.sql.shuffle.partitions" -> n.toString,
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        graft.streaming.NioCheckpointFileManager.className,
+      "spark.sql.streaming.stateStore.unloadOnCommit" -> "true")
+    val prev = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
+    scoped.foreach { case (k, v) => s.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
     }
   }
 
   /** Run a streaming DataFrame to completion (AvailableNow), upserting
     * every micro-batch into a fresh keyed parquet sink; returns the sink's
-    * final contents. */
+    * final contents. Each batch costs one job (see [[KeyedParquetSink]]),
+    * and the read-back starts none: the sink's schema is
+    * `perBatch(out)`'s, known from analysis alone. */
   private def runToSink(s: SparkSession, out: DataFrame, mode: OutputMode,
       keys: Seq[String],
       perBatch: DataFrame => DataFrame = identity): DataFrame = {
@@ -265,7 +257,7 @@ object StreamingQueries {
       }
       .start()
     q.awaitTermination()
-    KeyedParquetSink.read(s, sinkDir, keys)
+    KeyedParquetSink.read(s, sinkDir, perBatch(out).schema, keys)
   }
 
   /** q93: incremental tumbling-window counts ≡ batch q40. The stream runs

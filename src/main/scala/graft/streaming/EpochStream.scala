@@ -6,6 +6,7 @@ import graft.pipeline.EpochPipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.types.StructType
 
 /** The reference's per-epoch loop as a stream (SURVEY.md §2.9): epochs
   * land incrementally (new FITS sets in a directory ≙ new micro-batches),
@@ -20,6 +21,10 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 object EpochStream {
 
   final case class Measured(x: Double, y: Double, flux: Double)
+
+  /** The sink's rows: `measureBatch`'s tuple, named. */
+  private val CatalogSchema = StructType.fromDDL("epoch_id BIGINT, " +
+    "status STRING, stars ARRAY<STRUCT<x: DOUBLE, y: DOUBLE, flux: DOUBLE>>")
 
   /** Run one micro-batch's epochs through the batch pipeline, returning
     * (epoch_id, status, measured stars) — the per-epoch catalog is a
@@ -65,7 +70,7 @@ object EpochStream {
         val spark = batch.sparkSession
         import spark.implicits._
         val rows = measureBatch(batch, width, height, minStars)
-          .toDF("epoch_id", "status", "stars")
+          .toDF(CatalogSchema.fieldNames.toIndexedSeq: _*)
         KeyedParquetSink.upsertBatch(rows, bid, sinkDir)
       }
       .start()
@@ -74,5 +79,5 @@ object EpochStream {
     * (epoch_id, status, stars), latest delivery per epoch. */
   def readEpochCatalogs(spark: org.apache.spark.sql.SparkSession,
       sinkDir: String): DataFrame =
-    KeyedParquetSink.read(spark, sinkDir, Seq("epoch_id"))
+    KeyedParquetSink.read(spark, sinkDir, CatalogSchema, Seq("epoch_id"))
 }

@@ -2,14 +2,17 @@ package graft.streaming
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The log-structured upsert sink behind the streaming hash gates:
   * idempotent redelivery, latest-per-key reads, compaction. */
 class KeyedParquetSinkSpec extends SparkSpec {
   import spark.implicits._
 
+  private val kv = StructType.fromDDL("k STRING, v BIGINT")
+
   private def table(dir: String) =
-    KeyedParquetSink.read(spark, dir, Seq("k"))
+    KeyedParquetSink.read(spark, dir, kv, Seq("k"))
       .orderBy("k").as[(String, Long)].collect().toSeq
 
   test("latest batch wins per key; redelivery overwrites its own slot") {
@@ -24,10 +27,30 @@ class KeyedParquetSinkSpec extends SparkSpec {
     KeyedParquetSink.upsertBatch(
       Seq(("b", 2L), ("c", 2L)).toDF("k", "v"), 1L, dir)
     assert(table(dir) === Seq(("a", 1L), ("b", 2L), ("c", 2L)))
-    // empty batches write nothing (no schema-less directories)
+    // an empty batch adds no rows
     KeyedParquetSink.upsertBatch(
       Seq.empty[(String, Long)].toDF("k", "v"), 2L, dir)
     assert(table(dir) === Seq(("a", 1L), ("b", 2L), ("c", 2L)))
+    assert(spark.read.schema(kv).parquet(s"$dir/bid=2").count() === 0)
+  }
+
+  test("one job per upsert, empty or not; reads start no job") {
+    val dir = graft.TempDirs.create("sink-jobs")
+    val full = Seq(("a", 1L)).toDF("k", "v")
+    val empty = Seq.empty[(String, Long)].toDF("k", "v")
+    assert(jobsDuring(KeyedParquetSink.upsertBatch(full, 0L, dir))._2 === 1)
+    assert(jobsDuring(KeyedParquetSink.upsertBatch(empty, 1L, dir))._2 === 1)
+    assert(jobsDuring(KeyedParquetSink.read(spark, dir, kv, Seq("k")))._2 === 0)
+    assert(table(dir) === Seq(("a", 1L)))
+  }
+
+  test("a sink whose only batch was empty reads as an empty table") {
+    val dir = graft.TempDirs.create("sink-empty")
+    KeyedParquetSink.upsertBatch(
+      Seq.empty[(String, Long)].toDF("k", "v"), 0L, dir)
+    val t = KeyedParquetSink.read(spark, dir, kv, Seq("k"))
+    assert(t.schema === kv)
+    assert(t.count() === 0)
   }
 
   test("compact drops dominated rows; winners keep their original bid") {
@@ -36,10 +59,13 @@ class KeyedParquetSinkSpec extends SparkSpec {
       KeyedParquetSink.upsertBatch(
         Seq((s"k${bid % 3}", bid)).toDF("k", "v"), bid, dir)
     }
+    KeyedParquetSink.upsertBatch(
+      Seq.empty[(String, Long)].toDF("k", "v"), 6L, dir)
     val before = table(dir)
     assert(before === Seq(("k0", 3L), ("k1", 4L), ("k2", 5L)))
-    KeyedParquetSink.compact(spark, dir, Seq("k"))
-    // only the winning generations survive, under their ORIGINAL ids
+    KeyedParquetSink.compact(spark, dir, kv, Seq("k"))
+    // only the winning generations survive, under their ORIGINAL ids; the
+    // empty batch's schema-only bid=6 is dropped
     val gens = new java.io.File(dir).listFiles().filter(_.isDirectory)
       .map(_.getName).filter(_.startsWith("bid=")).toSeq.sorted
     assert(gens === Seq("bid=3", "bid=4", "bid=5"))
@@ -49,7 +75,7 @@ class KeyedParquetSinkSpec extends SparkSpec {
     KeyedParquetSink.upsertBatch(Seq(("k0", 0L)).toDF("k", "v"), 0L, dir)
     assert(table(dir) === before)
     // genuinely NEW generations still win
-    KeyedParquetSink.upsertBatch(Seq(("k0", 9L)).toDF("k", "v"), 6L, dir)
+    KeyedParquetSink.upsertBatch(Seq(("k0", 9L)).toDF("k", "v"), 7L, dir)
     assert(table(dir) === Seq(("k0", 9L), ("k1", 4L), ("k2", 5L)))
   }
 
@@ -68,7 +94,7 @@ class KeyedParquetSinkSpec extends SparkSpec {
     assert(live.renameTo(old) && !live.exists())
     // a rerun must reinstall the log before any destructive step, then
     // complete the compaction normally
-    KeyedParquetSink.compact(spark, dir, Seq("k"))
+    KeyedParquetSink.compact(spark, dir, kv, Seq("k"))
     assert(!old.exists())
     assert(table(dir) === before)
     val gens = live.listFiles().filter(_.isDirectory)

@@ -23,6 +23,35 @@ class StreamingQueriesSpec extends SparkSpec {
     assert(inc.exceptAll(batch).isEmpty && batch.exceptAll(inc).isEmpty)
   }
 
+  test("job fence: one counted q124 run is one job per micro-batch plus 3") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val q124 = SparkEntry.queries("q124_streaming_dedup")
+    q124(spark, sf) // stages the replay files once per session
+    val batches = new java.util.concurrent.atomic.AtomicInteger(0)
+    val ended = new java.util.concurrent.CountDownLatch(1)
+    val l = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        batches.incrementAndGet(): Unit
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        ended.countDown()
+    }
+    spark.streams.addListener(l)
+    val jobs = try {
+      val n = jobsDuring(q124(spark, sf).count())._2
+      // progress events precede the termination event on their bus
+      assert(ended.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      n
+    } finally spark.streams.removeListener(l)
+    // 8 batches, 4 of them empty (the replayed copies dedup to nothing);
+    // the 3 are the count's. History: 16 = 2 per non-empty batch (an
+    // isEmpty probe that ran the state stage, then the write) + 1 per
+    // empty batch (the probe) + 1 schema-inference job at read + 3
+    assert(batches.get > 0)
+    assert(jobs === batches.get + 3, s"$jobs jobs for ${batches.get} batches")
+  }
+
   test("replay determinism: a second q93 run produces the identical table") {
     // the hash gate depends on re-runs being bit-stable even though each
     // run stages fresh files and a fresh micro-batch sequence
